@@ -57,6 +57,44 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Hand driver-side rows to Spark as a JVM-local relation.
+
+    ``rows`` is an iterable of tuples in ``schema`` order; ``schema`` is
+    a ``StructType`` or a DDL string.  The rows travel as one Arrow
+    table, which Spark plans as a ``LocalRelation``: the relation has
+    real size statistics (so a join can broadcast or fold it) and
+    reading it starts no Python worker.  ``createDataFrame`` on a
+    Python list instead plans a Python-RDD ``LogicalRDD`` whose every
+    scan unpickles the rows in a Python worker.
+
+    Every row goes through the list path's own type verifier first, so
+    a value that does not fit the schema raises here exactly as it
+    would there (Arrow alone would, for one, truncate 1.5 into a long
+    column)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        StructType,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    verify = _make_type_verifier(schema)
+    rows = list(rows)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def lift_parallelism(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition on ``key`` — but ONLY when scan splits are
     scarce (a local small-file input), because the partial work of a

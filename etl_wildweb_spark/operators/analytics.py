@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import finite
-from ..io import table
+from ..io import local_frame, table
 from ..registry import query
 
 #: Ordered funnel stages (each must strictly follow the previous).
@@ -1622,7 +1622,8 @@ def b165_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for c in channels
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "channel STRING, n_converting_paths BIGINT, "
         "removal_effect_ppm BIGINT, attribution_share_ppm BIGINT",

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import lift_parallelism, table
+from ..io import lift_parallelism, local_frame, table
 from ..registry import query
 
 # MinHash-LSH parameters: 128 permutations as 32 bands × 4 rows.
@@ -422,12 +422,11 @@ def b29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE shingle pass feeds both the posting list (df counts, set
     # sizes, prefix index) and the exact-verify sets below
     sh = with_shingles(d).select("doc_id", "s").cache()
-    # ROUND-14 (guide §2.4 remove shuffles): set_size = size(s) — `s`
-    # is already array_distinct, so the old groupBy(doc_id).count()
-    # over the exploded grams recomputed a value the array carries for
-    # free.  Riding it through the explode removes one corpus-scale
-    # shuffle AND the doc_id join that re-attached it (8 bytes/row
-    # through the gh exchange instead).
+    # set_size = size(s): `s` is already array_distinct, so a
+    # groupBy(doc_id).count() over the exploded grams would recompute a
+    # value the array carries for free.  Riding it through the explode
+    # saves one corpus-scale shuffle AND the doc_id join that would
+    # re-attach it (8 bytes/row through the gh exchange instead).
     g = (
         sh.select(
             "doc_id", F.size("s").alias("set_size"), F.explode("s").alias("gram")
@@ -652,15 +651,14 @@ reach(node, lab) AS (
 
 #: Edge-count threshold at or below which connected components resolve as
 #: ONE driver-side union-find over the collected edge list instead of the
-#: iterative distributed loop (round 14, guide §1.2 "fix the distributed
-#: algorithm" / §5 driver-side job count): every loop round on a
-#: sub-million-edge graph is pure per-round scheduler fixed cost (measured
-#: ~0.8-1.2 s/round on width-1 graphs at sf0.1), while 10⁶ (u, v) long
-#: pairs are ~30 MB collected and union-find resolves them in well under a
-#: second on the driver.  Mirrors the BPE driver/distributed twin
-#: (corpus.py): the distributed engines stay load-bearing above the
-#: threshold, and driver ≡ distributed equivalence is pinned on every
-#: adversarial graph shape in tests/test_components.py.
+#: iterative distributed loop: every loop round on a sub-million-edge graph
+#: is pure per-round scheduler fixed cost (measured ~0.8-1.2 s/round on
+#: width-1 graphs at sf0.1), while 10⁶ (u, v) long pairs are ~30 MB
+#: collected and union-find resolves them in well under a second on the
+#: driver.  Mirrors the BPE driver/distributed twin (corpus.py): the
+#: distributed engines stay load-bearing above the threshold, and driver ≡
+#: distributed equivalence is pinned on every adversarial graph shape in
+#: tests/test_components.py.
 DRIVER_CC_MAX_EDGES = 1_000_000
 
 
@@ -668,13 +666,18 @@ def _driver_cc(spark: SparkSession, edge_rows, id_type) -> DataFrame:
     """Union-find over a collected edge list — the sub-threshold twin of
     BOTH distributed CC engines, honoring the same contract: one row per
     node that appears in any edge (self-loops carry membership), with
-    cluster_id = the component's minimum node id.
+    cluster_id = the component's minimum node id.  Endpoints must be
+    non-null.
 
     Union by MIN root makes the invariant structural: whenever two trees
     merge, the smaller root wins, and the component's true minimum is a
     root from the moment it appears — so at the end every root IS its
     component min and no relabel pass is needed.  Iterative path-halving
-    find keeps the forest flat (no recursion limit at 10⁶ edges)."""
+    find keeps the forest flat (no recursion limit at 10⁶ edges).
+
+    The cluster table goes back to Spark as a JVM-local relation
+    (io.local_frame), so the joins that consume it can broadcast it and
+    never start a Python worker to read it."""
     parent: dict = {}
 
     def find(x):
@@ -704,28 +707,38 @@ def _driver_cc(spark: SparkSession, edge_rows, id_type) -> DataFrame:
             StructField("cluster_id", id_type, True),
         ]
     )
-    return spark.createDataFrame(
-        [(n, find(n)) for n in parent], schema
-    )
+    return local_frame(spark, [(n, find(n)) for n in parent], schema)
 
 
 def _driver_cc_or_none(edges_uv: DataFrame) -> DataFrame | None:
-    """Shared path decision for both CC engines: collect up to
-    DRIVER_CC_MAX_EDGES + 1 rows of the (already checkpointed) edge
-    list — ONE job that both decides driver-vs-distributed and delivers
-    the edges (the BPE `limit(MAX+1).collect()` pattern) — and resolve
-    on the driver when the graph fits.  Returns None above the
-    threshold (the collected prefix is discarded: bounded ~30 MB waste
-    paid only on graphs big enough that the distributed loop dominates
-    it by orders of magnitude)."""
+    """Shared path decision for both CC engines: resolve the (already
+    checkpointed) edge list on the driver when it fits, else return None
+    for the distributed loop.
+
+    Two jobs at most: one count over the checkpointed rows, then — only
+    when the count is within DRIVER_CC_MAX_EDGES — one plain collect, so
+    a graph above the threshold pays a count, not a discarded transfer.
+    The count runs on the physical RDD: a DataFrame count under AQE is
+    two jobs (partial-aggregate stage, then the final one).
+
+    The driver path takes integral and binary-collated string ids only,
+    whose Python order is Spark's order (UTF-8 byte order is code point
+    order; a double NaN would never find its union-find root), and
+    edges with no null endpoint: Python cannot order None, and the
+    distributed engines give null nodes their own semantics."""
+    from pyspark.sql.types import IntegralType, StringType
+
     ut = edges_uv.schema["u"].dataType
-    if ut != edges_uv.schema["v"].dataType:
-        return None  # mixed-type edge list: let the engine's own
-        # least()/min() coercion rules decide (never hit in practice)
-    head = edges_uv.limit(DRIVER_CC_MAX_EDGES + 1).collect()
-    if len(head) > DRIVER_CC_MAX_EDGES:
+    if ut != edges_uv.schema["v"].dataType or not (
+        isinstance(ut, IntegralType) or ut == StringType()
+    ):
         return None
-    return _driver_cc(edges_uv.sparkSession, head, ut)
+    if edges_uv._jdf.queryExecution().toRdd().count() > DRIVER_CC_MAX_EDGES:
+        return None
+    rows = edges_uv.collect()
+    if any(u is None or v is None for u, v in rows):
+        return None
+    return _driver_cc(edges_uv.sparkSession, rows, ut)
 
 
 def connected_components(
@@ -757,8 +770,7 @@ def connected_components(
     raw = edges.selectExpr(f"{src} AS u", f"{dst} AS v").localCheckpoint(
         eager=True
     )
-    # ROUND-14 (guide §1.2/§5): sub-threshold graphs skip the
-    # distributed loop entirely — one cheap collect over the
+    # Sub-threshold graphs skip the distributed loop entirely: the
     # checkpointed edge list feeds a driver union-find (the heavy
     # upstream already ran exactly once, in the checkpoint job).
     done = _driver_cc_or_none(raw)
@@ -867,8 +879,8 @@ def connected_components_bigstar(
     raw = edges.selectExpr(f"{src} AS u", f"{dst} AS v").localCheckpoint(
         eager=True
     )
-    # ROUND-14 (guide §1.2/§5): sub-threshold graphs resolve on the
-    # driver — same decision and rationale as connected_components.
+    # Sub-threshold graphs resolve on the driver — same decision and
+    # rationale as connected_components.
     done = _driver_cc_or_none(raw)
     if done is not None:
         return done
@@ -887,10 +899,9 @@ def connected_components_bigstar(
         ).collect()[0]
         return tuple(row)
 
-    # ROUND-13 OPTIMIZATION (guide §5, driver-side job count): the
-    # initial signature's count() IS the edge count — one aggregate
-    # job supplies both the convergence baseline and the loop width
-    # (previously a separate count job).
+    # The initial signature's count() IS the edge count — one
+    # aggregate job supplies both the convergence baseline and the
+    # loop width.
     sig = _sig(e)
     n_edges = sig[0]
     default_width = spark.sparkContext.defaultParallelism
@@ -899,9 +910,7 @@ def connected_components_bigstar(
     # frame over the checkpointed `raw`, so it rides the final job
     # instead of paying its own eager-checkpoint job up front (the
     # eager rule is for frames REUSED across loop rounds; this one
-    # isn't).  ROUND-13 OPTIMIZATION, measured with the sig fusion and
-    # the distinct reorder below: b173-shaped pipeline 6.0→5.3 s med
-    # interleaved A/B, identical rows.
+    # isn't).
     nodes = (
         raw.select(F.col("u").alias("node"))
         .union(raw.select(F.col("v").alias("node")))
@@ -932,12 +941,12 @@ def connected_components_bigstar(
         # Lazy checkpoint: the signature aggregate reads every partition
         # (full agg, no short-circuit), materializing the checkpoint in
         # the same job it uses — one job per round, not two.
-        # distinct AFTER the width repartition (ROUND-13 OPTIMIZATION,
-        # guide §2.4): hash-partitioning by u already clusters every
-        # (u, v) duplicate into one partition, so the dedup aggregate
-        # reuses that exchange instead of adding its own (u, v)-keyed
-        # shuffle — one less Exchange per round, same rows, and the
-        # checkpoint still freezes hash(u)-by-width partitioning.
+        # distinct AFTER the width repartition: hash-partitioning by u
+        # already clusters every (u, v) duplicate into one partition,
+        # so the dedup aggregate reuses that exchange instead of adding
+        # its own (u, v)-keyed shuffle — one less Exchange per round,
+        # same rows, and the checkpoint still freezes hash(u)-by-width
+        # partitioning.
         e = small.repartition(width, "u").distinct().localCheckpoint(eager=False)
         nsig = _sig(e)
         if nsig == sig:
@@ -1241,10 +1250,9 @@ def b128_slice_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is MinHash per slice (b29's signatures aggregated per slice), a
     constant-size sketch per slice — documented path, same pipeline."""
     d = table(spark, sf_dir, "documents")
-    # ROUND-13 OPTIMIZATION (guide §2.4): three consumers (sizes, both
-    # self-join sides) each re-ran the corpus shingle explode +
-    # distinct; the distinct (lang, gh) frame is slice-vocabulary-sized
-    # — materialize it once and the corpus is exploded exactly ONCE.
+    # Three consumers (sizes, both self-join sides) read the distinct
+    # (lang, gh) frame; it is slice-vocabulary-sized, so it is
+    # materialized once and the corpus is exploded exactly ONCE.
     sh = (
         with_shingles(lift_parallelism(d, "doc_id"))
         .select("lang", F.explode("s").alias("g"))

@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.exact import davg, sql_davg
-from ..io import lift_parallelism, table
+from ..io import lift_parallelism, local_frame, table
 from ..registry import query
 
 #: Stopword set for ratio features (tiny, deterministic, shared with the
@@ -1287,8 +1287,8 @@ def b156_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned).  Tie-break: (freq DESC, left ASC, right ASC) both
     paths."""
     merges, _ = _bpe_train_artifacts(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "merge_rank INT, left STRING, right STRING, pair_freq BIGINT"
+    return local_frame(
+        spark, merges, "merge_rank INT, left STRING, right STRING, pair_freq BIGINT"
     )
 
 
@@ -1437,7 +1437,7 @@ def b160_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabularies; either way the corpus side is one narrow join +
     # one map-side-combined per-doc aggregate.
     vocab_src = (
-        spark.createDataFrame([(w,) for w in vocab], "w string")
+        local_frame(spark, [(w,) for w in vocab], "w string")
         if vocab is not None
         else words.select("w").distinct()
     )
@@ -1529,7 +1529,7 @@ def b176_bpe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") != "")
     )
     vocab_src = (
-        spark.createDataFrame([(w,) for w in vocab_list], "w string")
+        local_frame(spark, [(w,) for w in vocab_list], "w string")
         if vocab_list is not None
         else words.select("w").distinct()
     )

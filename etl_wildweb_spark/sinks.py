@@ -416,6 +416,7 @@ def b94_datasource_writer(spark, sf_dir: str) -> DataFrame:
         normalize_dates,
         to_features,
     )
+    from .io import local_frame
 
     incidents = _synth_incidents(spark, sf_dir)
     in_window = filter_time_range(
@@ -426,7 +427,8 @@ def b94_datasource_writer(spark, sf_dir: str) -> DataFrame:
     manifest = write_submit(
         features, tempfile.mkdtemp(prefix="submitsink_"), chunk_size=200
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 manifest["n_rows"],
@@ -453,6 +455,7 @@ def b135_stream_sink(spark, sf_dir: str) -> DataFrame:
     double-counts."""
     import tempfile
 
+    from .io import local_frame
     from .streaming.windows import events_stream
 
     import shutil
@@ -471,7 +474,8 @@ def b135_stream_sink(spark, sf_dir: str) -> DataFrame:
         # invocations — same rmtree discipline as b71/b127/b136
         shutil.rmtree(mdir, ignore_errors=True)
         shutil.rmtree(ckdir, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m["batch_id"],

@@ -22,6 +22,8 @@ handled here so callers can't hold it wrong.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -331,7 +333,7 @@ def b99_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality probe."""
     import tempfile as _tempfile
 
-    from ..io import table
+    from ..io import local_frame, table
 
     import pyarrow.parquet as _pq
 
@@ -391,7 +393,8 @@ def b99_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     rows = stats(out_plain, "hash") + stats(out_z, "zorder")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "layout string, column string, n_row_groups int, "
         "avg_range_frac double, est_skip_frac double",
@@ -413,7 +416,7 @@ def b100_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from ..io import compact_parquet, table
+    from ..io import compact_parquet, local_frame, table
 
     src = _tempfile.mkdtemp(prefix="compact_src_")
     dst = _tempfile.mkdtemp(prefix="compact_dst_")
@@ -431,7 +434,8 @@ def b100_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = compact_parquet(spark, src, dst, target_mb=512)
         n_rows = out.count()
         n_after, bytes_after = layout(dst)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n_before, n_after, bytes_before, bytes_after, n_rows)],
             "n_files_before int, n_files_after int, "
             "bytes_before bigint, bytes_after bigint, n_rows bigint",
@@ -650,8 +654,11 @@ def b127_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shutil.rmtree(out, ignore_errors=True)
 
 
-#: b136 dim: event-type priority map (literal table, filtered at plan
-#: time — the filtered-dim shape Dynamic Partition Pruning requires).
+#: b136 dim: event-type priority map, stored as a parquet dimension
+#: table and filtered at plan time — the filtered-dim shape Dynamic
+#: Partition Pruning requires.  (Read straight from a driver-local
+#: relation, the filter would fold into the relation's rows and leave
+#: no dim filter for DPP to key on.)
 _DPP_DIM = [("view", 1), ("purchase", 2), ("click", 3)]
 
 
@@ -702,16 +709,20 @@ def dpp_events_scan(
     dynamicpruningexpression (separated from b136 so the plan test can
     inspect the scan without the checkpoint/cleanup wrapper)."""
     from ..functions.exact import finite
-    from ..io import table
+    from ..io import local_frame, table
 
     e = (
         table(spark, sf_dir, "events")
         .filter(finite("value"))  # quarantine before the micro cast
         .select("event_type", "value", "user_id")
     )
-    e.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    fact = spark.read.parquet(out)
-    dim = spark.createDataFrame(_DPP_DIM, "event_type string, pri int")
+    fact_path, dim_path = os.path.join(out, "fact"), os.path.join(out, "dim")
+    e.write.mode("overwrite").partitionBy("event_type").parquet(fact_path)
+    local_frame(spark, _DPP_DIM, "event_type string, pri int").write.mode(
+        "overwrite"
+    ).parquet(dim_path)
+    fact = spark.read.parquet(fact_path)
+    dim = spark.read.parquet(dim_path)
     return (
         fact.join(dim.filter(F.col("pri") <= 2), "event_type")
         .groupBy("event_type")

@@ -30,6 +30,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..io import local_frame
 from ..registry import query
 
 
@@ -144,7 +145,8 @@ def b138_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # manifests are already local dicts; the checkpoint must not
         # accumulate across invocations — b135's rmtree discipline
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m["batch_id"],
@@ -273,6 +275,4 @@ def b148_stream_error_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [("features", "delivered", out["features"])] + [
         (stage, reason, n) for (stage, reason), n in sorted(out["errors"].items())
     ]
-    return spark.createDataFrame(
-        rows, "channel string, detail string, n bigint"
-    )
+    return local_frame(spark, rows, "channel string, detail string, n bigint")

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import davg, sql_davg
-from ..io import table
+from ..io import local_frame, table
 from ..registry import query
 
 
@@ -477,7 +477,8 @@ def b179_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(sum(x.get("numRowsTotal", 0) for x in so)),
             )
         )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows,
         "batch_id BIGINT, input_rows BIGINT, obs_min_ts STRING, "
         "obs_max_ts STRING, watermark_raw STRING, "

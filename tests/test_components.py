@@ -2,10 +2,10 @@
 the oracle suite only exercises the near-clique dup blobs, so chains,
 cycles, and label-ordering traps get direct coverage here.  Both CC
 engines (label propagation + large-star/small-star) run every case, on
-BOTH execution paths: the round-14 sub-threshold driver union-find
-(the default at these sizes) and the distributed loops (forced by
-pinning the threshold to 0), plus explicit driver ≡ distributed
-equivalence per engine."""
+BOTH execution paths: the sub-threshold driver union-find (the default
+at these sizes) and the distributed loops (forced by pinning the
+threshold to 0), plus explicit driver ≡ distributed equivalence per
+engine, including null endpoints and non-ASCII string ids."""
 
 from __future__ import annotations
 
@@ -78,7 +78,7 @@ def test_bigstar_matches_label_propagation(spark, case):
     ids=["labelprop", "bigstar"],
 )
 def test_driver_path_matches_distributed(spark, monkeypatch, case, impl):
-    """Round-14 twin pin: the sub-threshold driver union-find and the
+    """Twin pin: the sub-threshold driver union-find and the
     distributed loop must emit identical (node, cluster_id) rows for
     both engines on every adversarial shape.  Threshold 0 forces the
     distributed path (any non-empty edge list exceeds it)."""
@@ -102,3 +102,96 @@ def test_driver_path_schema_and_empty(spark):
             "bigint",
         ]
         assert out.count() == 0
+
+
+_TYPED_CASES = {
+    # a null endpoint cannot be ordered in Python: the driver path must
+    # hand the graph to the distributed loop, not raise
+    "null_endpoint": (
+        "id_a long, id_b long",
+        [(1, 2), (2, None), (None, 3), (4, 5)],
+    ),
+    # Spark orders strings by UTF-8 bytes; the driver's Python order
+    # must agree on multi-byte ids (é < ž < 日 < 😀 by code point)
+    "non_ascii_ids": (
+        "id_a string, id_b string",
+        [("日本", "é"), ("é", "ž"), ("😀", "日本"), ("zz", "Ω"), ("a", "b")],
+    ),
+    # Spark orders NaN above every double and groups NaN with NaN;
+    # Python does neither, so double ids take the distributed path
+    "nan_ids": (
+        "id_a double, id_b double",
+        [(1.0, float("nan")), (float("nan"), 2.0), (3.0, 4.0)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_TYPED_CASES))
+@pytest.mark.parametrize(
+    "impl", [connected_components, connected_components_bigstar],
+    ids=["labelprop", "bigstar"],
+)
+def test_driver_path_matches_distributed_typed(spark, monkeypatch, case, impl):
+    ddl, pairs = _TYPED_CASES[case]
+
+    def rows():
+        # repr: NaN keys never compare equal inside a dict
+        out = impl(spark.createDataFrame(pairs, ddl)).collect()
+        return sorted((repr(r.node), repr(r.cluster_id)) for r in out)
+
+    driver = rows()
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
+    assert driver == rows()
+
+
+def _plan_node(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def test_driver_path_is_local_relation(spark):
+    """The driver union-find hands its cluster table back as a JVM-local
+    relation, not a Python-RDD scan, and so does io.local_frame."""
+    from etl_wildweb_spark.io import local_frame
+
+    df = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
+    for impl in (connected_components, connected_components_bigstar):
+        assert _plan_node(impl(df)) == "LocalRelation"
+    assert _plan_node(local_frame(spark, [(1, "a")], "k long, s string")) == (
+        "LocalRelation"
+    )
+
+
+def test_local_frame_keeps_type_checking(spark):
+    """A value that does not fit the schema raises, as on the list
+    path (Arrow alone would truncate 1.5 into a long column)."""
+    from etl_wildweb_spark.io import local_frame
+
+    got = local_frame(spark, [(1, "é"), (None, None)], "k long, s string")
+    assert [tuple(r) for r in got.collect()] == [(1, "é"), (None, None)]
+    assert local_frame(spark, [], "k long, s string").count() == 0
+    for bad in ([(1.5, "a")], [("x", "a")], [(2**63, "a")]):
+        with pytest.raises((TypeError, ValueError)):
+            local_frame(spark, bad, "k long, s string")
+    with pytest.raises(ValueError):
+        local_frame(spark, [(None,)], "k long not null")
+
+
+def test_driver_path_job_count(spark):
+    """After the edge checkpoint the driver path starts at most two
+    jobs: one count, one collect.  Eight partitions: an incremental
+    take over them (limit + collect) would need three."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(_CASES["bridged_stars"], "id_a long, id_b long")
+    raw = (
+        edges.selectExpr("id_a AS u", "id_b AS v")
+        .repartition(8)
+        .localCheckpoint(eager=True)
+    )
+    group = "test_driver_path_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        out = dedup._driver_cc_or_none(raw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out is not None
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 2

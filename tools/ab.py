@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Interleaved A/B probe (round 14, guide §1): alternate tools/measure.py
-runs between two checkouts (OLD = the r13-HEAD worktree, NEW = this repo)
-so host drift cannot masquerade as a code delta.  Each leg is a fresh
-process/session timing the named queries via the noop sink (warmup +
-median-of-3, bench methodology).
+"""Interleaved A/B probe: alternate tools/measure.py runs between two
+checkouts (OLD, NEW) so host drift cannot masquerade as a code delta.
+Each leg is a fresh process/session timing the named queries via the
+noop sink (warmup + median-of-3, bench methodology).  A leg whose child
+exits non-zero stops the probe with the child's stderr.
 
-  python tools/ab.py /root/wt_r13 /root/repo 3 q1 q2 ...
+  python tools/ab.py OLD_CHECKOUT NEW_CHECKOUT 3 q1 q2 ...
 """
 
 from __future__ import annotations
@@ -23,6 +23,11 @@ def run_leg(root: str, names: list[str]) -> dict[str, tuple[float, float]]:
         [sys.executable, os.path.join(root, "tools", "measure.py"), "time", *names],
         cwd=root, env=env, capture_output=True, text=True, timeout=1800,
     )
+    if p.returncode != 0:
+        sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
+        raise SystemExit(
+            f"leg {root} failed: measure.py exited with code {p.returncode}"
+        )
     out: dict[str, tuple[float, float]] = {}
     for m in re.finditer(r"^(\S+): med=([\d.]+) min=([\d.]+)", p.stdout, re.M):
         out[m.group(1)] = (float(m.group(2)), float(m.group(3)))
