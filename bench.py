@@ -2,10 +2,11 @@
 """Benchmark loop — headline queries at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE compact JSON line: {"metric", "value", "unit", "sf",
-"n_queries"}.  Per-query medians/mins live in bench_detail.json — the
-driver's tail capture is ~2000 chars, and a stdout line carrying the
-full per-query map overflowed it twice (VERDICT r3 #4, r5 #1: 78
-queries → "parsed": null), so the map stays OUT of stdout permanently;
+"n_queries"}.  Per-query medians/mins live in bench_detail_c{N}.json,
+one file per core count N = $SPARK_GRAFT_CPUS, so a run at one width
+never overwrites another's record.  The driver's tail capture is ~2000
+chars, and a stdout line carrying the full per-query map overflowed it
+(78 queries → "parsed": null), so the map stays OUT of stdout;
 tests/test_bench_contract.py pins the line under 1500 chars.  Each
 query executes fully via the noop sink (no driver-side collect — the
 100 TB-honest way to measure).
@@ -305,7 +306,7 @@ def main() -> None:
     # The REPORTED time is the fresh rerun median, not min(med, med2):
     # min-of-medians is a data-dependent downward reselection that can
     # mask a high-variance real slowdown (ADVICE r4).  Both medians are
-    # recorded in bench_detail.json; selection is the consumer's call.
+    # recorded in bench_detail_c{N}.json; selection is the consumer's call.
     reruns: dict[str, dict] = {}
     for name, med in list(times.items()):
         if med > 1.5 * mins[name] and med - mins[name] > 0.2:
@@ -347,9 +348,11 @@ def main() -> None:
             "slow_ratio": calib_ratio,
         },
     }
+    # one record per core count: the session runs local[$SPARK_GRAFT_CPUS]
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "bench_detail.json"),
+                     f"bench_detail_c{cpus}.json"),
         "w",
     ) as f:
         json.dump(detail, f, indent=1)

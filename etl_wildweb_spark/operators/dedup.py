@@ -345,9 +345,11 @@ def b29_minhash_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     because banding recall at the threshold is 1-5e-8 (see N_PERM note).
     The Spark side never materializes the quadratic pair space."""
     d = table(spark, sf_dir, "documents")
-    # signatures feed both sides of the banding self-join — materialize
-    # once (128 longs/doc; at cluster scale this is a persist to
-    # MEMORY_AND_DISK or a checkpoint table, same plan shape)
+    # signatures feed both sides of the banding self-join — a session
+    # cache, not a checkpoint: the plan tests pin the MapInPandas
+    # signature stage under this frame, and a checkpoint would cut it
+    # out of the plan.  The entries stay in the CacheManager until the
+    # caller clears them (an allowlisted site, tests/test_cache_sites.py).
     sh = (
         with_shingles(lift_parallelism(d, "doc_id"))
         .select("doc_id", "s")
@@ -374,20 +376,101 @@ if _T_NUM / _T_DEN != NGRAM_THRESHOLD:  # survives python -O, unlike assert
     )
 
 
-@query(
-    "b29_ngram_jaccard",
-    oracle=f"""
-    WITH g AS (SELECT doc_id, {SQL_SHINGLES} AS s FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           len(list_intersect(a.s, b.s))::DOUBLE
-               / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-    FROM g a JOIN g b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s))::DOUBLE
-              / len(list_distinct(list_concat(a.s, b.s))) >= {NGRAM_THRESHOLD}
-    """,
-)
-def b29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B29 variant: EXACT token-3-gram Jaccard join via prefix filtering
+def _shingle_stage(docs: DataFrame) -> DataFrame:
+    """The (doc_id, s) shingle sets of ``docs``, built ONCE per call.
+
+    The NGram pass is the expensive stage of the prefix-filter joins,
+    and each reads it several times: the gram index below and both
+    sides of the exact verify.  The calling builder owns the result,
+    materialized here as an EAGER local checkpoint:
+
+    * not ``.cache()``: a builder returns a lazy frame, so there is no
+      point after the action to unpersist at, and every call would
+      leave one more entry in the session's CacheManager.  A local
+      checkpoint registers nothing there; its blocks are freed with
+      the frame, like the CC edge checkpoints.
+    * eager: the stage is complete when the builder returns.  A lazy
+      one is materialized by whichever action the caller runs first;
+      after a short-circuiting one (``limit``, ``show``) only part of
+      it is built, and Spark runs an extra job for the partitions it
+      skipped (see the loop note in :func:`connected_components`).
+
+    A local checkpoint is not fault-tolerant: a lost executor takes its
+    blocks with it and the query fails instead of recomputing them.
+    That is the same trade the CC edge checkpoints make; at cluster
+    scale this stage is a reliable checkpoint or a written table."""
+    return (
+        with_shingles(lift_parallelism(docs, "doc_id"))
+        .select("doc_id", "s")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _gram_hashes(sh: DataFrame) -> DataFrame:
+    """(doc_id, set_size, gh): one posting per distinct gram of the
+    shingle stage ``sh``, keyed by xxhash64(gram).  All index stages run
+    on these longs, never gram strings: fixed-width shuffle keys and
+    cheap equality.  A 64-bit collision can only ADD a candidate pair,
+    and the exact string-set verify filters it, so the hash never
+    threatens exactness (the same superset-then-verify argument as the
+    prefix filter itself).
+
+    Derived lazily from the checkpoint: an explode plus xxhash64 costs
+    less to recompute than to materialize (a second checkpoint here
+    measured slower per corpus_dedup pass)."""
+    # set_size = size(s): `s` is already array_distinct, so a
+    # groupBy(doc_id).count() over the exploded grams would recompute a
+    # value the array carries for free.  Riding it through the explode
+    # saves one corpus-scale shuffle AND the doc_id join that would
+    # re-attach it (8 bytes/row through the gh exchange instead).
+    return sh.select(
+        "doc_id", F.size("s").alias("set_size"), F.explode("s").alias("gram")
+    ).select("doc_id", "set_size", F.xxhash64("gram").alias("gh"))
+
+
+def _prefix_index(g: DataFrame, num: int, den: int) -> DataFrame:
+    """(doc_id, gh) for each doc's prefix in the postings ``g``: its
+    |x| − ⌈t·|x|⌉ + 1 rarest grams at threshold t = num/den, frequency
+    ties broken by gram hash so the prefix is deterministic."""
+    from pyspark.sql import Window as W
+
+    freq = g.groupBy("gh").agg(F.count(F.lit(1)).alias("df"))
+    rk = F.row_number().over(W.partitionBy("doc_id").orderBy("df", "gh"))
+    return (
+        g.join(freq, "gh")
+        .withColumn("rk", rk)
+        # prefix length |x| − ⌈t·|x|⌉ + 1 in EXACT integer arithmetic.
+        # The float form floor((1−t)·|x|)+1 under-counts by one whenever
+        # t·|x| is integral, because 1−0.8 is 0.19999…96 in binary: at
+        # |x|=10 it yielded prefix 2 instead of 3 and silently dropped a
+        # Jaccard-exactly-0.8 pair at sf0.1 (caught by the minhash↔exact
+        # cross-check; sf0.01 has no boundary-Jaccard pair, so the
+        # oracle differential alone never saw it).
+        .filter(
+            F.col("rk")
+            <= F.col("set_size")
+            # ⌈t·|x|⌉ = (NUM·|x| + DEN−1) div DEN — integer `div`, not
+            # float `/`+floor: int/int in Spark is double division, so
+            # exactness would silently hinge on the numerator staying
+            # below 2^52; `div` matches the Python integer formula the
+            # unit test pins bit-for-bit.
+            - F.expr(f"cast(({num} * set_size + {den - 1}) div {den} as int)")
+            + 1
+        )
+        .select("doc_id", "gh")
+    )
+
+
+def _with_sets(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """Attach both sides' shingle sets (sa, sb) to (id_a, id_b) pairs
+    for the exact verify — both joins read the one shingle stage."""
+    return pairs.join(
+        sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa")), "id_a"
+    ).join(sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")), "id_b")
+
+
+def ngram_jaccard_edges(docs: DataFrame) -> DataFrame:
+    """EXACT token-3-gram Jaccard join of ``docs`` via prefix filtering
     (AllPairs/PPJoin family) — the exact twin of b29_minhash_near_dedup
     over the identical shingle space, with no false-negative
     probability and still never building the n² pair space.
@@ -409,64 +492,9 @@ def b29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: the index shuffle carries ~(1-t) of the gram volume (20%
     here); candidate fan-out per gram is bounded because prefix grams
-    are by construction the rarest.  Frequency ties broken by gram hash
-    so the prefix is deterministic.
-
-    All INDEX stages (df counts, prefix rank, candidate self-join) run
-    on xxhash64(gram) longs, never gram strings -- fixed-width shuffle
-    keys and cheap equality.  A 64-bit collision can only ADD a
-    candidate pair, and the exact string-set verify filters it, so the
-    hash never threatens exactness (the same superset-then-verify
-    argument as the prefix filter itself)."""
-    d = lift_parallelism(table(spark, sf_dir, "documents"), "doc_id")
-    # ONE shingle pass feeds both the posting list (df counts, set
-    # sizes, prefix index) and the exact-verify sets below
-    sh = with_shingles(d).select("doc_id", "s").cache()
-    # set_size = size(s): `s` is already array_distinct, so a
-    # groupBy(doc_id).count() over the exploded grams would recompute a
-    # value the array carries for free.  Riding it through the explode
-    # saves one corpus-scale shuffle AND the doc_id join that would
-    # re-attach it (8 bytes/row through the gh exchange instead).
-    g = (
-        sh.select(
-            "doc_id", F.size("s").alias("set_size"), F.explode("s").alias("gram")
-        )
-        .select("doc_id", "set_size", F.xxhash64("gram").alias("gh"))
-        .cache()
-    )
-    freq = g.groupBy("gh").agg(F.count(F.lit(1)).alias("df"))
-    from pyspark.sql import Window as W
-
-    rk = F.row_number().over(
-        W.partitionBy("doc_id").orderBy("df", "gh")
-    )
-    prefix = (
-        g.join(freq, "gh")
-        .withColumn("rk", rk)
-        # prefix length |x| − ⌈t·|x|⌉ + 1 in EXACT integer arithmetic
-        # (t = _T_NUM/_T_DEN).  The float form floor((1−t)·|x|)+1 under-
-        # counts by one whenever t·|x| is integral, because 1−0.8 is
-        # 0.19999…96 in binary: at |x|=10 it yielded prefix 2 instead
-        # of 3 and silently dropped a Jaccard-exactly-0.8 pair at
-        # sf0.1 (caught by the minhash↔exact cross-check; sf0.01 has
-        # no boundary-Jaccard pair, so the oracle differential alone
-        # never saw it).
-        .filter(
-            F.col("rk")
-            <= F.col("set_size")
-            # ⌈t·|x|⌉ = (NUM·|x| + DEN−1) div DEN — integer `div`, not
-            # float `/`+floor: int/int in Spark is double division, so
-            # exactness would silently hinge on the numerator staying
-            # below 2^52 (ADVICE r5); `div` matches the Python integer
-            # formula the unit test pins bit-for-bit.
-            - F.expr(
-                f"cast(({_T_NUM} * set_size + {_T_DEN - 1})"
-                f" div {_T_DEN} as int)"
-            )
-            + 1
-        )
-        .select("doc_id", "gh")
-    )
+    are by construction the rarest."""
+    sh = _shingle_stage(docs)
+    prefix = _prefix_index(_gram_hashes(sh), _T_NUM, _T_DEN)
     cands = (
         prefix.alias("a")
         .join(prefix.alias("b"), "gh")
@@ -476,12 +504,8 @@ def b29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # the exact verify joins the string shingle sets twice (a/b side) --
-    # the shared cached shingle frame serves both
-    sets = sh
     return (
-        cands.join(sets.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa")), "id_a")
-        .join(sets.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")), "id_b")
+        _with_sets(cands, sh)
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sa", "sb")).cast("double")
@@ -490,6 +514,24 @@ def b29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= NGRAM_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+@query(
+    "b29_ngram_jaccard",
+    oracle=f"""
+    WITH g AS (SELECT doc_id, {SQL_SHINGLES} AS s FROM documents)
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           len(list_intersect(a.s, b.s))::DOUBLE
+               / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
+    FROM g a JOIN g b ON a.doc_id < b.doc_id
+    WHERE len(list_intersect(a.s, b.s))::DOUBLE
+              / len(list_distinct(list_concat(a.s, b.s))) >= {NGRAM_THRESHOLD}
+    """,
+)
+def b29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B29 variant: exact n-gram Jaccard ≥ 0.8 pairs over the corpus
+    documents (see :func:`ngram_jaccard_edges`)."""
+    return ngram_jaccard_edges(table(spark, sf_dir, "documents"))
 
 
 #: The all-Catalyst SimHash twin: per-bit majority vote as nested HOF
@@ -840,7 +882,14 @@ def b29_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic, so the output is hash-checkable); the oracle walks
     the same edge set with a recursive CTE to the same min-label
     fixpoint."""
-    edges = b29_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
+    return dup_clusters(table(spark, sf_dir, "documents"))
+
+
+def dup_clusters(docs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every document of ``docs`` in some
+    near-dup pair: connected components over its exact n-gram Jaccard
+    edges, labelled by the component's min doc_id."""
+    edges = ngram_jaccard_edges(docs).select("id_a", "id_b")
     return connected_components(edges).select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
@@ -995,9 +1044,9 @@ def b29_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end; the dropped set is deterministic because the edge set
     is exact.  At 100 TB the anti join broadcasts: the drop list is
     |dupes|, orders of magnitude smaller than the corpus."""
-    clusters = b29_dup_clusters(spark, sf_dir)
-    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     d = table(spark, sf_dir, "documents")
+    clusters = dup_clusters(d)
+    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     return d.join(F.broadcast(drop), "doc_id", "left_anti").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -1486,37 +1535,9 @@ def b159_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     All index arithmetic is integer (⌈t·|A|⌉ via `div`), all join keys
     are xxhash64 longs (collisions only ADD candidates — the verify
     removes them), and the emitted containment is integer ppm."""
-    d = lift_parallelism(table(spark, sf_dir, "documents"), "doc_id")
-    # shingle/gram frames feed multiple consumers (df counts, sizes,
-    # prefix index, exact verify) — cached like b29_ngram_jaccard's
-    # (the NGram pass is the expensive stage; at cluster scale this is
-    # a persist(MEMORY_AND_DISK) under an explicit lifecycle owner)
-    sh = with_shingles(d).select("doc_id", "s").cache()
-    g = (
-        sh.select("doc_id", F.explode("s").alias("gram"))
-        .select("doc_id", F.xxhash64("gram").alias("gh"))
-        .cache()
-    )
-    freq = g.groupBy("gh").agg(F.count(F.lit(1)).alias("df"))
-    sizes = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
-    from pyspark.sql import Window as W
-
-    rk = F.row_number().over(W.partitionBy("doc_id").orderBy("df", "gh"))
-    prefix = (
-        g.join(freq, "gh")
-        .join(sizes, "doc_id")
-        .withColumn("rk", rk)
-        .filter(
-            F.col("rk")
-            <= F.col("set_size")
-            - F.expr(
-                f"cast(({_C_NUM} * set_size + {_C_DEN - 1})"
-                f" div {_C_DEN} as int)"
-            )
-            + 1
-        )
-        .select(F.col("doc_id").alias("id_a"), "gh")
-    )
+    sh = _shingle_stage(table(spark, sf_dir, "documents"))
+    g = _gram_hashes(sh)
+    prefix = _prefix_index(g, _C_NUM, _C_DEN).withColumnRenamed("doc_id", "id_a")
     full = g.select(F.col("doc_id").alias("id_b"), "gh")
     cands = (
         prefix.join(full, "gh")
@@ -1525,14 +1546,7 @@ def b159_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return (
-        cands.join(
-            sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")),
-            "id_b",
-        )
+        _with_sets(cands, sh)
         .withColumn(
             "inter_size",
             F.size(F.array_intersect("sa", "sb")).cast("bigint"),

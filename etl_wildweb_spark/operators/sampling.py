@@ -400,14 +400,10 @@ def b144_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate stays a map-side md5 bucket on cluster_id.  Emitted as
     per-split doc/cluster counts; the no-straddling invariant is
     pinned edge-by-edge in tests/test_llmops.py."""
-    from .dedup import b29_ngram_jaccard, connected_components
+    from .dedup import dup_clusters
 
-    edges = b29_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    cc = connected_components(edges).select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
-    d = table(spark, sf_dir, "documents").select("doc_id")
-    tagged = d.join(cc, "doc_id", "left").select(
+    d = table(spark, sf_dir, "documents")
+    tagged = d.select("doc_id").join(dup_clusters(d), "doc_id", "left").select(
         "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
     )
     b = hash_bucket(F.col("cluster_id"), 100)

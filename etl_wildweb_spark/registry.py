@@ -57,7 +57,8 @@ def schema_of(spark: SparkSession, sf_dir: str, name: str):
     NOTE the exceptions: the streaming queries (b23/b24/b58/b64/b177/
     b180 families) execute eagerly by design, and the iterative/fixture builders
     (connected-components family b29_dup_clusters/b29_cc_bigstar/
-    b144, the checkpointed closures b129/b131, b139's materialized
+    b144, the shingle-stage checkpoint of b29_ngram_jaccard/b159,
+    the checkpointed closures b129/b131, b139's materialized
     coverage set, the side-effecting connector demos) run work at
     build time — introspect plain batch queries freely, these
     deliberately."""

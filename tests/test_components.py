@@ -195,3 +195,44 @@ def test_driver_path_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert out is not None
     assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_dedup_builders_leave_no_session_cache(spark, sf_dir):
+    """The n-gram edge feed and its consumers own their shingle stage
+    as a local checkpoint: building and running them registers nothing
+    in the session's CacheManager, so repeated calls cannot stack
+    cached plans."""
+    from etl_wildweb_spark import registry
+
+    registry.load_all()
+    spark.catalog.clearCache()
+    for name in (
+        "b29_ngram_jaccard",
+        "b29_dedup_canonical",
+        "b144_leakage_safe_split",
+        "b159_containment_dedup",
+    ):
+        assert registry.QUERIES[name](spark, sf_dir).collect(), name
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_ngram_edges_survive_a_short_circuiting_action(spark, sf_dir):
+    """The shingle stage is checkpointed eagerly at build time: every
+    RDD leaf of the built frame is materialized before any action, and
+    a caller's limit(1) leaves the same frame returning the full edge
+    set on its next action."""
+    from etl_wildweb_spark import registry
+
+    registry.load_all()
+    full = {tuple(r) for r in registry.QUERIES["b29_ngram_jaccard"](spark, sf_dir).collect()}
+    edges = registry.QUERIES["b29_ngram_jaccard"](spark, sf_dir)
+    leaves = edges._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    rdds = []
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            rdds.append(leaf.rdd())
+    assert rdds and all(r.isCheckpointed() for r in rdds)
+    assert len(edges.limit(1).collect()) == 1
+    assert {tuple(r) for r in edges.collect()} == full
+    assert len(full) > 1
