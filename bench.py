@@ -50,7 +50,6 @@ BENCH_QUERIES = [
     "b31_term_freq",
     "b31_bpe_token_count",
     "b32_frame_sample",
-    "b29_dup_clusters",
     "b34_hash_sample",
     "b35_sequence_pack",
     "tpch_q9",

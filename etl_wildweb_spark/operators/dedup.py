@@ -698,7 +698,7 @@ reach(node, lab) AS (
 #: width-1 graphs at sf0.1), while 10⁶ (u, v) long pairs are ~30 MB
 #: collected and union-find resolves them in well under a second on the
 #: driver.  Mirrors the BPE driver/distributed twin (corpus.py): the
-#: distributed engines stay load-bearing above the threshold, and driver ≡
+#: distributed loop stays load-bearing above the threshold, and driver ≡
 #: distributed equivalence is pinned on every adversarial graph shape in
 #: tests/test_components.py.
 DRIVER_CC_MAX_EDGES = 1_000_000
@@ -706,10 +706,10 @@ DRIVER_CC_MAX_EDGES = 1_000_000
 
 def _driver_cc(spark: SparkSession, edge_rows, id_type) -> DataFrame:
     """Union-find over a collected edge list — the sub-threshold twin of
-    BOTH distributed CC engines, honoring the same contract: one row per
-    node that appears in any edge (self-loops carry membership), with
-    cluster_id = the component's minimum node id.  Endpoints must be
-    non-null.
+    the distributed :func:`connected_components` loop, honoring the same
+    contract: one row per node that appears in any edge (self-loops
+    carry membership), with cluster_id = the component's minimum node
+    id.  Endpoints must be non-null.
 
     Union by MIN root makes the invariant structural: whenever two trees
     merge, the smaller root wins, and the component's true minimum is a
@@ -753,9 +753,9 @@ def _driver_cc(spark: SparkSession, edge_rows, id_type) -> DataFrame:
 
 
 def _driver_cc_or_none(edges_uv: DataFrame) -> DataFrame | None:
-    """Shared path decision for both CC engines: resolve the (already
-    checkpointed) edge list on the driver when it fits, else return None
-    for the distributed loop.
+    """Path decision of :func:`connected_components`: resolve the
+    (already checkpointed) edge list on the driver when it fits, else
+    return None for the distributed loop.
 
     Two jobs at most: one count over the checkpointed rows, then — only
     when the count is within DRIVER_CC_MAX_EDGES — one plain collect, so
@@ -767,7 +767,7 @@ def _driver_cc_or_none(edges_uv: DataFrame) -> DataFrame | None:
     whose Python order is Spark's order (UTF-8 byte order is code point
     order; a double NaN would never find its union-find root), and
     edges with no null endpoint: Python cannot order None, and the
-    distributed engines give null nodes their own semantics."""
+    distributed loop gives null nodes their own semantics."""
     from pyspark.sql.types import IntegralType, StringType
 
     ut = edges_uv.schema["u"].dataType
@@ -784,131 +784,18 @@ def _driver_cc_or_none(edges_uv: DataFrame) -> DataFrame | None:
 
 
 def connected_components(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 50
-) -> DataFrame:
-    """Connected components by iterative min-label propagation, pure
-    DataFrame ops: every node starts labeled with its own id; each round
-    every node takes the min of its label and its neighbors' labels;
-    fixpoint when no label changes.  Returns (node, cluster_id) where
-    cluster_id = the component's minimum node id.
-
-    Convergence is O(graph diameter) rounds — for dedup clusters
-    (near-clique blobs of mutual near-duplicates) the diameter is tiny,
-    so this beats the big hammer.  At billion-edge scale with long
-    chains you'd switch to the large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14), which converges in O(log n) rounds of the same
-    join+groupBy primitive — the harness below is agnostic to that
-    swap.  Each round ends in localCheckpoint(): without it the lineage
-    doubles per iteration and Catalyst re-analysis goes quadratic (the
-    standard iterative-DataFrame trap)."""
-    spark = edges.sparkSession
-    # Materialize the incoming edge list ONCE before the direction-
-    # doubling union — both union branches read the same lineage, and
-    # the upstream pair generation (PPJoin candidates for
-    # b29_dup_clusters) is the expensive part; without this checkpoint
-    # it executes twice (measured ~3.5 s saved at sf0.1), the same fix
-    # connected_components_bigstar already carries.
-    raw = edges.selectExpr(f"{src} AS u", f"{dst} AS v").localCheckpoint(
-        eager=True
-    )
-    # Sub-threshold graphs skip the distributed loop entirely: the
-    # checkpointed edge list feeds a driver union-find (the heavy
-    # upstream already ran exactly once, in the checkpoint job).
-    done = _driver_cc_or_none(raw)
-    if done is not None:
-        return done
-    und = raw.unionAll(raw.selectExpr("v AS u", "u AS v"))
-    # The dup graph is orders of magnitude smaller than the corpus that
-    # produced it, so a corpus-sized partition count is pure scheduling
-    # overhead here (measured 28 s → 3 s at sf0.01 under a 200-partition
-    # session).  Right-size by explicitly hash-repartitioning every
-    # DataFrame that gets checkpointed — a checkpoint freezes its RDD
-    # partitioning, so every per-iteration scan would otherwise inherit
-    # the session's width for the whole loop.  Intermediate join/groupBy
-    # exchanges are left to AQE coalescing (asserted on in
-    # session.RUNTIME_CONFS); no session-global conf is touched, so the
-    # loop is safe on a shared/concurrent session.
-    n_edges = und.count()
-    default_width = spark.sparkContext.defaultParallelism
-    width = max(1, min(default_width, n_edges // 100_000 + 1))
-    und = und.repartition(width, "v").localCheckpoint(eager=True)
-    # Init fuses propagation round 1 into the node-derivation groupBy:
-    # lab₀ = min(node, min(Γ(node))) — one round (and its two jobs)
-    # saved for free, since deriving the node set shuffles anyway.
-    labels = (
-        und.groupBy(F.col("u").alias("node"))
-        .agg(F.least(F.col("u"), F.min("v")).alias("lab"))
-        .repartition(width, "node")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neigh = (
-            und.join(labels, und.v == labels.node)
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("lab").alias("nlab"))
-        )
-        nxt = labels.join(neigh, "node", "left").select(
-            "node",
-            F.least("lab", F.coalesce("nlab", "lab")).alias("lab"),
-            (F.col("nlab") < F.col("lab")).alias("chg"),
-        )
-        # LAZY checkpoint + full count = ONE job per round (an eager
-        # checkpoint plus a separate convergence count is two); the
-        # unrestricted count touches every partition, so the checkpoint
-        # is fully materialized before lineage is dropped — never pair
-        # a lazy localCheckpoint with a short-circuiting action like
-        # limit(1).count().
-        nxt = nxt.repartition(width, "node").localCheckpoint(eager=False)
-        changed = nxt.filter(F.col("chg")).count()
-        labels = nxt.drop("chg")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("lab").alias("cluster_id"))
-
-
-@query(
-    "b29_dup_clusters",
-    oracle=_CC_ORACLE_PREFIX.format(shingles=SQL_SHINGLES, thr=NGRAM_THRESHOLD)
-    + """
-    SELECT node AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY node
-    """,
-)
-def b29_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B29 end-game: resolve near-dup PAIRS into duplicate CLUSTERS
-    (connected components), because pairwise output alone can't answer
-    "which docs do I drop" — transitivity matters (A~B, B~C ⇒ one
-    cluster even if A!~C).  Edges are the exact n-gram Jaccard pairs
-    (deterministic, so the output is hash-checkable); the oracle walks
-    the same edge set with a recursive CTE to the same min-label
-    fixpoint."""
-    return dup_clusters(table(spark, sf_dir, "documents"))
-
-
-def dup_clusters(docs: DataFrame) -> DataFrame:
-    """(doc_id, cluster_id) for every document of ``docs`` in some
-    near-dup pair: connected components over its exact n-gram Jaccard
-    edges, labelled by the component's min doc_id."""
-    edges = ngram_jaccard_edges(docs).select("id_a", "id_b")
-    return connected_components(edges).select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
-
-
-def connected_components_bigstar(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 30
 ) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the billion-edge swap that connected_components'
-    docstring promises, implemented so the promise is load-bearing.
+    Beyond", SoCC'14).  Returns (node, cluster_id) where cluster_id =
+    the component's minimum node id; self-loops carry membership.
 
     Each round is two groupBy(min) + equi-join passes over the edge
     list; the graph contracts toward a star per component in O(log n)
-    rounds REGARDLESS of diameter (label propagation above is
-    O(diameter) — fine for near-clique dup blobs, pathological for
-    chain-shaped graphs).  No collect_set: the per-node minimum is a
-    partial-aggregating min(), so high-degree hub nodes never
+    rounds REGARDLESS of diameter, so long chains cost no more rounds
+    than near-clique dup blobs.  No collect_set: the per-node minimum
+    is a partial-aggregating min(), so high-degree hub nodes never
     materialize a neighbor list (the skew trap of naive CC).
 
       large-star: every node links its LARGER neighbors to its local
@@ -920,16 +807,18 @@ def connected_components_bigstar(
     Fixpoint when the edge multiset stops changing (checked by count +
     key checksums — one tiny aggregate per round, no exceptAll
     shuffle).  At fixpoint the edge list IS the component star:
-    (node → component-min)."""
-    # Materialize the incoming edge list ONCE — `e` and `nodes` both
-    # derive from it, and the upstream lineage (e.g. the PPJoin
-    # candidate generation feeding b29_cc_bigstar) is the expensive
-    # part; without this checkpoint it would execute twice.
+    (node → component-min).  No fixpoint within ``max_iter`` rounds
+    raises RuntimeError rather than returning a partial labelling.
+
+    Graphs of at most DRIVER_CC_MAX_EDGES edges skip the loop and
+    resolve as one driver-side union-find (:func:`_driver_cc`)."""
+    # Materialize the incoming edge list ONCE — the driver path, `e` and
+    # `nodes` all derive from it, and the upstream lineage (e.g. the
+    # PPJoin candidate generation of ngram_jaccard_edges) is the
+    # expensive part; without this checkpoint it would execute twice.
     raw = edges.selectExpr(f"{src} AS u", f"{dst} AS v").localCheckpoint(
         eager=True
     )
-    # Sub-threshold graphs resolve on the driver — same decision and
-    # rationale as connected_components.
     done = _driver_cc_or_none(raw)
     if done is not None:
         return done
@@ -950,7 +839,12 @@ def connected_components_bigstar(
 
     # The initial signature's count() IS the edge count — one
     # aggregate job supplies both the convergence baseline and the
-    # loop width.
+    # loop width.  The dup graph is orders of magnitude smaller than the
+    # corpus that produced it, so a corpus-sized partition count is pure
+    # scheduling overhead (measured 28 s → 3 s at sf0.01 under a
+    # 200-partition session).  Every checkpointed frame is explicitly
+    # hash-repartitioned to this width, since a checkpoint freezes its
+    # RDD partitioning for the whole loop; no session conf is touched.
     sig = _sig(e)
     n_edges = sig[0]
     default_width = spark.sparkContext.defaultParallelism
@@ -987,9 +881,12 @@ def connected_components_bigstar(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
         )
-        # Lazy checkpoint: the signature aggregate reads every partition
-        # (full agg, no short-circuit), materializing the checkpoint in
-        # the same job it uses — one job per round, not two.
+        # LAZY checkpoint + full aggregate = ONE job per round (an eager
+        # checkpoint plus a separate signature job is two): the signature
+        # aggregate reads every partition, so the checkpoint is fully
+        # materialized before lineage is dropped — never pair a lazy
+        # localCheckpoint with a short-circuiting action such as
+        # limit(1).count(), which builds only the partitions it reads.
         # distinct AFTER the width repartition: hash-partitioning by u
         # already clusters every (u, v) duplicate into one partition,
         # so the dedup aggregate reuses that exchange instead of adding
@@ -1001,6 +898,11 @@ def connected_components_bigstar(
         if nsig == sig:
             break
         sig = nsig
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} rounds "
+            f"on {n_edges} edges"
+        )
     roots = e.groupBy("u").agg(F.min("v").alias("root"))
     return nodes.join(
         roots, nodes.node == roots.u, "left"
@@ -1015,12 +917,22 @@ def connected_components_bigstar(
     """,
 )
 def b29_cc_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b29_dup_clusters' twin on the large-star/small-star engine — the
-    O(log n)-round contraction that replaces label propagation when the
-    dup graph stops being near-clique (same edge set, same oracle, same
-    output contract; equivalence also pinned in tests/test_components.py)."""
-    edges = b29_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    return connected_components_bigstar(edges).select(
+    """B29 end-game: resolve near-dup PAIRS into duplicate CLUSTERS
+    (connected components), because pairwise output alone can't answer
+    "which docs do I drop" — transitivity matters (A~B, B~C ⇒ one
+    cluster even if A!~C).  Edges are the exact n-gram Jaccard pairs
+    (deterministic, so the output is hash-checkable); the oracle walks
+    the same edge set with a recursive CTE to the same min-label
+    fixpoint."""
+    return dup_clusters(table(spark, sf_dir, "documents"))
+
+
+def dup_clusters(docs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every document of ``docs`` in some
+    near-dup pair: connected components over its exact n-gram Jaccard
+    edges, labelled by the component's min doc_id."""
+    edges = ngram_jaccard_edges(docs).select("id_a", "id_b")
+    return connected_components(edges).select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
 
@@ -1390,7 +1302,7 @@ def b149_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest seed centroid, compare pairs ONLY within a cluster, and
     drop any vector with a higher-similarity twin of lower vec_id
     (the cheap min-id survivor rule; full transitive grouping is
-    b29_dup_clusters' job).  Output: one row per vector with its
+    b29_cc_bigstar's job).  Output: one row per vector with its
     cluster, its lower-id duplicate count, and the keep decision.
 
     Engine shape — the whole point of SemDeDup is that the quadratic

@@ -547,17 +547,15 @@ def b173_dbscan_complexes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Engine shape: this is pure composition — b166's cell-join produces
     the ε-neighborhood edges (never the n² pair space), the core
-    filter is one groupBy on those edges, and the clustering is the
-    LARGE-STAR/SMALL-STAR contraction (connected_components_bigstar,
+    filter is one groupBy on those edges, and the clustering is
+    dedup.connected_components (large-star/small-star contraction,
     Kiveris et al. SoCC'14): dense fire complexes are near-clique and
-    ε-chains along a fire front are path-shaped, and big-star's
-    O(log n) rounds are immune to that diameter — the round-6 16x
-    density probe showed the min-label loop's O(diameter) rounds
-    dominating wall time (8.1 s → 517 s; SCALE.md).  Both harnesses
-    emit component-min labels, so the DuckDB WITH RECURSIVE oracle is
-    unchanged.  The per-round state is core-point-sized — a vanishing
-    fraction of the corpus by the density definition."""
-    from .dedup import connected_components_bigstar
+    ε-chains along a fire front are path-shaped, and its O(log n)
+    rounds are immune to that diameter.  It emits component-min
+    labels, the same fixpoint the DuckDB WITH RECURSIVE oracle walks.
+    The per-round state is core-point-sized — a vanishing fraction of
+    the corpus by the density definition."""
+    from .dedup import connected_components
 
     ev = table(spark, sf_dir, "events")
     pts = ev.select(
@@ -582,7 +580,7 @@ def b173_dbscan_complexes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         # the edge list feeds THREE consumers (core filter, CC, border
         # attach) and the upstream cell join is the expensive stage —
-        # materialize once (the connected_components checkpoint rule)
+        # materialize once
         .localCheckpoint(eager=True)
     )
     core = (
@@ -591,14 +589,13 @@ def b173_dbscan_complexes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("deg") + 1 >= DBSCAN_MIN_PTS)
         .select(F.col("id_a").alias("event_id"))
     )
-    # ROUND-13 OPTIMIZATION (guide §2.3): connected components is
-    # orientation-agnostic (bigstar re-derives both directions from
-    # its own e ∪ swap(e) union), so the CC input takes only the
-    # unordered HALF of the mirrored edge list — half the rows through
-    # the two core joins, the engine's edge checkpoint, and the first
-    # contraction round.  The mirrored nbr stays for the two consumers
-    # that are direction-sensitive (per-point core degree, border
-    # attach).  Identical rows (A/B'd; med 6.3→5.6 s at sf0.1).
+    # Connected components is orientation-agnostic (it re-derives both
+    # directions from its own e ∪ swap(e) union), so the CC input takes
+    # only the unordered HALF of the mirrored edge list — half the rows
+    # through the two core joins, the engine's edge checkpoint, and the
+    # first contraction round.  The mirrored nbr stays for the two
+    # consumers that are direction-sensitive (per-point core degree,
+    # border attach).  Identical rows (A/B'd; med 6.3→5.6 s at sf0.1).
     core_edges = (
         nbr.filter(F.col("id_a") < F.col("id_b"))
         .join(core.withColumnRenamed("event_id", "id_a"), "id_a")
@@ -612,7 +609,7 @@ def b173_dbscan_complexes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("id_a"), F.col("event_id").alias("id_b")
         )
     )
-    core_cluster = connected_components_bigstar(cc_in).select(
+    core_cluster = connected_components(cc_in).select(
         F.col("node").alias("event_id"), "cluster_id"
     )
     border = (

@@ -387,11 +387,11 @@ def _b144_oracle() -> str:
 def b144_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEAKAGE-SAFE train/val/test split — b53's hash split made
     near-duplicate-aware: assignment is keyed on the NEAR-DUP CLUSTER
-    id (b29's connected components over exact n-gram Jaccard pairs),
-    not the document id, so two near-duplicate documents can never
-    land in different splits (the canonical eval-contamination bug:
-    val/test "generalization" measured on near-copies of training
-    docs).  Docs in no cluster are their own singleton cluster —
+    id (dedup.dup_clusters: connected components over the exact n-gram
+    Jaccard pairs, the b29_cc_bigstar output), not the document id, so
+    two near-duplicate documents can never land in different splits
+    (the canonical eval-contamination bug: val/test "generalization"
+    measured on near-copies of training docs).  Docs in no cluster are their own singleton cluster —
     b53's stability property (old docs never move as the corpus
     grows) is preserved within the unclustered majority.
 

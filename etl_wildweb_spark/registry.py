@@ -56,8 +56,8 @@ def schema_of(spark: SparkSession, sf_dir: str, name: str):
     Catalyst against the given corpus, usually without execution.
     NOTE the exceptions: the streaming queries (b23/b24/b58/b64/b177/
     b180 families) execute eagerly by design, and the iterative/fixture builders
-    (connected-components family b29_dup_clusters/b29_cc_bigstar/
-    b144, the shingle-stage checkpoint of b29_ngram_jaccard/b159,
+    (connected-components family b29_cc_bigstar/b29_dedup_canonical/
+    b144/b173, the shingle-stage checkpoint of b29_ngram_jaccard/b159,
     the checkpointed closures b129/b131, b139's materialized
     coverage set, the side-effecting connector demos) run work at
     build time — introspect plain batch queries freely, these
@@ -141,7 +141,6 @@ PRIORITY: list[str] = [
     #    the sql_dsum_c4 overflow-order fix (ADVICE r13; tpch_q9 of the
     #    dsum family already leads above) --
     "b29_ngram_jaccard",
-    "b29_dup_clusters",
     "b29_cc_bigstar",
     "b29_dedup_canonical",
     "b144_leakage_safe_split",
@@ -177,6 +176,8 @@ PRIORITY: list[str] = [
     "b175_ivfpq_observed_sampled",
     "b178_quality_classifier",
     "b179_stream_late_audit",
+    # oldest driver row outside the window (tests/plan_rotation.py)
+    "b18_width_bucket",
 ]
 
 #: Hard cap on per-round additions (VERDICT r6 items 2/7): the driver

@@ -1,26 +1,24 @@
 """connected_components unit tests on adversarial graph shapes —
 the oracle suite only exercises the near-clique dup blobs, so chains,
-cycles, and label-ordering traps get direct coverage here.  Both CC
-engines (label propagation + large-star/small-star) run every case, on
-BOTH execution paths: the sub-threshold driver union-find (the default
-at these sizes) and the distributed loops (forced by pinning the
-threshold to 0), plus explicit driver ≡ distributed equivalence per
-engine, including null endpoints and non-ASCII string ids."""
+cycles, and label-ordering traps get direct coverage here.  Every case
+runs on BOTH execution paths: the sub-threshold driver union-find (the
+default at these sizes) and the distributed large-star/small-star loop
+(forced by pinning the threshold to 0), each checked against a literal
+expected labelling that a pure-Python label-propagation fixpoint
+reproduces, plus driver ≡ distributed equivalence on null
+endpoints, non-ASCII string ids and NaN ids."""
 
 from __future__ import annotations
 
 import pytest
 
 from etl_wildweb_spark.operators import dedup
-from etl_wildweb_spark.operators.dedup import (
-    connected_components,
-    connected_components_bigstar,
-)
+from etl_wildweb_spark.operators.dedup import connected_components
 
 
-def _cc(spark, pairs, impl=connected_components):
+def _cc(spark, pairs, **kw):
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    out = impl(df).collect()
+    out = connected_components(df, **kw).collect()
     return {r.node: r.cluster_id for r in out}
 
 
@@ -50,58 +48,100 @@ def test_bridged_stars(spark):
     assert set(got.values()) == {0}
 
 
+#: case → (edge list, expected {node: cluster_id})
 _CASES = {
-    "chain": [(i, i + 1) for i in range(9)],
-    "reversed_chain": [(i + 1, i) for i in range(5)],
-    "cycle_plus_pair": [(1, 2), (2, 3), (3, 1), (10, 11)],
-    "bridged_stars": [(0, i) for i in range(1, 5)]
-    + [(100, 100 + i) for i in range(1, 5)]
-    + [(4, 104)],
-    "self_loop_and_dup_edges": [(5, 5), (1, 2), (2, 1), (1, 2), (3, 4)],
-    "long_chain_log_rounds": [(i, i + 1) for i in range(40)],
+    "chain": ([(i, i + 1) for i in range(9)], {i: 0 for i in range(10)}),
+    "reversed_chain": ([(i + 1, i) for i in range(5)], {i: 0 for i in range(6)}),
+    "cycle_plus_pair": (
+        [(1, 2), (2, 3), (3, 1), (10, 11)],
+        {1: 1, 2: 1, 3: 1, 10: 10, 11: 10},
+    ),
+    "bridged_stars": (
+        [(0, i) for i in range(1, 5)]
+        + [(100, 100 + i) for i in range(1, 5)]
+        + [(4, 104)],
+        {n: 0 for n in (0, 1, 2, 3, 4, 100, 101, 102, 103, 104)},
+    ),
+    "self_loop_and_dup_edges": (
+        [(5, 5), (1, 2), (2, 1), (1, 2), (3, 4)],
+        {5: 5, 1: 1, 2: 1, 3: 3, 4: 3},
+    ),
+    # 41 nodes: more rounds than max_iter=30 if contraction were
+    # O(diameter) instead of O(log n)
+    "long_chain_log_rounds": (
+        [(i, i + 1) for i in range(40)],
+        {i: 0 for i in range(41)},
+    ),
+    # 61 nodes, diameter 60: beyond 50 rounds for any loop whose round
+    # count grows with the diameter
+    "chain_61_nodes": (
+        [(i, i + 1) for i in range(60)],
+        {i: 0 for i in range(61)},
+    ),
 }
+
+
+def _label_propagation(pairs):
+    """Pure-Python min-label propagation run to its fixpoint (no round
+    cap): the O(diameter) reference the contraction engine must match."""
+    label = {n: n for edge in pairs for n in edge}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in pairs:
+            low = min(label[a], label[b])
+            if label[a] != low or label[b] != low:
+                label[a] = label[b] = low
+                changed = True
+    return label
 
 
 @pytest.mark.parametrize("case", sorted(_CASES))
 def test_bigstar_matches_label_propagation(spark, case):
-    """The O(log n) large-star/small-star engine must agree with label
-    propagation on every adversarial shape — including the 41-node
-    chain, where propagation needs 40 rounds but contraction must
-    finish in its max_iter=30 (i.e. actually converge in O(log n))."""
-    pairs = _CASES[case]
-    assert _cc(spark, pairs, connected_components_bigstar) == _cc(spark, pairs)
+    """The large-star/small-star engine agrees with label propagation
+    on every adversarial shape, and so does the literal expected map."""
+    pairs, expected = _CASES[case]
+    assert _label_propagation(pairs) == expected
+    assert _cc(spark, pairs) == expected
 
 
-@pytest.mark.parametrize("case", sorted(_CASES))
-@pytest.mark.parametrize(
-    "impl", [connected_components, connected_components_bigstar],
-    ids=["labelprop", "bigstar"],
-)
-def test_driver_path_matches_distributed(spark, monkeypatch, case, impl):
+def _bigstar_id(case):
+    # test ids name the algorithm: large-star/small-star contraction
+    return f"bigstar-{case}"
+
+
+@pytest.mark.parametrize("case", sorted(_CASES), ids=_bigstar_id)
+def test_driver_path_matches_distributed(spark, monkeypatch, case):
     """Twin pin: the sub-threshold driver union-find and the
-    distributed loop must emit identical (node, cluster_id) rows for
-    both engines on every adversarial shape.  Threshold 0 forces the
+    distributed loop must both emit the expected (node, cluster_id)
+    rows on every adversarial shape.  Threshold 0 forces the
     distributed path (any non-empty edge list exceeds it)."""
-    pairs = _CASES[case]
-    driver = _cc(spark, pairs, impl)  # default threshold → driver path
+    pairs, expected = _CASES[case]
+    assert _cc(spark, pairs) == expected  # default threshold → driver path
     monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
-    dist = _cc(spark, pairs, impl)  # forced distributed loop
-    assert driver == dist
+    assert _cc(spark, pairs) == expected  # forced distributed loop
+
+
+def test_max_iter_exhaustion_raises(spark, monkeypatch):
+    """A distributed loop that runs out of rounds fails loudly instead
+    of returning a partial labelling (a 201-node chain needs more than
+    two contraction rounds)."""
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
+    with pytest.raises(RuntimeError, match="no fixpoint after 2 rounds"):
+        _cc(spark, [(i, i + 1) for i in range(200)], max_iter=2)
 
 
 def test_driver_path_schema_and_empty(spark):
-    """The driver path must keep the engines' output schema (node,
+    """The driver path must keep the engine's output schema (node,
     cluster_id with the edge id type) — including on an EMPTY edge
     list, where it returns zero rows rather than erroring."""
-    empty = spark.createDataFrame([], "id_a long, id_b long")
-    for impl in (connected_components, connected_components_bigstar):
-        out = impl(empty)
-        assert [f.name for f in out.schema.fields] == ["node", "cluster_id"]
-        assert [f.dataType.simpleString() for f in out.schema.fields] == [
-            "bigint",
-            "bigint",
-        ]
-        assert out.count() == 0
+    out = connected_components(spark.createDataFrame([], "id_a long, id_b long"))
+    assert [f.name for f in out.schema.fields] == ["node", "cluster_id"]
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "bigint",
+        "bigint",
+    ]
+    assert out.count() == 0
 
 
 _TYPED_CASES = {
@@ -126,17 +166,13 @@ _TYPED_CASES = {
 }
 
 
-@pytest.mark.parametrize("case", sorted(_TYPED_CASES))
-@pytest.mark.parametrize(
-    "impl", [connected_components, connected_components_bigstar],
-    ids=["labelprop", "bigstar"],
-)
-def test_driver_path_matches_distributed_typed(spark, monkeypatch, case, impl):
+@pytest.mark.parametrize("case", sorted(_TYPED_CASES), ids=_bigstar_id)
+def test_driver_path_matches_distributed_typed(spark, monkeypatch, case):
     ddl, pairs = _TYPED_CASES[case]
 
     def rows():
         # repr: NaN keys never compare equal inside a dict
-        out = impl(spark.createDataFrame(pairs, ddl)).collect()
+        out = connected_components(spark.createDataFrame(pairs, ddl)).collect()
         return sorted((repr(r.node), repr(r.cluster_id)) for r in out)
 
     driver = rows()
@@ -154,8 +190,7 @@ def test_driver_path_is_local_relation(spark):
     from etl_wildweb_spark.io import local_frame
 
     df = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
-    for impl in (connected_components, connected_components_bigstar):
-        assert _plan_node(impl(df)) == "LocalRelation"
+    assert _plan_node(connected_components(df)) == "LocalRelation"
     assert _plan_node(local_frame(spark, [(1, "a")], "k long, s string")) == (
         "LocalRelation"
     )
@@ -181,7 +216,7 @@ def test_driver_path_job_count(spark):
     jobs: one count, one collect.  Eight partitions: an incremental
     take over them (limit + collect) would need three."""
     sc = spark.sparkContext
-    edges = spark.createDataFrame(_CASES["bridged_stars"], "id_a long, id_b long")
+    edges = spark.createDataFrame(_CASES["bridged_stars"][0], "id_a long, id_b long")
     raw = (
         edges.selectExpr("id_a AS u", "id_b AS v")
         .repartition(8)

@@ -969,7 +969,6 @@ def test_dedup_gram_threshold_family_exact_boundaries(spark, sf_dir, tmp_path):
     for name in (
         "b29_ngram_jaccard",
         "b29_minhash_near_dedup",
-        "b29_dup_clusters",
         "b29_cc_bigstar",
         "b82_incremental_neardup",
         "b159_containment_dedup",
@@ -991,7 +990,7 @@ def test_dedup_gram_threshold_family_exact_boundaries(spark, sf_dir, tmp_path):
     assert (401, 402) in pairs
     clusters = {
         r.doc_id: r.cluster_id
-        for r in registry.QUERIES["b29_dup_clusters"](spark, planted).collect()
+        for r in registry.QUERIES["b29_cc_bigstar"](spark, planted).collect()
     }
     assert clusters[101] == clusters[105] == clusters[102]  # == edge load-bearing
     assert 301 not in clusters or clusters[301] != clusters.get(302)
