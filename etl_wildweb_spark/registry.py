@@ -112,9 +112,7 @@ def capabilities(
 #: item 5), then 33 of the r08 cohort greedy-oldest-first.  The three
 #: r08 entries after the fill cut (b53_train_val_test,
 #: b55_lateral_topk, b56_embedding_quantize) defer to r14 at age 5 —
-#: legal under MAX_DRIVER_ROW_AGE=5 (tests/test_registry_order.py);
-#: b53 holds the final slot until this round's b183 addition
-#: registers and takes it (the tpch_q17/b182 precedent).
+#: legal under MAX_DRIVER_ROW_AGE=5 (tests/test_registry_order.py).
 PRIORITY: list[str] = [
     # -- planner must-lead (14): red when CORRECTNESS_r14 lands
     #    unless re-checked (the round-open rotation discipline,
@@ -191,10 +189,7 @@ ADDITIONS_PER_ROUND_CAP = 10
 #: Candidates for the NEXT round's window: additions made this round
 #: (VERDICT r5 item 7: everything new enters PRIORITY_NEXT in the same
 #: commit that registers it).  Round 12's single addition (b182) got a
-#: green r12 driver row, so it rotates out.  This round's planned
-#: addition (b183_pretrain_pipeline_e2e, VERDICT r12 item 4) enters
-#: here in the commit that registers it, taking b53_train_val_test's
-#: final PRIORITY slot (the tpch_q17/b182 precedent).
+#: green r12 driver row, so it rotates out.
 PRIORITY_NEXT: list[str] = []
 
 

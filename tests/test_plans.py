@@ -4,6 +4,8 @@ under test, because mis-planning is invisible at test scale and fatal at
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from etl_wildweb_spark import registry
@@ -68,6 +70,24 @@ def test_wildweb_pipeline_no_shuffle(plans):
     p = plans("wildweb_pipeline")
     assert audit.exchanges(p) == {"shuffle": 0, "broadcast": 0}
     assert audit.codegen_spans(p) >= 1
+
+
+def test_wildweb_error_channel_one_scan_one_decode(spark, tmp_path):
+    """run_pipeline's error channel is one generator over one decode:
+    a single parquet scan and a single from_json, not one branch per
+    fault kind."""
+    from pyspark.sql import functions as F
+
+    from etl_wildweb_spark.ingest.wildweb import run_pipeline
+
+    path = str(tmp_path / "envelopes.parquet")
+    spark.createDataFrame(
+        [("C1", "[]", True)], "center string, payload string, http_ok boolean"
+    ).write.parquet(path)
+    _, errors = run_pipeline(spark.read.parquet(path), "1 Week", F.current_timestamp())
+    p = audit.formatted_plan(errors)
+    assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
+    assert p.count("from_json(") == 1, p
 
 
 def test_b30_broadcasts_query_side(plans):

@@ -166,6 +166,39 @@ def test_invalid_json_error_channel(spark):
     assert len(errs) == 1 and errs[0].reason == "invalid_json"
 
 
+#: One center per edge case, plus one sound incident inside every range.
+EDGE_ROWS = [
+    ("ok", envelope_payload([incident(uuid="u-ok", date="2026-08-13T11:00:00Z")]), True),
+    ("http_null", envelope_payload([incident()]), None),  # in neither channel
+    ("empty", "[]", True),
+    ("null_env", "[null]", True),  # one envelope, no retrieved, no data
+    ("null_payload", None, True),
+    ("null_incident", json.dumps([{"retrieved": NOW, "data": [None]}]), True),
+    ("empty_date", envelope_payload([incident(uuid="u-empty", date="")]), True),
+    # Silent drops, pinned as current behaviour: a ``data`` that is not
+    # an array of objects decodes to NULL, which reads as ``data: null``
+    # (zero incidents, no error) although the body broke the contract.
+    ("data_string", json.dumps([{"retrieved": NOW, "data": "x"}]), True),
+    ("data_numbers", json.dumps([{"retrieved": NOW, "data": [1, 2]}]), True),
+]
+
+EDGE_ERRORS = [
+    ("empty", "envelope", "cardinality_0", "[]"),
+    ("empty_date", "normalize_date", "unparsable_date", '{"uuid":"u-empty","date":""}'),
+    ("null_incident", "normalize_date", "unparsable_date", "{}"),
+    ("null_payload", "decode", "invalid_json", None),
+]
+
+
+@pytest.mark.parametrize("incident_range", [None, *ww.INCIDENT_RANGES])
+def test_edge_case_table(spark, incident_range):
+    # unparsable dates pass the time filter under every range (task.ts:113),
+    # so the error channel must not depend on the range
+    feats, errs = run(spark, EDGE_ROWS, incident_range)
+    assert [f.feature.id for f in feats] == ["wildweb-u-ok"]
+    assert sorted(tuple(e) for e in errs) == EDGE_ERRORS
+
+
 def test_duplicate_uuid_across_centers_not_deduped(spark):
     # task.ts:127: reference does NOT dedup; same id enables downstream
     # idempotent upsert (FIXTURES.md B1 case 6)

@@ -2,8 +2,11 @@
 """Interleaved A/B probe: alternate tools/measure.py runs between two
 checkouts (OLD, NEW) so host drift cannot masquerade as a code delta.
 Each leg is a fresh process/session timing the named queries via the
-noop sink (warmup + median-of-3, bench methodology).  A leg whose child
-exits non-zero stops the probe with the child's stderr.
+noop sink (warmup + median-of-3, bench methodology).  The checkout that
+runs first alternates from round to round, so neither side always gets
+the warmer (or colder) host.  A leg whose child exits non-zero, or
+prints no timing for a requested query, stops the probe with the
+child's output.
 
   python tools/ab.py OLD_CHECKOUT NEW_CHECKOUT 3 q1 q2 ...
 """
@@ -31,8 +34,10 @@ def run_leg(root: str, names: list[str]) -> dict[str, tuple[float, float]]:
     out: dict[str, tuple[float, float]] = {}
     for m in re.finditer(r"^(\S+): med=([\d.]+) min=([\d.]+)", p.stdout, re.M):
         out[m.group(1)] = (float(m.group(2)), float(m.group(3)))
-    if not out:
+    missing = [n for n in names if n not in out]
+    if missing:
         sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
+        raise SystemExit(f"leg {root}: measure.py printed no timing for {', '.join(missing)}")
     return out
 
 
@@ -44,21 +49,20 @@ def main() -> None:
         n: {"old_med": [], "old_min": [], "new_med": [], "new_min": []}
         for n in names
     }
+    legs = (("old", old_root), ("new", new_root))
     for r in range(rounds):
-        for tag, root in (("old", old_root), ("new", new_root)):
+        for tag, root in legs if r % 2 == 0 else legs[::-1]:
             got = run_leg(root, names)
-            for n, (med, mn) in got.items():
+            for n in names:
+                med, mn = got[n]
                 acc[n][f"{tag}_med"].append(med)
                 acc[n][f"{tag}_min"].append(mn)
             print(f"round {r} {tag}: " + " ".join(
-                f"{n}={got.get(n, (float('nan'),))[0]:.2f}" for n in names
+                f"{n}={got[n][0]:.2f}" for n in names
             ), flush=True)
     print("\n== summary (median-of-legs of per-leg med | min-of-legs of min) ==")
     for n in names:
         a = acc[n]
-        if not a["old_med"] or not a["new_med"]:
-            print(f"{n}: MISSING LEG DATA")
-            continue
         om = sorted(a["old_med"])[len(a["old_med"]) // 2]
         nm = sorted(a["new_med"])[len(a["new_med"]) // 2]
         print(
