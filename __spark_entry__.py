@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 All real logic lives in the ``etl_wildweb_spark`` package; this module
 is a thin adapter over its registry (etl_wildweb_spark/registry.py).
@@ -26,9 +26,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, in
-    verification-priority order (registry.PRIORITY first)."""
-    return registry.ordered_queries()
+    """One entry per implemented operator from SURVEY.md §2, in name
+    order (independent of the order the operator modules were imported)."""
+    return dict(sorted(registry.QUERIES.items()))
 
 
 def oracle_sql() -> dict[str, str]:

@@ -59,8 +59,8 @@ BENCH_QUERIES = [
     # whose runtime is fixed Python-worker startup, not data-path
     # throughput (covered by tests/test_sources.py instead)
     "wildweb_pipeline",
-    # round-2 operator families (VERDICT r2 #4: the bench must be able
-    # to catch a regression in the newer ~40% of the surface)
+    # newer operator families, so the bench can catch a regression
+    # outside the relational core
     "b38_merge_upsert",
     "b38_merge_upsert_broadcast",
     "b41_scd2_history",
@@ -71,15 +71,14 @@ BENCH_QUERIES = [
     "b29_cc_bigstar",
     "b59_salted_join",
     "b63_quantile_bands",
-    # round-3 additions
     "b32_ppm_decode",
     "b68_cep_kleene",
     "b69_line_dedup",
     "b73_salted_agg",
     "b74_rolling_features",
-    # round-3 session additions (heaviest per family; the tiny
-    # connector/layout demos stay in pytest where their runtime is
-    # fixture cost, not data-path throughput)
+    # heaviest per family (the tiny connector/layout demos stay in
+    # pytest, where their runtime is fixture cost, not data-path
+    # throughput)
     "b75_merge_full",
     "b76_snapshot_diff",
     "b77_interval_union",
@@ -88,39 +87,38 @@ BENCH_QUERIES = [
     "b84_pagerank",
     "b87_skyline",
     "b97_kmeans_update",
-    # mining / prefilter families (this session)
+    # mining / prefilter families
     "b102_markov_transitions",
     "b103_basket_pairs",
     "b104_zscore_outliers",
     "b107_sliding_distinct",
     "b109_heavy_hitters",
     "b110_bloom_prefilter_join",
-    # analytics / time-series families (this session)
+    # analytics / time-series families
     "b112_cohort_ltv",
     "b116_bounce_rate",
     "b119_clamped_balance",
     "b121_linear_interpolate",
-    # round-4: the three ops rewritten off interpreted Catalyst HOFs
+    # the three ops rewritten off interpreted Catalyst HOFs
     # (27x / 9x / 60x measured) — benched to lock the wins
     "b31_repetition_filters",
     "b37_contamination",
     "b29_simhash",
-    # round-5 (VERDICT r4 #8): the heaviest of the 14 never-benched
-    # PRIORITY_NEXT families — iterative closures, blocked linkage,
-    # and the pairwise slice-overlap matrix — so a regression there is
-    # visible before the driver ever times them
+    # iterative closures, blocked linkage and the pairwise
+    # slice-overlap matrix — the heaviest of their families, so a
+    # regression there is visible
     "b120_record_linkage",
     "b128_slice_overlap",
     "b129_hierarchy_closure",
     "b131_dag_path_count",
-    # round-5 additions: vocab coverage (corpus-wide explode+broadcast),
+    # vocab coverage (corpus-wide explode+broadcast),
     # epoch shuffle (per-shard rank windows), PQ encode (Arrow map)
     "b132_vocab_oov",
     "b133_epoch_shuffle",
     "b134_pq_encode",
     "b136_dynamic_partition_pruning",
     "b137_pq_adc_search",
-    # round-6: substring dedup (sliding K-gram corpus frequency —
+    # substring dedup (sliding K-gram corpus frequency —
     # the heaviest text-family explode; benched so regressions show),
     # sketch rollups (KLL + theta set algebra), concat-chunk layout
     # (token-volume shuffle into fixed context windows)
@@ -159,7 +157,7 @@ BENCH_QUERIES = [
     "b173_dbscan_complexes",
     "b174_polygon_geofence",
     "b175_ivfpq_search",
-    # round-8: tokenizer decode round-trip (vocab-distinct decode +
+    # tokenizer decode round-trip (vocab-distinct decode +
     # position-ordered reassembly — NOTE: like b160, re-trains b156's
     # merge table internally, so its bench time is train + decode
     # end-to-end), and the stream-stream LEFT SEMI interval join
@@ -167,25 +165,24 @@ BENCH_QUERIES = [
     # already-benched b175 plus a 10-query exact probe)
     "b176_bpe_decode",
     "b177_stream_semi_join",
-    # round-9: linear quality classifier (gram explode + broadcast
+    # linear quality classifier (gram explode + broadcast
     # weight dim + one doc groupBy).  (b175_ivfpq_observed_sampled is
     # not benched separately, same rationale as the full observed
     # twin: it re-runs the already-benched b175 plus a SAMPLED exact
     # probe; its 16x scaling note lives in SCALE.md)
     "b178_quality_classifier",
-    # round-11 (VERDICT r10 item 8): b180 gets its own bench row after
-    # all — it shares b177's fixed stream-stream machinery, but the
-    # FULL-OUTER eviction-time null emission is the one cost b177
-    # can't represent, and a dedicated row makes it visible
-    # driver-to-driver.  Like b177 it tracks scheduler latency, not
-    # CPU (the md5 calibration can't normalize it).
+    # b180 gets its own bench row: it shares b177's fixed stream-stream
+    # machinery, but the FULL-OUTER eviction-time null emission is the one
+    # cost b177 can't represent, and a dedicated row makes it visible
+    # driver-to-driver.  Like b177 it tracks scheduler latency, not CPU
+    # (the md5 calibration can't normalize it).
     "b180_stream_stream_full_outer",
-    # round-11: suffix-array-quality exact-substring dedup — the
+    # suffix-array-quality exact-substring dedup — the
     # char-granularity sliding-window corpus frequency is the heaviest
     # per-character explode in the engine (one 8-byte hash per corpus
     # char); benched so regressions show
     "b181_exact_substring",
-    # round-12: stream-stream RIGHT OUTER interval join — same
+    # stream-stream RIGHT OUTER interval join — same
     # fixed-machinery scheduler-latency class as b177/b180; a
     # dedicated row so the one-sided eviction cost is visible
     # driver-to-driver (read it through calib like b177/b180)
@@ -197,16 +194,15 @@ BENCH_QUERIES = [
     # 16x scaling note lives in SCALE.md)
 ]
 
-#: Fixed pure-CPU microbenchmark for in-band host-speed calibration
-#: (VERDICT r8 item 3): three rounds running, the judge and builder
-#: burned cycles distinguishing this shared VM's documented ~3x
-#: slow-mode from real regressions by cross-referencing SCALE.md
-#: prose.  md5 over a fixed buffer is single-threaded, allocation-free
-#: and I/O-free, so its wall time tracks exactly the resource the
-#: slow-mode steals (CPU) and nothing a Spark regression could touch.
+#: Fixed pure-CPU microbenchmark for in-band host-speed calibration, so a
+#: shared VM's documented ~3x slow-mode can be told apart from a real
+#: regression without cross-referencing SCALE.md prose.  md5 over a fixed
+#: buffer is single-threaded, allocation-free and I/O-free, so its wall
+#: time tracks exactly the resource the slow-mode steals (CPU) and nothing
+#: a Spark regression could touch.
 CALIB_LOOPS = 2_000_000
-#: Quiet-host reference for CALIB_LOOPS, measured round 9 (4 runs
-#: within ±1%: 0.245-0.247 s).  calib_ratio = measured/ref; SCALE.md
+#: Quiet-host reference for CALIB_LOOPS (4 runs within ±1%:
+#: 0.245-0.247 s).  calib_ratio = measured/ref; SCALE.md
 #: documents the reading: ratio > ~1.3 means the suite ran in a slow
 #: window and per-query regressions need a quiet-host re-measure
 #: before they are believed; ratio ~1.0 means the numbers are real.
@@ -267,9 +263,9 @@ def main() -> None:
             spark.catalog.clearCache()
         return samples
 
-    # Mid-suite calibration series (round-9 find): the before/after
-    # samples can MISS a slow window that starts and stops inside the
-    # suite — observed this round as a contiguous b165–b172 stretch at
+    # Mid-suite calibration series: the before/after samples can MISS
+    # a slow window that starts and stops inside the suite — observed
+    # once as a contiguous b165–b172 stretch at
     # uniform ~2x with median≈min (so the outlier-rerun tripwire,
     # which keys on median≫min, stayed silent), while both endpoint
     # calibrations read ~1.0.  One md5 sample every CALIB_EVERY
@@ -278,7 +274,7 @@ def main() -> None:
     # The series' qi==0 sample (taken before the first query runs) IS
     # the before-suite endpoint — a separate calib_before immediately
     # preceding it double-sampled the same instant and double-entered
-    # the worst-of max (ADVICE r9).
+    # the worst-of max.
     CALIB_EVERY = 10
     calib_series: list[dict] = []
     for qi, name in enumerate(BENCH_QUERIES):
@@ -295,7 +291,7 @@ def main() -> None:
         times[name] = round(sorted(samples)[len(samples) // 2], 3)
         mins[name] = round(min(samples), 3)
 
-    # Outlier re-run (VERDICT r3 #7): a median well above its own min is
+    # Outlier re-run: a median well above its own min is
     # the shared-VM-noise signature (the work can't have grown if one
     # pass finished at min — this host shows 3× bimodal pass times on
     # identical code+data), so those queries get one fresh 3-pass
@@ -304,7 +300,7 @@ def main() -> None:
     # 0.2 s floor keeps sub-second JVM jitter from triggering re-runs.
     # The REPORTED time is the fresh rerun median, not min(med, med2):
     # min-of-medians is a data-dependent downward reselection that can
-    # mask a high-variance real slowdown (ADVICE r4).  Both medians are
+    # mask a high-variance real slowdown.  Both medians are
     # recorded in bench_detail_c{N}.json; selection is the consumer's call.
     reruns: dict[str, dict] = {}
     for name, med in list(times.items()):
@@ -319,12 +315,12 @@ def main() -> None:
     # min-of-3 per query, alongside the median: a busy host inflates
     # median but rarely min, so median≫min flags environment noise,
     # median≈min≫baseline flags a real regression — separable without a
-    # re-run (VERDICT r2 #10).  BOTH per-query maps live in the side
-    # file, NEVER the stdout line: a line carrying the map overflowed
-    # the driver's ~2000-char tail capture in r3 (both maps, 66
-    # queries) and AGAIN in r5 (median map alone, 78 queries) — the
-    # head truncates away and the driver records "parsed": null.
-    # in-band host-speed calibration (VERDICT r8 item 3): the same
+    # re-run.  BOTH per-query maps live in the side file, NEVER the
+    # stdout line: a line carrying the map overflowed the driver's
+    # ~2000-char tail capture twice (both maps at 66 queries, the
+    # median map alone at 78) — the head truncates away and the
+    # driver records "parsed": null.
+    # in-band host-speed calibration: the same
     # fixed CPU work before the suite, every CALIB_EVERY queries, and
     # after; the WORST sample (vs the quiet reference) labels the run,
     # since slow-mode can start or stop mid-suite — and the series
@@ -365,7 +361,7 @@ def summary_line(
     ~140 chars regardless of how many queries are benched, so query
     growth can never overflow the driver's tail capture again
     (regression-pinned by tests/test_bench_contract.py).  calib_ratio
-    rides along so the recorded BENCH_r{N}.json is self-describing:
+    rides along so the recorded line is self-describing:
     a reader can tell a slow-window run (ratio >> 1) from a real
     regression without cross-referencing SCALE.md."""
     line = {

@@ -70,7 +70,7 @@ def sql_cents2(col: str) -> str:
 
 
 def sql_dsum_c4(prod_c4: str, ndigits: int = 2) -> str:
-    """ROUND-13 fast exact twin of :func:`sql_dsum` / :func:`dsum` for
+    """Fast exact twin of :func:`sql_dsum` / :func:`dsum` for
     money expressions whose EXACT value has ≤ 4 decimal places,
     pre-scaled ×10⁴ into a BIGINT product expression (e.g.
     ``sql_cents2(price) * (100 - sql_cents2(discount))``).
@@ -94,11 +94,11 @@ def sql_dsum_c4(prod_c4: str, ndigits: int = 2) -> str:
     At ndigits ≥ 4 the round is a no-op on a 4-dp value and the
     division by 10⁴ is the single rounding on both paths."""
     # D-suffixed divisors: a bare 100.0 parses as DECIMAL(4,1) in Spark
-    # SQL and drags the quotient back into decimal (the b150 round-6
-    # literal lesson); 100.0D forces the double division the
+    # SQL and drags the quotient back into decimal (the b150 literal
+    # lesson); 100.0D forces the double division the
     # bit-identity argument needs.
     #
-    # ADVICE r13: the rounding division runs on the DECIMAL sum and only
+    # The rounding division runs on the DECIMAL sum and only
     # the already-divided quotient becomes BIGINT — casting the raw sum
     # to BIGINT first would reinstate the 2⁶³ ceiling (~9.2·10¹⁸ at ×10⁴
     # scale) the decimal accumulator exists to avoid (ANSI:
@@ -123,8 +123,8 @@ def finite(c: Column | str) -> Column:
     """TRUE iff the double is finite (not NULL/NaN/±Inf).  The
     quarantine predicate for metric columns that feed integer-unit
     casts: round(NaN·1e6)::BIGINT is a whole-query crash under ANSI in
-    Spark and an INT128 conversion error in DuckDB (found by the
-    round-8 NaN probe — the b80-digitless-props class for numerics),
+    Spark and an INT128 conversion error in DuckDB (found by a NaN
+    probe — the b80-digitless-props class for numerics),
     so every value-casting query filters on this, mirrored by
     ``WHERE isfinite(value)`` in its oracle.  At 100 TB a metrics
     pipeline quarantines non-finite readings; it must never crash on

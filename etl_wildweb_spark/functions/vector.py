@@ -37,7 +37,7 @@ def clamp_cos(c: Column) -> Column:
     dot/(sqrt(Σa²)·sqrt(Σb²)) in range, exact ±1.0 beyond it), and
     without it an exact-duplicate pair computes 1 + 2·ulp and diverges
     from the oracle (caught by the degen corpus's planted query-vector
-    duplicate, round 8).  Apply ONLY to non-NULL in-domain values:
+    duplicate).  Apply ONLY to non-NULL in-domain values:
     Spark's least/greatest SKIP nulls, so clamping a NULL would
     manufacture 1.0."""
     return F.greatest(F.lit(-1.0), F.least(F.lit(1.0), c))
@@ -60,8 +60,8 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     ratio = Inf/Inf = NaN — and either way least(1.0, NaN) = 1.0
     (Spark orders NaN greatest), so a corrupt vector would silently
     TOP every descending cosine ranking.  Guarding on the RATIO being
-    non-NaN covers both corruption classes with one predicate (ADVICE
-    round 9; the Inf case found by round-9 code review — probed:
+    non-NaN covers both corruption classes with one predicate (the
+    Inf case found by code review — probed:
     [inf,0]·[1,0] returned 1.0 under the isnan(den)-only guard)."""
     den = norm(a) * norm(b)
     r = dot(a, b) / den

@@ -42,7 +42,7 @@ from ..registry import query
 #: pass-through, so it is typed VARIANT: objects stay objects, numbers
 #: stay numbers, and the submit sink's to_json re-emits the original
 #: JSON values instead of double-encoding them as escaped strings
-#: (ADVICE round 1; golden test: test_resources_raw_json_fragments).
+#: (golden test: test_resources_raw_json_fragments).
 INCIDENT_FIELDS = [
     "ic", "date", "name", "type", "uuid", "acres", "fuels", "inc_num",
     "fire_num", "latitude", "location", "longitude", "resources",

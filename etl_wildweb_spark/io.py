@@ -34,9 +34,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        # events.ts has shipped as parquet TIMESTAMP(NANOS) (round-1
+        # events.ts has shipped as parquet TIMESTAMP(NANOS) (the first
         # corpus) and as TIMESTAMP(MICROS, isAdjustedToUTC=false)
-        # (round-2 corpus).  Normalize BOTH to a session-UTC TIMESTAMP so
+        # (later corpora).  Normalize BOTH to a session-UTC TIMESTAMP so
         # every downstream query sees one canonical type:
         #   * NANOS: Spark's reader rejects it outright — read as raw
         #     int64 via nanosAsLong and truncate ns→µs (DuckDB applies
@@ -217,7 +217,7 @@ def _fs_bytes(spark: SparkSession, path: str) -> int:
 
     Resolves the filesystem from the path's own URI scheme, so
     ``s3a://`` / ``hdfs://`` / ``file:/`` and bare local paths all size
-    correctly (ADVICE round 1: a ``pathlib`` walk only works locally).
+    correctly (a ``pathlib`` walk only works locally).
     """
     jvm = spark._jvm
     jsc = spark._jsc

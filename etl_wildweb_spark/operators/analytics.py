@@ -53,7 +53,7 @@ def b47_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts.  Emits per-stage reach plus the exact summed conversion
     gap in integer microseconds (averages are a downstream division).
 
-    Scale (ROUND-13, guide §2.4 — the previous stage-chained form
+    Scale (guide §2.4 — the previous stage-chained form
     re-scanned events per stage and per summary join, NINE scans and
     five user-keyed joins in the physical plan): ONE shuffle on
     user_id builds each user's time-sorted stage-event list (bounded
@@ -209,7 +209,7 @@ _CEP_GAP_US = 48 * 3600 * 1_000_000
     """,
 )
 def b68_cep_kleene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VARIABLE-LENGTH CEP (VERDICT r2 #8): the MATCH_RECOGNIZE pattern
+    """VARIABLE-LENGTH CEP: the MATCH_RECOGNIZE pattern
     ``view click+ purchase`` with a per-step gap bound — Kleene-plus
     click runs of ANY length, which b52's fixed lag-taps cannot
     express.  The Kleene closure is computed by GAP SESSIONIZATION,
@@ -441,7 +441,7 @@ def b74_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak is needed for determinism.  The rolling sum is integer
     micro-units (round(value*1e6) per row, BIGINT window sum) — exact
     and hash-stable; the DECIMAL(38,6) form was value-correct but
-    came back float64 through DuckDB's pandas path (round-4 red).
+    came back float64 through DuckDB's pandas path.
 
     Scale: one (user_id)-hash exchange + per-partition sort shared by
     both features; the frame advances with two pointers over the
@@ -756,12 +756,12 @@ def b84_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").cast("bigint").alias("dst"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        # ROUND-13 OPTIMIZATION (guide §5 — materialize shared
-        # subtrees): the nation-graph edges (≤ nations² rows) feed
-        # outw plus every unrolled iteration — without the checkpoint
-        # the initial plan replays the fact-scale 4-table join per
-        # reference (56 parquet scans in
-        # plans/r13/b84_pagerank_before.txt, 8 after — the surviving scans are the 25-row nation table per unrolled iteration)
+        # Optimization (guide §5 — materialize shared subtrees): the
+        # nation-graph edges (≤ nations² rows) feed outw plus every
+        # unrolled iteration — without the checkpoint the initial plan
+        # replays the fact-scale 4-table join per reference (56 parquet
+        # scans before, 8 after — the surviving scans are the 25-row
+        # nation table per unrolled iteration)
         .localCheckpoint(eager=True)
     )
     nodes = n.select(F.col("n_nationkey").cast("bigint").alias("node"))
@@ -1119,10 +1119,10 @@ def b129_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive-hierarchy closure: each user hangs in a reporting tree
     via parent(u) = (u−1) div 3 (root 0) and the operator emits every
     node's depth.  The oracle walks the tree with DuckDB's WITH
-    RECURSIVE; through round 12 the engine side mirrored it with a
+    RECURSIVE; an earlier engine side mirrored it with a
     pointer-doubling jump-table loop (≈⌈log₂(depth)⌉ joined rounds).
 
-    ROUND-13 OPTIMIZATION (guide §8 — use what the optimizer cannot
+    Optimization (guide §8 — use what the optimizer cannot
     know): the parent EDGE IS A FORMULA, not data, so depth needs no
     graph traversal at all.  parent(u) = (u−1) div 3 means the ids at
     depth d are exactly ((3^d−3)/2, (3^(d+1)−3)/2] — a fixed integer
@@ -1131,7 +1131,7 @@ def b129_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression per distinct id: zero joins, zero iterative rounds,
     zero driver round-trips, one exchange (the distinct) in the whole
     query — vs ~⌈log₂(depth)⌉ join+checkpoint+collect rounds before
-    (measured 0.87 s → ~0.1 s at sf0.1; OPTIMIZATION_r13.md).  The
+    (measured 0.87 s → ~0.1 s at sf0.1).  The
     thresholds are exact integers, so there is no float-log boundary
     risk, and negative/zero ids keep their depth-0 fixpoint semantics
     (the oracle's walk never starts for them).  Equivalence with a
@@ -1174,30 +1174,28 @@ def b129_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def b131_dag_path_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """General DAG reachability WITH path counting (VERDICT r3 #6,
-    extending b129's depth-only closure): each user id hangs in a DAG
+    """General DAG reachability WITH path counting (extending b129's
+    depth-only closure): each user id hangs in a DAG
     with TWO parent edges — u → u div 2 and u → (u−1) div 3 (root 0,
     parallel edges deduped) — and the operator computes the exact
     number of distinct root paths per observed user.  The oracle is
     DuckDB's WITH RECURSIVE over the identical edge rule.
 
-    ROUND-13 OPTIMIZATION (guide §8): through round 12 the engine ran
-    a two-phase distributed fixpoint (frontier closure + level-
-    synchronous DP — ~2·log₂(max id) rounds of joins, checkpoints and
-    scalar collects).  But the parent EDGES ARE FORMULAS, not data:
-    pc(u) is a pure function of u alone — pc(0)=1, pc(u) = Σ pc(p)
-    over p ∈ distinct{u div 2, (u−1) div 3} — so the whole DAG walk
-    evaluates per row with an explicit-stack memoized recursion (depth
-    ≤ ⌈log₂ u⌉ ≤ 63; parents strictly decrease, so it terminates and
-    never leaves [0, u]).  One Arrow-batched mapInPandas pass over the
-    distinct ids replaces every one of the ~34 iterative rounds:
-    3.4 s → ~0.35 s at sf0.1, plan goes from dozens of exchanges
-    across ~70 jobs to exactly one exchange (the distinct) and one
-    job (OPTIMIZATION_r13.md; plans/r13/b131_dag_path_count_*.txt).
-    The memo is built once per task (guide §4.5) and shared across
-    that task's ids, so shared ancestor chains are walked once —
-    per-task work is O(ids · depth) dict hits worst case, the same
-    closure-sized state the DP materialized, minus every shuffle.
+    Optimization (guide §8): an earlier engine ran a two-phase distributed
+    fixpoint (frontier closure + level-synchronous DP — ~2·log₂(max id)
+    rounds of joins, checkpoints and scalar collects).  But the parent
+    EDGES ARE FORMULAS, not data: pc(u) is a pure function of u alone —
+    pc(0)=1, pc(u) = Σ pc(p) over p ∈ distinct{u div 2, (u−1) div 3} — so
+    the whole DAG walk evaluates per row with an explicit-stack memoized
+    recursion (depth ≤ ⌈log₂ u⌉ ≤ 63; parents strictly decrease, so it
+    terminates and never leaves [0, u]).  One Arrow-batched mapInPandas
+    pass over the distinct ids replaces every one of the ~34 iterative
+    rounds: 3.4 s → ~0.35 s at sf0.1, plan goes from dozens of exchanges
+    across ~70 jobs to exactly one exchange (the distinct) and one job.
+    The memo is built once per task (guide §4.5) and shared across that
+    task's ids, so shared ancestor chains are walked once — per-task work
+    is O(ids · depth) dict hits worst case, the same closure-sized state
+    the DP materialized, minus every shuffle.
 
     The split of labor in this family is deliberate: b29's CC engines
     iterate because their edges ARE data; here the edge function is
@@ -1319,13 +1317,13 @@ def b152_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     a = g.select("event_type", "m", F.col("user_id").alias("u"))
     b = g.select("event_type", "m", F.col("user_id").alias("v"))
-    # ROUND-13 OPTIMIZATION (guide §3.3/§5 — materialize shared
-    # subtrees): edges feeds deg (twice, via the union) and the
-    # orientation join, and arcs feeds the wedge join THREE times
-    # (e1/e2/e3) — without checkpoints the initial plan replays the
-    # corpus-scale cell self-join per reference (180 parquet scans in
-    # plans/r13/b152_triangle_count_before.txt, 0 after — the final plan roots at the two checkpoints).  Both frames
-    # are dup-graph-sized, so the materialization is trivial next to
+    # Optimization (guide §3.3/§5 — materialize shared subtrees): edges
+    # feeds deg (twice, via the union) and the orientation join, and
+    # arcs feeds the wedge join THREE times (e1/e2/e3) — without
+    # checkpoints the initial plan replays the corpus-scale cell
+    # self-join per reference (180 parquet scans before, 0 after — the
+    # final plan roots at the two checkpoints).  Both frames are
+    # dup-graph-sized, so the materialization is trivial next to
     # what it saves (interleaved A/B at sf0.1: med 3.6–4.0 s → 2.0–2.3 s).
     edges = (
         a.join(b, ["event_type", "m"])
@@ -1379,12 +1377,12 @@ MARKOV_ITERS = 48
 
 
 def _markov_oracle(iters: int = MARKOV_ITERS) -> str:
-    """Unrolled-CTE oracle for b165 (the b84_pagerank method, VERDICT
-    r12 item 5): rebuild the per-user chains and transition counts in
-    SQL, then walk `iters` exact-integer power steps for the base
-    chain AND every single-channel-removed variant in one relational
-    fan-out (variant = a cross-join dimension), with per-edge floor
-    division identical to the engine's Python-int replica."""
+    """Unrolled-CTE oracle for b165 (the b84_pagerank method): rebuild the
+    per-user chains and transition counts in SQL, then walk `iters`
+    exact-integer power steps for the base chain AND every
+    single-channel-removed variant in one relational fan-out (variant = a
+    cross-join dimension), with per-edge floor division identical to the
+    engine's Python-int replica."""
     steps = "".join(
         f"""
     v{k + 1} AS MATERIALIZED (
@@ -1489,7 +1487,7 @@ def b165_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect is 1 − P(conv | c's transitions redirected to null), and
     attribution shares are the normalized effects.
 
-    EXACT since r13 (VERDICT r12 item 5, the b84_pagerank method): the
+    EXACT (the b84_pagerank method): the
     absorbing-chain probabilities are DEFINED as MARKOV_ITERS = 48 steps
     of the pure-integer recurrence v′(j) = Σᵢ ⌊v(i)·n(i,j)/rowsum(i)⌋
     (+ absorber carry-over) from 10¹² fixed-point mass at __start__,
@@ -1601,7 +1599,7 @@ def b165_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = conv_mass(None)
     # base == 0 (a corpus with no conversions) must yield zero effect
     # for every channel — `1 - 0` would hand each channel an equal
-    # nonzero share despite nothing to attribute (ADVICE r6).
+    # nonzero share despite nothing to attribute.
     effects = {
         c: max(0, (1_000_000 * (base - conv_mass(c))) // base)
         if base > 0
@@ -1688,7 +1686,7 @@ def b171_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE walk).  A day where everyone remaining converts (d = n) drives
     s to exactly 0 and it stays there — no NULL sentinel needed.
 
-    VERDICT r12 item 2: this previously emitted cumulative
+    This previously emitted cumulative
     round(10⁶·ln((n−d)/n)) micro-nats, one libm ulp from flipping on
     an unlucky corpus (SCALE.md round-12 addendum 4); ln S(t) — and
     the classic Greenwood variance — are downstream display scalars of

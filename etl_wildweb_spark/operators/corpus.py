@@ -402,7 +402,7 @@ _Z_BITS = 10
 #: fixed-shift bucketing is well-populated at every scale).
 _Z_NBUCKETS = 32
 #: Z-range width per bucket, DERIVED so the two constants cannot
-#: drift (review finding r6: a hardcoded shift made _Z_NBUCKETS dead).
+#: drift (a hardcoded shift once made _Z_NBUCKETS dead).
 _Z_BSHIFT = (1 << (2 * _Z_BITS)) // _Z_NBUCKETS
 
 
@@ -579,7 +579,7 @@ def b150_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
                  -- every float literal is D-suffixed: Spark parses a
                  -- bare 1.0 as DECIMAL and its decimal division
                  -- truncates at ~1e-7, silently diverging from the
-                 -- oracle's pure-double arithmetic (round-6 find)
+                 -- oracle's pure-double arithmetic
                  CAST(round(1000000D * (
                    ln(1.0D + ((SELECT count(*) FROM docs_bm25_v) - dfq.df + 0.5D)
                             / (dfq.df + 0.5D))
@@ -660,7 +660,7 @@ def b155_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometric-mean view (true perplexity, a ln) is a downstream
     display scalar.
 
-    VERDICT r12 item 2: this previously summed round(−10⁶·ln p) terms
+    This previously summed round(−10⁶·ln p) terms
     whose libm rounding sat one ulp from flipping on an unlucky corpus
     (SCALE.md round-12 addendum 4); the arithmetic-mean-probability
     gate carries the same low-quality-tail signal — documents of
@@ -689,7 +689,7 @@ def b155_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(bigrams).alias("b"))
         .select("doc_id", F.col("b.0").alias("w1"), F.col("b.1").alias("w2"))
     )
-    # ROUND-13 OPTIMIZATION (guide §2.4): Spark inlines SQL CTEs, so
+    # Optimization (guide §2.4): Spark inlines SQL CTEs, so
     # the previous single-statement form recomputed the corpus bigram
     # explode FOUR times (lm counts, the pre marginal, the vocabulary
     # scalar subquery, and the per-doc join below).  The LM table is
@@ -781,7 +781,7 @@ def b157_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("p0", "token")
     ).select("doc_id", "token", (F.col("p0") + 1).cast("bigint").alias("p"))
-    # NOT materialized (round-13 A/B): posting feeds both the df
+    # NOT materialized (measured by A/B): posting feeds both the df
     # rollup and the join probe, but the df branch's replay is COLUMN
     # PRUNED to (token, doc_id) — an eager checkpoint would
     # materialize the heavy positions strings for a branch that never
@@ -838,7 +838,7 @@ def b158_pmi_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     display scalar (ln of the emitted exact ratio) and never touches a
     hash-compared column.
 
-    VERDICT r12 item 2: the previous round(10⁶·ln(...)) micro-nat
+    The previous round(10⁶·ln(...)) micro-nat
     column sat one libm ulp from flipping on an unlucky corpus
     (SCALE.md round-12 addendum 4); the floor-scaled integer ratio is
     bit-identical in both engines.  Floor collisions between ratios
@@ -862,7 +862,7 @@ def b158_pmi_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = lift_parallelism(d, "doc_id").select(
         F.explode(bigrams).alias("b")
     ).select(F.col("b.0").alias("w1"), F.col("b.1").alias("w2"))
-    # ROUND-13 OPTIMIZATION (guide §2.4): the single-statement form
+    # Optimization (guide §2.4): the single-statement form
     # inlined the cnt CTE into every consumer (c1, c2, the N scalar
     # subquery, scored), re-exploding the corpus four times.  cnt is
     # vocabulary²-sized — materialize it once; every downstream table
@@ -940,7 +940,7 @@ def b161_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slice() throws INVALID_PARAMETER_VALUE.LENGTH on a negative
     # length, so a 1- or 2-token doc (n-2 ≤ 0) would crash the whole
     # query at runtime; clamp to 0 so short docs contribute zero grams
-    # — exactly what the oracle's range(1, len(t)-1) yields (ADVICE r6).
+    # — exactly what the oracle's range(1, len(t)-1) yields.
     n = F.greatest(F.size(toks) - 2, F.lit(0))
     grams = F.zip_with(
         F.slice(toks, F.lit(1), n),
@@ -951,7 +951,7 @@ def b161_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda a, bc: F.concat_ws(" ", a, bc),
     )
-    # ROUND-13 OPTIMIZATION (guide §2.4): the previous
+    # Optimization (guide §2.4): the previous
     # distinct → groupBy(min) → join-back plan consumed the distinct
     # (source, gram) frame twice (2 corpus explodes) and shuffled the
     # gram strings three times (distinct, firsts, join).  One
@@ -960,8 +960,8 @@ def b161_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # membership), and array_min(set) IS the first source (binary
     # string min, identical to min()).  One explode, ONE row-scale
     # shuffle (map-side combined), bounded sets (≤ |sources| per gram).
-    # ADVICE r13: collect_set silently DROPS null elements, while the
-    # r12 distinct+join plan (and the DuckDB oracle's GROUP BY source)
+    # collect_set silently DROPS null elements, while the earlier
+    # distinct+join plan (and the DuckDB oracle's GROUP BY source)
     # kept a NULL-source group — a latent hash divergence if
     # documents.source were ever null.  The corpus fixture guarantees
     # non-null sources (TESTDATA.md); make that invariant explicit and

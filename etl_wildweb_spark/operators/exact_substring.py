@@ -1,7 +1,7 @@
 """Suffix-array-quality EXACT-SUBSTRING dedup (SURVEY.md beyond-§2;
-VERDICT r10 item 3 — the round-11 upgrade of b139's K-gram-anchor
-approximation to the full ExactSubstr semantics of Lee et al. 2022,
-"Deduplicating Training Data Makes Language Models Better").
+the upgrade of b139's K-gram-anchor approximation to the full
+ExactSubstr semantics of Lee et al. 2022, "Deduplicating Training Data
+Makes Language Models Better").
 
 b139 (operators/text.py) deduplicates TOKEN-level spans repeated across
 >= 2 DISTINCT DOCUMENTS.  True suffix-array ExactSubstr differs in two

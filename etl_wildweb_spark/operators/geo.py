@@ -36,7 +36,7 @@ def _coord(key: F.Column, salt: str) -> F.Column:
     return hash_bucket(F.concat(key.cast("string"), F.lit(salt)), GEO_SPAN_MICRO)
 
 
-#: Half-ring probe offsets (ROUND-13 OPTIMIZATION, guide §2.3: shuffle
+#: Half-ring probe offsets (optimization, guide §2.3: shuffle
 #: fewer bytes — here, fewer rows).  The classic 3×3 probe visits every
 #: qualifying pair TWICE (a probes b's cell and b probes a's), then
 #: filters half away AFTER the join has shuffled and matched them.  The
@@ -171,7 +171,7 @@ def b166_spatial_cell_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (probe side explodes over the half ring, build side stays in
     its own cell) — no distinct needed.
 
-    ROUND-13 OPTIMIZATION (guide §2.3: shuffle fewer rows): the probe
+    Optimization (guide §2.3: shuffle fewer rows): the probe
     side now explodes over the 5-offset HALF ring (_HALF_RING) instead
     of the full 3×3, finding each unordered pair exactly once instead
     of twice-then-filter — 44% fewer probe rows through the join
@@ -253,7 +253,7 @@ def b167_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     are a different query; expand the ring for unbounded k-NN).
     Distance ties break on neighbor id — integer-deterministic.
 
-    ROUND-13 OPTIMIZATION (guide §2.3): candidates come from the
+    Optimization (guide §2.3): candidates come from the
     shared half-ring pair generator (_radius_pairs — 5 probe offsets,
     each unordered pair joined and distance-verified once) and the
     per-point directionality the rank window needs is restored by
@@ -570,7 +570,7 @@ def b173_dbscan_complexes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"lat div {GEO_RADIUS_MICRO}").alias("cx"),
         F.expr(f"lon div {GEO_RADIUS_MICRO}").alias("cy"),
     )
-    # ROUND-13 OPTIMIZATION (guide §2.3): ε-edges from the shared
+    # Optimization (guide §2.3): ε-edges from the shared
     # half-ring generator — each unordered pair joined and verified
     # once, then mirrored by a narrow explode into the both-direction
     # edge list the core/CC/border stages consume (the old 9-offset

@@ -390,13 +390,13 @@ def b41_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream_scd1_snapshot / stream_incremental_agg are library functions
 # exercised by tests/test_merge.py; these thin rows-only queries stage
 # the events table as a 4-file stream and run them end-to-end so the
-# driver executes the incremental-maintenance paths too (VERDICT r2 #5),
+# driver executes the incremental-maintenance paths too,
 # not just pytest.
 
 
 @query(
     "b66_stream_scd1",
-    # EXACT-oracled since round 9 (was rows-only): max_by over the
+    # EXACT-oracled (was rows-only): max_by over the
     # (ts, event_id) struct is a deterministic lexicographic latest —
     # event_id breaks ts ties — and the per-batch merge is
     # order-independent, so the final snapshot is the batch latest-row
@@ -443,11 +443,11 @@ def b66_stream_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b67_stream_incremental_agg",
-    # EXACT-oracled since round 9 (was rows-only): the MV's entire
+    # EXACT-oracled (was rows-only): the MV's entire
     # design goal is bit-identity with the one-shot batch aggregate
     # (count + exact DECIMAL sum are associative merges), so the batch
     # aggregate IS the oracle.  Non-finite readings are quarantined at
-    # the stream input like every value-casting query (the r8 rule:
+    # the stream input like every value-casting query (because
     # the cast to DECIMAL throws on NaN/Inf in both engines).
     oracle="""
     SELECT event_type, count(*) AS n,

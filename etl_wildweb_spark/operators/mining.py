@@ -59,7 +59,7 @@ def b101_group_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     and any nats/bits change of base — is a downstream display scalar;
     no transcendental touches the emitted (hash-compared) columns.
 
-    VERDICT r12 item 2: this query previously emitted Shannon N·H in
+    This query previously emitted Shannon N·H in
     rounded micro-nats, whose round(10⁶·c·ln c) terms sat one libm ulp
     away from flipping on an unlucky corpus (SCALE.md round-12
     addendum 4 measured the margin; two ==-boundary oracle bugs in two
@@ -164,7 +164,7 @@ def b103_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders containing both; keep pairs with support ≥ 2.
 
     Scale: the classic per-basket pair expansion, in ONE basket-keyed
-    pass (ROUND-13, guide §2.4): collect_set per order deduplicates
+    pass (guide §2.4): collect_set per order deduplicates
     the basket in the same map-side-combined shuffle that clusters it
     (the previous distinct → self-join plan recomputed the distinct
     frame for both join sides and re-exchanged each on l_orderkey —
@@ -492,31 +492,28 @@ def b113_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: revenue rollup is one partkey shuffle with map-side combine;
     the ranking then runs over the PART-cardinality rollup, not the
-    fact table.  Through round 9 that ranking was a single-direction
-    global window — the bounded-report shape, fine while the rollup
-    fits one partition.  Since round 10 it IS the b87-style two-phase
-    prefix scan the old docstring promised (VERDICT r9 item 6):
-    bucket the rollup into 64 equal-width cents ranges, run the
-    cumulative sum and row_number PER BUCKET in parallel, aggregate
-    one (sum, count) row per bucket, take the exclusive prefix over
-    that ≤64-row summary (a single-partition window over ≤64 rows),
-    and broadcast it back as per-bucket base offsets.  cum =
-    base_cents + local_cum and rk = base_rk + local_rk are exact
-    because bucket b's cents are strictly greater than bucket b+1's
-    (equal-width ranges on the DESC key are order-monotonic and ties
-    share a bucket).
+    fact table.  The ranking is a b87-style two-phase prefix scan, not a
+    single-direction global window (the bounded-report shape, fine only
+    while the rollup fits one partition): bucket the rollup into 64
+    equal-width cents ranges, run the cumulative sum and row_number PER
+    BUCKET in parallel, aggregate one (sum, count) row per bucket, take
+    the exclusive prefix over that ≤64-row summary (a single-partition
+    window over ≤64 rows), and broadcast it back as per-bucket base
+    offsets.  cum = base_cents + local_cum and rk = base_rk + local_rk are
+    exact because bucket b's cents are strictly greater than bucket b+1's
+    (equal-width ranges on the DESC key are order-monotonic and ties share
+    a bucket).
 
-    Round 11 (ADVICE r10 item 1): the bucket bounds moved from a
-    driver hop over a persisted rollup INTO the plan as a broadcast
-    scalar subquery — rev ⨝ broadcast(rev.agg(min,max)), a 1-row
-    BroadcastNestedLoopJoin.  That removes both the ownerless
-    rev.persist() (which leaked a cache entry per invocation in
-    long-lived sessions) and the separate bounds job: Catalyst's
-    ReusedExchange shares the single partkey-rollup shuffle across
-    all three consumers (bounds agg, per-bucket windows, bucket
+    The bucket bounds live IN the plan as a broadcast scalar subquery, not
+    a driver hop over a persisted rollup — rev ⨝
+    broadcast(rev.agg(min,max)), a 1-row BroadcastNestedLoopJoin.  That
+    removes both the ownerless rev.persist() (which leaked a cache entry
+    per invocation in long-lived sessions) and the separate bounds job:
+    Catalyst's ReusedExchange shares the single partkey-rollup shuffle
+    across all three consumers (bounds agg, per-bucket windows, bucket
     summary), so lineitem is scanned and shuffled exactly once per
-    invocation with NO cache at all.  Exchange-visible shape pinned
-    in tests/test_plans.py; oracle unchanged."""
+    invocation with NO cache at all.  Exchange-visible shape pinned in
+    tests/test_plans.py; oracle unchanged."""
     li = table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint")).alias(
@@ -540,10 +537,9 @@ def b113_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ascending _b == descending cents range; ties (same cents) share a
     # bucket, so per-bucket (cents DESC, partkey) order IS global order.
     # `div` keeps the bucket id exact bigint arithmetic end-to-end
-    # (ADVICE r11 item 1): float division is monotone so semantics
-    # would survive, but the exactness argument above only holds if
-    # neither the width nor the bucket expression round-trips through
-    # doubles.
+    # (float division is monotone so semantics would survive, but the
+    # exactness argument above only holds if neither the width nor the
+    # bucket expression round-trips through doubles).
     bucketed = (
         rev.crossJoin(F.broadcast(bounds))
         .withColumn("_w", width)
@@ -1013,7 +1009,7 @@ def b147_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-group VALUE DOMAIN (the b50/b63 shape); the deviation
     histogram, the MAD, and the outlier count are all DERIVED from
     that histogram by re-keying it on |cents − med| and summing counts
-    — the raw rows are never touched again (round 13: the original
+    — the raw rows are never touched again (the original
     recomputed the row-level deviation frame twice, scanning orders
     three times; every downstream quantity is a function of the value
     histogram, so two of the scans and both row-level re-aggregations
@@ -1310,7 +1306,7 @@ def b164_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag compares integers (the b147/b149 decision-predicate rule).
 
     Degenerate groups get an explicit NULL statistic instead of
-    NaN/Inf (ADVICE r6): one row per arm (n_a+n_b ≤ 2, zero degrees of
+    NaN/Inf: one row per arm (n_a+n_b ≤ 2, zero degrees of
     freedom) or zero pooled variance (both arms constant — checked as
     min(y) = max(y) on the EXACT integers, which cannot overflow at
     any scale, unlike the moment form n·Σy² − (Σy)² whose DECIMAL(38,0)
@@ -1366,8 +1362,8 @@ def b164_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is constant ⟺ its variance is exactly 0.  The moment form
     # n·Σy² − (Σy)² is equivalent but its DECIMAL(38,0) intermediates
     # can exceed 38 digits at scale (ANSI throw / silent NULL) while
-    # DuckDB's HUGEINT cannot — min/max has no intermediate at all
-    # (ADVICE r7).  The double ssq − (s/n)·s form is worse still:
+    # DuckDB's HUGEINT cannot — min/max has no intermediate at all.
+    # The double ssq − (s/n)·s form is worse still:
     # cancellation residue could disagree with DuckDB at the boundary.
     degenerate = (
         (F.col("na") + F.col("nb") <= 2)

@@ -241,8 +241,8 @@ def b32_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def b32_fake_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST FIXTURE (retired from the registry, VERDICT r3 item 3 —
-    superseded by b32_ppm_decode's real pixel decode): the
+    """TEST FIXTURE (retired from the registry — superseded by
+    b32_ppm_decode's real pixel decode): the
     decode/feature-extract operator shape — mapInPandas over
     (doc_id, blob) with Arrow batching.  Blob column pruned at the scan
     when untouched; only this operator pays for the bytes."""
@@ -290,8 +290,8 @@ def fake_resize_batches(
 
 
 def b32_fake_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST FIXTURE (retired from the registry, VERDICT r3 item 3 —
-    superseded by b32_ppm_resize's real pixel resize): the
+    """TEST FIXTURE (retired from the registry — superseded by
+    b32_ppm_resize's real pixel resize): the
     resize/thumbnail operator shape — mapInPandas over the
     blob column with a bounded-size output contract (every input maps
     to ≤ RESIZE_TARGET bytes).  Same pruning/batching story as decode;
@@ -469,8 +469,7 @@ def b146_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotently (os.replace per file) on each invocation, with an
     atexit rmtree — the returned frame reads the directory lazily, so
     an eager per-invocation rmtree is impossible, and an mkdtemp per
-    call would otherwise accumulate 200 files per run (review
-    finding r6)."""
+    call would otherwise accumulate 200 files per run."""
     d = (
         table(spark, sf_dir, "documents")
         .select("doc_id", "text")

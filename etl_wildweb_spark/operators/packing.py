@@ -194,7 +194,7 @@ def b142_concat_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the unpartitioned exclusive-sum window below is bounded by
     # construction (the pq_codebooks argument), and the whole plan
     # stays LAZY: no driver-side collect at build time, so schema-only
-    # introspection of this query executes nothing (review finding r6).
+    # introspection of this query executes nothing.
     from pyspark.sql.window import Window as W
 
     shard_w = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
@@ -229,7 +229,7 @@ def b142_concat_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         toks.groupBy(
-            # integer `div`, never float `/`+cast (the ADVICE r5 rule)
+            # integer `div`, never float `/`+cast (exact at any size)
             F.expr(f"gpos div {CHUNK}").alias("chunk_id")
         )
         .agg(

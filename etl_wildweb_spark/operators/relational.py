@@ -72,7 +72,7 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(
-            # ROUND-13: long-cents products + decimal(38,0) sum — the
+            # long-cents products + decimal(38,0) sum — the
             # bit-identical fast path of dsum (functions/exact.py
             # sql_dsum_c4; the b09 rewrite's shared helper)
             F.expr(
@@ -136,7 +136,7 @@ def b03_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            # ROUND-13: long-cents fast path (×100 lifts the 2-dp
+            # long-cents fast path (×100 lifts the 2-dp
             # column to the helper's ×10⁴ grain; see functions/exact.py)
             F.expr(
                 sql_dsum_c4(f"{sql_cents2('o_totalprice')} * 100")
@@ -168,7 +168,7 @@ def b04_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             F.sum("l_quantity").alias("sum_qty"),
-            # ROUND-13: long-cents fast path (see b03 / functions/exact.py)
+            # long-cents fast path (see b03 / functions/exact.py)
             F.expr(
                 sql_dsum_c4(f"{sql_cents2('l_extendedprice')} * 100")
             ).alias("sum_price"),
@@ -461,7 +461,7 @@ def b09_agg_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9: TPC-H Q1 — hash aggregation with partial (map-side) combine,
     which Spark applies automatically; only 4 groups cross the shuffle.
 
-    ROUND-13 OPTIMIZATION (guide §2.3 narrower types / §1.2 per-task
+    Optimization (guide §2.3 narrower types / §1.2 per-task
     work): the per-row decimal(18,6) casts and decimal×decimal products
     ran the whole aggregate through the non-compact BigDecimal path —
     measured 1.47 s vs 0.40 s for the same plan on primitive longs at
@@ -499,8 +499,8 @@ def b09_agg_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (IntegralDivide is LONG-typed and truncates exactly), and the
     # undivided base sum casts decimal→DOUBLE directly — both avoid the
     # 2⁶³ ceiling a premature BIGINT cast of the raw sum would
-    # reinstate (ADVICE r13, the sql_dsum_c4 ordering fix applied
-    # consistently); decimal→double and bigint→double conversions of
+    # reinstate (the sql_dsum_c4 ordering, applied consistently);
+    # decimal→double and bigint→double conversions of
     # the same integer are both correctly rounded, hence bit-identical
     return agg.select(
         "l_returnflag",

@@ -183,7 +183,7 @@ _MIX_TARGET = 200
     quota AS (
       -- CAST to BIGINT: DuckDB's sum(BIGINT) is HUGEINT, and HUGEINT
       -- division results coerce to float64 through the pandas path,
-      -- which broke the round-4 value hash despite identical values.
+      -- which broke the value hash despite identical values.
       SELECT source, n, w,
              CAST(({_MIX_TARGET} * w) // (SELECT sum(w) FROM weighted)
                   AS BIGINT) AS q
@@ -360,7 +360,7 @@ def b133_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _b144_oracle() -> str:
     # dedup has no import back into sampling (verified), so the oracle
     # assembles through the normal decorator path — no registry
-    # mutation side-channel (review finding r6)
+    # mutation side-channel
     from .dedup import _CC_ORACLE_PREFIX, NGRAM_THRESHOLD, SQL_SHINGLES
 
     bucket = SQL_BUCKET.format(key="t.cluster_id", n=100)

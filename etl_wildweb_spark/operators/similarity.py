@@ -145,7 +145,7 @@ def ivf_centroids(vectors: DataFrame, dim: int) -> DataFrame:
     assigned = assign_cells(vectors, seeds, n_probe=1).select(
         "cell", "embedding"
     )
-    # ROUND-13 OPTIMIZATION (guide §5 caching rule): every caller
+    # Optimization (guide §5 caching rule): every caller
     # consumes the centroid table at least twice (corpus assignment +
     # query probes), and each reference would replay the corpus-wide
     # seed-assignment window plus both refinement shuffles.  The table
@@ -211,7 +211,7 @@ def b30_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     dim = 64
     planes = hyperplanes(spark, dim)
-    # NOT materialized (round-13 A/B): both probe and corpus sides
+    # NOT materialized (measured by A/B): both probe and corpus sides
     # read the signature table, but its replay is a broadcast fan-out
     # in codegen — cheaper than an eager checkpoint (1.39 → 1.62 s
     # min-of-3 at sf0.1 with the checkpoint; guide §1 keeps the
@@ -365,10 +365,10 @@ def ann_with_recall(
 
 @query("b30_ann_lsh_observed")  # approximate → rows-only; recall rides along
 def b30_ann_lsh_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B30: the LSH path with its recall@10-vs-exact probe attached as
-    an observe() metric (ADVICE round 1: surface ANN recall as an
-    observable).  tests/test_llmops.py asserts the observed recall
-    meets the same threshold the offline test enforces."""
+    """B30: the LSH path with its recall@10-vs-exact probe attached as an
+    observe() metric, so ANN recall is observable.  tests/test_llmops.py
+    asserts the observed recall meets the same threshold the offline test
+    enforces."""
     return ann_with_recall(spark, sf_dir, "lsh")[0]
 
 
@@ -525,8 +525,7 @@ PQ_K = 16
 # b134 packs the PQ_SUBSPACES codes into ONE BIGINT with radix PQ_K
 # (acc·PQ_K + code); the packed value must fit a signed 64-bit int.
 # Guard the geometry here so raising either constant is a loud import
-# error, not silent code collisions / overflow in packed_codes
-# (ADVICE r7).
+# error, not silent code collisions / overflow in packed_codes.
 if PQ_K ** PQ_SUBSPACES > 2**62:
     raise ValueError(
         f"PQ geometry unpackable: PQ_K**PQ_SUBSPACES = {PQ_K}**{PQ_SUBSPACES} "
@@ -925,12 +924,12 @@ def _ivfpq_topk(
 
 @query("b175_ivfpq_observed")  # measured recall of an approximation → rows-only
 def b175_ivfpq_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b175's accuracy as a driver-visible RESULT (VERDICT r7 item 7):
+    """b175's accuracy as a driver-visible RESULT:
     per query, how many of the composed IVF-PQ top-{TOP_K} appear in
     the EXACT L2 top-{TOP_K} — (query_id, n_hits, recall_ppm), one row
     per query vector.  The b30_ann_*_observed twins surface recall as
     an observe() metric riding the ANN rows; this emits it as the rows
-    themselves so the driver window records the composition's quality
+    themselves so the driver records the composition's quality
     every time it runs, not only when pytest does.
 
     Deterministic despite measuring an approximation: both top-k sets
@@ -959,7 +958,7 @@ SAMPLE_TAKE = 4
 
 @query("b175_ivfpq_observed_sampled")  # measured recall on a sample → rows-only
 def b175_ivfpq_observed_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b175_ivfpq_observed's production form (VERDICT r8 item 6): the
+    """b175_ivfpq_observed's production form: the
     exact-L2 ground-truth probe is LINEAR in the corpus by definition
     — it computes ground truth — so at 100 TB the recall measurement
     runs on a deterministic md5 CORPUS SAMPLE (SAMPLE_TAKE of
@@ -1084,7 +1083,7 @@ def b154_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     reintroduce float repr, so it is deliberately not applied here.
     Distance preservation is pinned in tests/test_llmops.py.
 
-    Engine shape — ROUND-13 OPTIMIZATION (guide §4.2): one narrow
+    Engine shape — optimization (guide §4.2): one narrow
     zero-shuffle pass, as before, but the per-row work moved from 16
     aggregate(zip_with(...)) Catalyst folds to ONE int64 numpy matmul
     per Arrow batch.  Higher-order-function lambdas are
@@ -1206,7 +1205,7 @@ def b162_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first late-interaction operator in the registry, next to
     single-vector b30 and token-level b150.
 
-    Engine shape — ROUND-13 OPTIMIZATION (guide §4.2): the corpus
+    Engine shape — optimization (guide §4.2): the corpus
     still never shuffles for scoring and the per-query top-k still
     carries Partial+Final WindowGroupLimit, but the 16 sub-cosines per
     pair moved from a Catalyst expression tree (HOF folds +
@@ -1377,7 +1376,7 @@ def b172_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-deterministic, so the whole classifier is exact-oracled.
     The neighbor rank orders on INTEGER micro-cosine (not the raw
     double): a 1-ulp cross-engine skew at a near-tie would flip a
-    neighbor in/out of the vote set (ADVICE r6; the b147/b149/b162
+    neighbor in/out of the vote set (the b147/b149/b162
     integer-decision-predicate rule), micro ties resolve on vec_id.
 
     Engine shape: b30's broadcast-query scoring (the corpus never

@@ -123,7 +123,7 @@ def b73_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     The value sum is integer micro-units (round(value*1e6) per row,
     BIGINT sum) — exact, associative across salt partials, and
     hash-stable (DECIMAL(38,6) came back float64 through DuckDB's
-    pandas path and broke the round-4 value hash)."""
+    pandas path and broke the value hash)."""
     from ..functions.exact import finite
 
     e = table(spark, sf_dir, "events").filter(finite("value"))

@@ -257,8 +257,7 @@ def b31_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and Python agree on) and a strict-argmax CASE over the
     fixed language order, 'und' when no marker fires.  Deterministic
     integer scoring end-to-end, so the whole rule replays in the
-    DuckDB oracle (VERDICT r11 item 4 — the b178 pattern; formerly a
-    rows-only pandas UDF).
+    DuckDB oracle (the b178 pattern; formerly a rows-only pandas UDF).
 
     Engine shape at 100 TB: a single narrow projection inside
     whole-stage codegen over the scan — no UDF, no Arrow round-trip,
@@ -825,7 +824,7 @@ def b69_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("doc_id").alias("n_docs")
     )
     kept = lines.join(freq, "line").filter(F.col("n_docs") < _LINE_K)
-    # ROUND-13 OPTIMIZATION (guide §2.4): the per-doc line count is
+    # Optimization (guide §2.4): the per-doc line count is
     # ceil(|tokens|/W) by construction — a narrow projection of the
     # document table, not a third corpus-wide line explode + groupBy
     # shuffle (the exploded count equals n_lines_of exactly: the
@@ -903,7 +902,7 @@ def b132_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while a .cache() here leaks (the builder returns a lazy frame,
     # so there is no post-materialization point to unpersist at, and
     # repeated invocations would stack cached plans until LRU
-    # eviction; ADVICE r5).  At cluster scale the same trade reads:
+    # eviction).  At cluster scale the same trade reads:
     # persist(MEMORY_AND_DISK) only under an explicit lifecycle
     # owner, otherwise recompute.
     toks = d.select(
@@ -1222,7 +1221,7 @@ def _bpe_train_artifacts(
     list when the driver path ran, None on the distributed path
     (where the dictionary never visits the driver).
 
-    ROUND-13 OPTIMIZATION (guide §1.2 step 1 — don't compute things
+    Optimization (guide §1.2 step 1 — don't compute things
     twice; §2.4 — remove shuffles): the word dictionary is fetched in
     ONE job — ``limit(MAX + 1).collect()`` both decides the
     driver-vs-distributed path and, on the driver path, delivers the
@@ -1298,7 +1297,7 @@ def b156_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: word, not the vocab size).  Both paths are pinned byte-identical
 #: on the learned table in tests/test_llmops.py.
 #:
-#: Round-8 measurement moved this from 64 to 8: because encoding runs
+#: Measurement moved this from 64 to 8: because encoding runs
 #: over the DISTINCT vocabulary (the b160 plan), the UDF's Python cost
 #: is vocab-bounded, while the regex chain pays a PLAN-COMPILE tax
 #: superlinear in the table size on every query — measured apply-only
@@ -1403,7 +1402,7 @@ def b160_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges PRESENT, not the vocab size; since encoding runs over the
     DISTINCT vocabulary, its Python cost is vocab-bounded while the
     regex chain pays a plan-compile tax superlinear in the table on
-    every query (see BPE_APPLY_REGEX_MAX for the round-8 numbers).
+    every query (see BPE_APPLY_REGEX_MAX for the numbers).
     Both encoders share greedy-left semantics with training (and with
     the sequential reference), and are pinned byte-identical per word
     on the learned table
@@ -1411,7 +1410,7 @@ def b160_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the threshold is a pure execution-strategy knob — the plan
     stays corpus-narrow either way.
 
-    ROUND-13 OPTIMIZATION (guide §2.4): the distinct vocabulary now
+    Optimization (guide §2.4): the distinct vocabulary now
     comes from the TRAINING pass (_bpe_train_artifacts — its
     word-count groupBy already reduced the corpus to the vocabulary
     and collected it on the driver path), so the corpus-wide
@@ -1513,7 +1512,7 @@ def b176_bpe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is read once; the only shuffles are the join back
     (AQE-broadcast for real vocabs) and the per-doc aggregate.
 
-    ROUND-13 OPTIMIZATION (guide §2.4, the b160 move): the distinct
+    Optimization (guide §2.4, the b160 move): the distinct
     vocabulary comes from the training pass's already-collected
     dictionary (_bpe_train_artifacts) instead of a second corpus-wide
     explode + distinct shuffle."""

@@ -55,7 +55,7 @@ from ..registry import query
 
 REV = "l_extendedprice * (1 - l_discount)"
 
-#: ROUND-13: REV pre-scaled ×10⁴ as exact long-cents products — the
+#: REV pre-scaled ×10⁴ as exact long-cents products — the
 #: input shape of sql_dsum_c4, dsum's bit-identical fast path (see
 #: functions/exact.py; applied to the BENCHED revenue aggregations —
 #: q5/q6/q9 and the flagship; the sub-second non-headline queries keep
@@ -168,7 +168,7 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount").between(0.03, 0.07))
         & (F.col("l_quantity") < 24)
     ).agg(
-        # ROUND-13: price·discount is exact ×10⁴ in long cents — the
+        # price·discount is exact ×10⁴ in long cents — the
         # sql_dsum_c4 fast path (bit-identical; see functions/exact.py)
         F.expr(
             sql_dsum_c4(
@@ -468,7 +468,7 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     50/line × 7 lines barely triggers).  sum(l_quantity) is
     integer-valued → exact in double.
 
-    ROUND-13 OPTIMIZATION (guide §2.4): the oracle keeps the canonical
+    Optimization (guide §2.4): the oracle keeps the canonical
     IN-subquery form, but every output group is ORDER-level (all five
     group keys are functions of o_orderkey), so the outer re-aggregation
     over lineitem recomputes exactly the subquery's per-order sum.
@@ -710,7 +710,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation")
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
-    # ROUND-13: amount's exact value has ≤4 decimals (2-dp price ×
+    # amount's exact value has ≤4 decimals (2-dp price ×
     # 2-dp discount; 0.6 × 2-dp retail × integer qty is exact 3-dp),
     # and the double computes it within ~10⁻⁹ — far inside dsum's
     # 5·10⁻⁷ decimal(18,6) recovery band — so the ×10⁴ long-cents

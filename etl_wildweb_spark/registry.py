@@ -93,120 +93,6 @@ def capabilities(
     }
 
 
-#: Explicit verification-priority order.  The driver's correctness
-#: harness checks the FIRST 50 entries of ``__spark_entry__.queries()``
-#: (dict insertion order) per round.
-#: ROUND 13 window (VERDICT r12 item 1, landed in the round's FIRST
-#: commit so the staleness gate flips red → green atomically — the
-#: window is exactly `python tests/plan_rotation.py`'s emitted plan
-#: plus this round's modified-query re-entries):
-#: first the fifteen age-5 must-lead entries the planner names (the
-#: eleven r07 tpch deferrals tpch_q7/q8/q10–q18 plus the three r07
-#: corpus.py deferrals b155/b158/b161 and b171, which gave its r12
-#: slot to the b116 mid-round repair), then the two queries whose
-#: code/oracle changes this round (modified queries re-enter the
-#: window the round they change: b101's entropy oracle and b155/b158/
-#: b171's ln-rounding oracles go exact-integer per VERDICT r12 item 2
-#: — three of those four are already in the must-lead set — and
-#: b165's absorbing-chain solve gets a fixed-iteration oracle per
-#: item 5), then 33 of the r08 cohort greedy-oldest-first.  The three
-#: r08 entries after the fill cut (b53_train_val_test,
-#: b55_lateral_topk, b56_embedding_quantize) defer to r14 at age 5 —
-#: legal under MAX_DRIVER_ROW_AGE=5 (tests/test_registry_order.py).
-PRIORITY: list[str] = [
-    # -- planner must-lead (14): red when CORRECTNESS_r14 lands
-    #    unless re-checked (the round-open rotation discipline,
-    #    VERDICT r12 item 1 / r13 item 8 — outranks everything) --
-    "b55_lateral_topk",
-    "b56_embedding_quantize",
-    "b57_table_fingerprint",
-    "b59_salted_join",
-    "b60_hll_mergeable_rollup",
-    "b62_cogroup_merge",
-    "b63_quantile_bands",
-    "b65_map_hof",
-    "tpch_q1",
-    "tpch_q19",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q9",
-    # -- queries whose code changes this optimization round (modified
-    #    queries re-enter the window the round they change): the CC
-    #    family on the new sub-threshold driver union-find (VERDICT r13
-    #    item 2), the b137 partitioning fix (item 3), the stream-stream
-    #    join harness work (item 4), the b161 null-source hardening and
-    #    the sql_dsum_c4 overflow-order fix (ADVICE r13; tpch_q9 of the
-    #    dsum family already leads above) --
-    "b29_ngram_jaccard",
-    "b29_cc_bigstar",
-    "b29_dedup_canonical",
-    "b144_leakage_safe_split",
-    "b173_dbscan_complexes",
-    "b137_pq_adc_search",
-    "b177_stream_semi_join",
-    "b180_stream_stream_full_outer",
-    "b182_stream_stream_right_outer",
-    "b161_source_novelty",
-    "b09_agg_q1",
-    "flagship_revenue_by_nation",
-    "tpch_q5",
-    "tpch_q6",
-    "b03_join_inner",
-    "b04_join_broadcast",
-    # -- greedy oldest-first fill (planner order, cut to the window) --
-    "b100_compaction",
-    "b102_markov_transitions",
-    "b103_basket_pairs",
-    "b104_zscore_outliers",
-    "b105_event_paths",
-    "b106_time_weighted_sum",
-    "b107_sliding_distinct",
-    "b108_dynamic_overwrite",
-    "b109_heavy_hitters",
-    "b110_bloom_prefilter_join",
-    "b111_stream_topk",
-    "b112_cohort_ltv",
-    "b114_activity_heatmap",
-    "b115_schema_evolution",
-    "b117_scd3_current",
-    "b11_unpivot",
-    "b175_ivfpq_observed_sampled",
-    "b178_quality_classifier",
-    "b179_stream_late_audit",
-    # oldest driver row outside the window (tests/plan_rotation.py)
-    "b18_width_bucket",
-]
-
-#: Hard cap on per-round additions (VERDICT r6 items 2/7): the driver
-#: window is 50 slots and must absorb both re-confirmation traffic and
-#: the previous round's additions, so a round may register at most
-#: this many new queries.  tests/test_registry_order.py enforces both
-#: the cap and the backlog bound (never-driver-checked queries outside
-#: the current PRIORITY window ≤ 2× this cap).
-ADDITIONS_PER_ROUND_CAP = 10
-
-#: Candidates for the NEXT round's window: additions made this round
-#: (VERDICT r5 item 7: everything new enters PRIORITY_NEXT in the same
-#: commit that registers it).  Round 12's single addition (b182) got a
-#: green r12 driver row, so it rotates out.
-PRIORITY_NEXT: list[str] = []
-
-
-def ordered_queries() -> dict[str, QueryFn]:
-    """All registered queries: PRIORITY (the current verification
-    window) first, then PRIORITY_NEXT (this round's additions), then
-    the rest in registration order.  This is the order the driver
-    consumes."""
-    load_all()
-    head = [*PRIORITY, *PRIORITY_NEXT]
-    missing = [n for n in head if n not in QUERIES]
-    if missing:
-        raise KeyError(f"PRIORITY names not registered: {missing}")
-    rest = {n: f for n, f in QUERIES.items() if n not in set(head)}
-    return {**{n: QUERIES[n] for n in head}, **rest}
-
-
 def load_all() -> None:
     """Import every module that registers queries (idempotent)."""
     from .operators import (  # noqa: F401

@@ -22,7 +22,7 @@ RUNTIME_CONFS = {
     # ANSI is this build's default and every oracle-backed query is
     # verified under it; pin it so a hostile non-ANSI driver session
     # cannot flip arithmetic overflow from fail-loudly to silent NULL
-    # (the round-2 merge.py:188 corruption class).
+    # (the silent-NULL overflow class once seen in merge.py).
     "spark.sql.ansi.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

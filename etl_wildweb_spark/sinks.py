@@ -350,7 +350,7 @@ def write_submit_stream(
     path.
 
     Manifest files from an earlier run with a DIFFERENT checkpoint are
-    excluded (ADVICE r5 — a stale ``batch-*.json`` must not be
+    excluded (a stale ``batch-*.json`` must not be
     silently mixed into the return): the glob is filtered to the batch
     ids in THIS checkpoint's commit log (``checkpoint_dir/commits/``,
     one file per committed epoch) — the authoritative lineage, stable
@@ -380,7 +380,7 @@ def _collect_stream_manifests(
 ) -> list[dict]:
     """Per-epoch manifests scoped to ``checkpoint_dir``'s commit log —
     the authoritative lineage — so foreign leftovers in the manifest
-    dir never leak into the result (ADVICE r5)."""
+    dir never leak into the result."""
     import glob as _glob
     import json as _json
     import os as _os

@@ -190,7 +190,7 @@ def b71_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round(value*1e6) per row, BIGINT sum): exact, order-insensitive,
     and hash-stable across engines — DuckDB's pandas path coerces
     DECIMAL(38,6)/HUGEINT to float64, which broke the driver's value
-    hash in round 4 even though every value matched."""
+    hash even though every value matched."""
     import shutil
     import tempfile
 
@@ -590,7 +590,7 @@ def b127_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     id/lang/n_chars fidelity PLUS the round-tripped text itself via
     ``sum_text_len`` — recomputed from the text column AFTER the
     CSV/JSONL legs, so a trimmed or escape-mangled text leg breaks the
-    hash (ADVICE r3: n_chars alone was the stored column, not the
+    hash (n_chars alone is the stored column, not the
     round-tripped bytes).  The CSV writer/reader explicitly disable
     whitespace trimming (Spark's writer trims by default), keeping the
     leg lossless even for padded text.  This is the ingest-tier

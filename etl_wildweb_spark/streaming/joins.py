@@ -58,24 +58,23 @@ def b23_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WM_DELAY = "1 hour"
 _INTERVAL = "INTERVAL 6 HOURS"
 
-#: State-shuffle width for the stream-stream joins (round 12, re-sized
-#: round 14).  A stream-stream join commits FOUR state-store instances
-#: per partition per micro-batch, so partition count is a fixed-cost
-#: multiplier that should track KEY CARDINALITY (users in state), not
-#: session cores: at the bench corpus's few hundred in-state users, 32
-#: partitions spent 2.4x the wall clock of 8 on store commits alone
-#: (b180 at sf0.1: 7.9 s -> 3.3 s, identical 37,823-row output).
-#: Round 14 re-measured the remaining fixed cost (tools/stream_probe.py:
-#: per-batch state commits ~260 ms/store-instance dominate addBatch)
-#: and halved twice more — interleaved A/B medians at sf0.1, 8 vs 2
-#: partitions: b182 3.91->2.69 s, b177 2.93->1.96, b23 2.39->1.79,
-#: b64 4.97->2.61, b180 3.23->3.13; identical output (the
-#: partition-count invariance is pinned in tests/test_streaming.py).
-#: At 100 TB this knob goes UP with state volume — size it per
-#: deployment before go-live, because streaming state partitioning
-#: freezes at the first batch; the scheduling fixed-cost argument is
-#: symmetric (once per-partition state is large enough to dominate the
-#: per-store commit overhead, more partitions win).
+#: State-shuffle width for the stream-stream joins.  A stream-stream join
+#: commits FOUR state-store instances per partition per micro-batch, so
+#: partition count is a fixed-cost multiplier that should track KEY
+#: CARDINALITY (users in state), not session cores: at the bench corpus's
+#: few hundred in-state users, 32 partitions spent 2.4x the wall clock of
+#: 8 on store commits alone (b180 at sf0.1: 7.9 s -> 3.3 s, identical
+#: 37,823-row output).  A re-measure of the remaining fixed cost
+#: (tools/stream_probe.py: per-batch state commits ~260 ms/store-instance
+#: dominate addBatch) halved the width twice more — interleaved A/B
+#: medians at sf0.1, 8 vs 2 partitions: b182 3.91->2.69 s, b177
+#: 2.93->1.96, b23 2.39->1.79, b64 4.97->2.61, b180 3.23->3.13; identical
+#: output (the partition-count invariance is pinned in
+#: tests/test_streaming.py). At 100 TB this knob goes UP with state volume
+#: — size it per deployment before go-live, because streaming state
+#: partitioning freezes at the first batch; the scheduling fixed-cost
+#: argument is symmetric (once per-partition state is large enough to
+#: dominate the per-store commit overhead, more partitions win).
 STREAM_STATE_PARTITIONS = 2
 
 
@@ -182,7 +181,7 @@ def b64_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins don't have: an unmatched view emits its null-padded row only
     once the WATERMARK proves no purchase can still arrive.
 
-    EXACT-oracled since round 9 (was rows-only): the emitted set IS a
+    EXACT-oracled (was rows-only): the emitted set IS a
     function of the data once the final-watermark rule is written
     down, and the rule was probed with boundary-planted synthetic
     corpora (±1 ms and sub-ms around the closure boundary, the
@@ -254,7 +253,7 @@ def b180_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     arrive, and an unmatched PURCHASE emits once no view can.
 
     Exact-oracled from birth by the b64 construction SYMMETRIZED, with
-    the purchase-side closure rule PROBED, not assumed (round-10 probe,
+    the purchase-side closure rule PROBED, not assumed (a probe over a
     boundary corpus with ±1 ms / sub-ms / ==-boundary plants on both
     sides, pinned permanently in tests/test_streaming.py):
 
@@ -315,7 +314,7 @@ def b180_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def b182_stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream RIGHT OUTER interval join — the last hole in the
-    declared join matrix (VERDICT r11 item 5) next to b23 (inner), b64
+    declared join matrix next to b23 (inner), b64
     (left outer), b177 (semi), b180 (full outer): matched pairs emit on
     arrival; an unmatched PURCHASE emits its null-view row once the
     watermark proves no view can still match it; unmatched views emit
@@ -385,7 +384,7 @@ def b177_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi emits once on first match and NOTHING at watermark closure
     # (the property that makes it exact-oracled) — the same property
     # makes the trailing eviction-only batch skippable: measured ~50%
-    # of wall time at sf0.1, byte-identical output (round 9)
+    # of wall time at sf0.1, byte-identical output
     return run_to_memory(
         joined,
         mode="append",

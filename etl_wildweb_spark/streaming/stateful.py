@@ -361,7 +361,7 @@ def _time_sliced_stream(
 
 @query(
     "b58_stream_funnel",
-    # EXACT-oracled since round 9 (was rows-only): the final per-user
+    # EXACT-oracled (was rows-only): the final per-user
     # emission is all-integer and candidate retention makes it a pure
     # function of the data — the min-time funnel (t1 = min view,
     # t2 = min click > t1, t3 = min purchase > t2), stage = depth,
@@ -436,7 +436,7 @@ SESS_STATE = (
 )
 #: Same 5-minute gap as b22_session_window.  INCLUSIVE at exactly the
 #: gap: Spark's session_window extends a session for an event landing
-#: precisely at its end (probed round 11, boundary plant in
+#: precisely at its end (probed with a boundary plant in
 #: tests/test_streaming.py) — so the custom fold merges on <= and the
 #: oracle splits only on strictly-greater gaps, or the
 #: snapshot==session_window invariant breaks on exact-gap corpora.
@@ -536,7 +536,7 @@ def b72_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in can't express (per-session caps, inactivity policies,
     carried payloads).
 
-    EXACT-oracled since round 9 (was rows-only): the output is
+    EXACT-oracled (was rows-only): the output is
     all-integer (µs session starts, counts), the interval gap-merge is
     an order-independent fold, and the final per-user snapshot is the
     complete session set — so the emitted rows are a pure function of
@@ -544,7 +544,7 @@ def b72_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     µs output).  Break condition mirrored exactly: a new session
     starts only when ts − prev > 5 min — INCLUSIVE at exactly the gap,
     matching session_window's probed rule (the fold merges on <=;
-    round-11 boundary plant)."""
+    boundary plant in tests/test_streaming.py)."""
     stream, chunk_dir = _chunked_events_stream(spark, sf_dir)
     try:
         updates = stream.select("user_id", "ts").groupBy("user_id").applyInPandasWithState(
@@ -570,7 +570,7 @@ def b72_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b83_checkpoint_recovery",
-    # EXACT-oracled since round 9 (was rows-only): the recovery
+    # EXACT-oracled (was rows-only): the recovery
     # contract is "final snapshot bit-identical to the one-shot batch
     # aggregate" — the b67 oracle verbatim, now checked by the driver
     # and not only by pytest.  Same finite quarantine as b67.

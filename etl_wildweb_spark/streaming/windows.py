@@ -52,8 +52,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ephemeral_checkpoint_dir() -> str:
-    """Checkpoint dir for the bounded MEMORY-SINK harness (round 13,
-    guide §6 I/O layout): the sink is an in-driver table, so its
+    """Checkpoint dir for the bounded MEMORY-SINK harness (guide §6 I/O
+    layout): the sink is an in-driver table, so its
     checkpoint is exactly as ephemeral as the query — durability buys
     nothing, while the state store's per-partition delta commits are
     fsync-bound on a disk-backed /tmp.  Use a RAM-backed tmpfs when
@@ -110,7 +110,7 @@ def run_to_memory(
     dependence: stream-stream INNER/SEMI joins and in-stream dedup
     emit on arrival, and the final batch's only work is state
     eviction, which is pointless when availableNow terminates right
-    after (measured round 9: the eviction-only batch was ~50% of
+    after (measured: the eviction-only batch was ~50% of
     b177's wall time — 8.2-8.6 s → 4.4 s steady with identical
     output).  NEVER pass False for append-mode aggregations or OUTER
     joins: their closed-window / null-padded rows are EMITTED by that
@@ -138,7 +138,7 @@ def run_to_memory(
         # single-threaded per session).
         spark.conf.set(conf_key, "false")
     ck_dir = ephemeral_checkpoint_dir()
-    # ADVICE r13: the checkpoint dir lives on tmpfs (RAM) by default, so
+    # The checkpoint dir lives on tmpfs (RAM) by default, so
     # EVERY exit path must reclaim it — the old success-only cleanup let
     # timeout/start() failures accumulate tmpfs usage across runs.  The
     # memory sink's rows live in the driver, not the checkpoint, so the
@@ -247,13 +247,13 @@ def b21_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def b22_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B22: session windows with a 5-minute gap.  Spark's session_window
     merges events whose gap is <= 5 min — INCLUSIVE at exactly the gap
-    (probed round 11: an event landing precisely at the previous
+    (probed: an event landing precisely at the previous
     session's end extends it; +1 µs starts a new one; boundary plant in
     tests/test_streaming.py) — and the oracle reproduces that with the
     classic lag/cumulative-flag island construction, splitting only on
     strictly-greater gaps.  The µs-resolution corpus never produces an
-    exact-gap pair, which is how the pre-r11 strict-split oracle stayed
-    green for ten rounds."""
+    exact-gap pair, which is how an earlier strict-split oracle stayed
+    green for so long."""
     e = table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id", F.session_window("ts", "5 minutes").alias("w"))
@@ -286,7 +286,7 @@ def b23_watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (availableNow) in append mode — only windows the final
     watermark has passed are emitted.
 
-    EXACT-oracled since round 9 (was rows-only): with the whole corpus
+    EXACT-oracled (was rows-only): with the whole corpus
     in one batch the emitted set is {windows with end ≤ ms-floored
     max(ts) − 1h} — INCLUSIVE at the boundary, probed with a corpus
     whose watermark lands exactly on a window edge (a window ending
@@ -315,7 +315,7 @@ def b24_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark — state is evicted once the watermark
     passes, so memory is bounded at any scale.
 
-    EXACT-oracled since round 9 (was rows-only as "arbitrary row
+    EXACT-oracled (was rows-only as "arbitrary row
     pick"): the query projects ONLY the dedup keys, so no arbitrary
     pick survives into the output, and with the whole corpus in one
     availableNow batch no state eviction can happen between two
@@ -335,7 +335,7 @@ def b24_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("b179_stream_late_audit")  # engine-metric audit → rows-only
 def b179_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drop-late-metrics audit (VERDICT r8 item 8's second option): the
+    """Drop-late-metrics audit: the
     b23 watermark pipeline instrumented with ``df.observe`` + the
     streaming engine's own per-batch state metrics, surfaced as a
     first-class result — one row per micro-batch with what arrived
@@ -377,7 +377,7 @@ def b179_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, chunk_dir = _time_sliced_stream(
         spark, sf_dir, n_slices=4, replay_order=[3, 0, 1, 2]
     )
-    # Precondition for the audited counts (ADVICE r9): the pinned
+    # Precondition for the audited counts: the pinned
     # semantics "numRowsDroppedByWatermark == distinct windows per
     # slice" holds only while each staged slice is ONE scan partition —
     # one data file that does not split — so the state operator sees
@@ -385,7 +385,7 @@ def b179_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to split a slice file would silently change the audited grain;
     # fail loudly here instead.  The split threshold is Spark's actual
     # FilePartition.maxSplitBytes for a single-file batch — NOT plain
-    # maxPartitionBytes (round-10 review find: with enough cores,
+    # maxPartitionBytes (with enough cores,
     # bytesPerCore shrinks the split size down to openCostInBytes, so
     # a file between openCost and maxPartitionBytes can still split):
     #   min(maxPartitionBytes, max(openCostInBytes,
@@ -453,10 +453,10 @@ def b179_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError("b179 stream still running after 420s")
     finally:
         # every other _time_sliced_stream caller rmtree's its staging
-        # dir; the audit must too (round-9 code-review find — each run
-        # staged 4 parquet copies of events into /tmp and left them).
-        # The checkpoint dir gets the same treatment on every path
-        # (ADVICE r13 — it previously leaked a /tmp dir per run).
+        # dir; the audit must too (otherwise each run leaves 4 staged
+        # parquet copies of events in /tmp).  The checkpoint dir gets
+        # the same treatment on every path, or it leaks a /tmp dir per
+        # run.
         shutil.rmtree(chunk_dir, ignore_errors=True)
         shutil.rmtree(ck_dir, ignore_errors=True)
     rows = []

@@ -1,4 +1,4 @@
-"""Round-close hostile-session sweep — the driver simulated end to end.
+"""Hostile-session sweep — the driver simulated end to end.
 
 Runs EVERY registered query on a vanilla SparkSession configured
 hostilely (America/New_York, ANSI off, 8 shuffle partitions — the
@@ -7,25 +7,17 @@ oracled query against DuckDB with the same strict comparator the
 pytest gate uses (oracle_utils.compare: row count + column set +
 order-insensitive normalized value multiset, no float tolerance), and
 pushes every rows-only query through the driver's pandas-sort
-canonicalizer.  This is the per-round close step SCALE.md logs
-("hostile-session oracle sweep"); it lived in /tmp until round 8.
+canonicalizer.  The queries run in ``__spark_entry__.queries()`` order
+(sorted by name), so the first 50 are the driver's verification window.
 
 NOTE: uses oracle_utils' fetchall-based comparator, NOT duckdb's
 .df() — pandas coerces DuckDB DATE columns to midnight datetimes and
 DECIMAL/HUGEINT to float64, which manufactures false mismatches
-(the round-1/round-4 hash-unstable-type lesson).
+(hash-unstable types).
 
 Usage:
-    python tests/hostile_sweep.py [sf_dir]            # all registered queries
-    python tests/hostile_sweep.py --window [sf_dir]   # first-50 driver window only
+    python tests/hostile_sweep.py [sf_dir]
 Exit code 0 iff every query is green; failures print per-query.
-
-``--window`` simulates exactly what the driver's CORRECTNESS harness
-checks — the first 50 entries of __spark_entry__.queries() (PRIORITY +
-PRIORITY_NEXT) — so a rotation can be proven green before any code
-changes (VERDICT r10 item 7: previously this discipline lived only in
-SCALE.md prose; tests/test_exhaustive.py::test_driver_window_sim now
-runs it as a committed gate).
 """
 
 from __future__ import annotations
@@ -36,11 +28,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-#: The driver's CORRECTNESS window: first N of ordered_queries().
-DRIVER_WINDOW = 50
-
-
-def main(sf_dir: str, window_only: bool = False) -> int:
+def main(sf_dir: str) -> int:
     from pyspark.sql import SparkSession
 
     spark = (
@@ -55,8 +43,6 @@ def main(sf_dir: str, window_only: bool = False) -> int:
     from tests.oracle_utils import compare
 
     qs, oracles = m.queries(), m.oracle_sql()
-    if window_only:
-        qs = dict(list(qs.items())[:DRIVER_WINDOW])
     n_ok = 0
     failures: list[tuple[str, str]] = []
     for i, (name, fn) in enumerate(qs.items()):
@@ -76,15 +62,14 @@ def main(sf_dir: str, window_only: bool = False) -> int:
             # queries that cache multi-consumer intermediates (the
             # minhash/ngram shingle frames, connector fetches) have no
             # post-materialization unpersist point — the sweep owns the
-            # session, so it owns cache cleanup (ADVICE r10 item 1's
-            # harness-side option; bench.py already does this per pass)
+            # session, so it owns cache cleanup (bench.py already does
+            # this per pass)
             spark.catalog.clearCache()
         if (i + 1) % 50 == 0:
             print(f"... {i + 1}/{len(qs)} ({n_ok} green)", flush=True)
     n_oracle = sum(1 for n in qs if n in oracles)
-    label = "driver-window sim" if window_only else "hostile sweep"
     print(
-        f"{label} @ {sf_dir}: {n_ok}/{len(qs)} green "
+        f"hostile sweep @ {sf_dir}: {n_ok}/{len(qs)} green "
         f"({n_oracle} oracled strict-compared, {len(qs) - n_oracle} rows-only "
         f"canonicalized); {len(failures)} red"
     )
@@ -92,10 +77,4 @@ def main(sf_dir: str, window_only: bool = False) -> int:
 
 
 if __name__ == "__main__":
-    argv = [a for a in sys.argv[1:] if a != "--window"]
-    sys.exit(
-        main(
-            argv[0] if argv else "/root/testdata/sf0.01",
-            window_only="--window" in sys.argv[1:],
-        )
-    )
+    sys.exit(main(sys.argv[1] if sys.argv[1:] else "/root/testdata/sf0.01"))

@@ -1,8 +1,5 @@
-"""Round-close exhaustive sweeps as a single pytest gate (VERDICT r8 item 7).
-
-Until round 8 these three sweeps ran only when a human remembered to
-follow .claude/skills/verify by hand.  Now they are one command a
-future round cannot skip silently:
+"""Exhaustive sweeps as one pytest command that cannot be skipped
+silently (they were once manual steps in .claude/skills/verify):
 
     python -m pytest -m exhaustive tests/ -q          # all three, ~25 min
 
@@ -27,8 +24,8 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: Corpus roots resolved the way conftest resolves its default corpus
-#: (ADVICE r9): SPARK_GRAFT_TEST_SF_DIR names a specific sf dir (default
+#: Corpus roots resolved the way conftest resolves its default corpus:
+#: SPARK_GRAFT_TEST_SF_DIR names a specific sf dir (default
 #: /root/testdata/sf0.01); the sibling corpora the sweeps need live next
 #: to it.  A host with corpora elsewhere exports the env var and the
 #: gate follows; a missing corpus skips with a message instead of
@@ -68,21 +65,11 @@ def test_hostile_session_sweep() -> None:
     _run([sys.executable, "tests/hostile_sweep.py", _corpus("sf0.01")])
 
 
-def test_driver_window_sim() -> None:
-    """Exactly the current 50-entry driver window (PRIORITY +
-    PRIORITY_NEXT) on a hostile vanilla session, strict DuckDB compare —
-    the rotation-proof step that previously lived only in SCALE.md
-    prose (VERDICT r10 item 7).  A subset of the full hostile sweep,
-    but cheap enough (~4 min) to run at round START the moment the
-    PRIORITY rotation lands, before any code changes."""
-    _run([sys.executable, "tests/hostile_sweep.py", "--window", _corpus("sf0.01")])
-
-
 def test_size_sensitivity_sweep_sf0001() -> None:
     """Full oracle suite at sf0.001 — a different corpus size moves
     percentile interpolation points, even/odd median counts, and
-    rounding boundaries (round 7: caught b10's median-of-doubles
-    flipping at a .005 boundary while green at sf0.01)."""
+    rounding boundaries (it caught b10's median-of-doubles flipping at
+    a .005 boundary while green at sf0.01)."""
     _run(
         [sys.executable, "-m", "pytest", "tests/test_oracle.py", "-q", "--tb=line"],
         {"SPARK_GRAFT_TEST_SF_DIR": _corpus("sf0.001")},
@@ -91,8 +78,8 @@ def test_size_sensitivity_sweep_sf0001() -> None:
 
 def test_degenerate_corpus_sweep() -> None:
     """Build the degenerate-content corpus, then run the full oracle
-    suite against it (round 7: caught b80's ANSI-cast crash; round 8:
-    the non-finite quarantine class)."""
+    suite against it (it caught b80's ANSI-cast crash and the
+    non-finite quarantine class)."""
     dest = "/tmp/degen_exhaustive"
     _run([sys.executable, "tests/degen_corpus.py", dest])
     _run(
