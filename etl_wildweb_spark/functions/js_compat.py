@@ -20,8 +20,13 @@ def js_number(c: Column | str) -> Column:
     reference's `!lon` check already drops ''), 'abc'→NULL,
     ' 105.5 '→105.5, '0'→0.0.
     """
-    col = F.col(c) if isinstance(c, str) else c
-    return col.try_cast("double")
+    return F.expr(js_number_sql(c)) if isinstance(c, str) else c.try_cast("double")
+
+
+def js_number_sql(name: str) -> str:
+    """``js_number`` of the column ``name`` as SQL text, for callers that
+    build one SQL expression (one parse) instead of chaining Columns."""
+    return f"try_cast({name} AS DOUBLE)"
 
 
 def geo_valid(c: Column | str) -> Column:

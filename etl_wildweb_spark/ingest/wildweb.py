@@ -9,17 +9,23 @@ in SURVEY.md §A9-A11/§2.1.  Documented divergences (§2.1 decisions):
 
   * an unparsable envelope becomes an error-channel row instead of
     silently aborting the whole run (task.ts:96 ``return`` quirk);
+  * an envelope whose ``data`` is present but not an array of objects
+    (``"data": "x"``, ``"data": [1, 2]``) becomes a
+    ``decode/data_not_array`` error row (the reference iterates it
+    unchecked, task.ts:108), where a PERMISSIVE decode alone would read
+    it as ``data: null`` and yield zero incidents with no error;
   * incidents whose date cannot be parsed are routed to the error
     channel instead of emitting an 'Invalid date' feature (task.ts:118).
 
 Every stage is a narrow transformation (no shuffle anywhere in this
-pipeline — it is embarrassingly parallel per incident).  Each of the two
-channels ``run_pipeline`` returns is one pass with one scan of the
-source: the features channel explodes the validated incidents, and the
-error channel is a single generator over the decoded envelopes that
-emits each envelope's own fault or, for a sound envelope, the
-unparsable-date faults of its incidents, so it decodes each payload
-once.  Throughput is bounded by scan + JSON parse.
+pipeline — it is embarrassingly parallel per incident).
+``run_pipeline`` decodes each payload once per channel: both channels
+read one decoded envelope frame that carries each row's fault.  The
+features channel is one generator over the sound envelopes' incident
+arrays, with no filter the optimizer could push below the decode, and
+the error channel is one generator that emits each envelope's own
+fault or, for a sound envelope, the unparsable-date faults of its
+incidents.  Throughput is bounded by scan + JSON parse.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.js_compat import geo_valid, js_number, truncate_minute
+from ..functions.js_compat import geo_valid, js_number_sql, truncate_minute
 from ..registry import query
 
 # ------------------------------------------------------------------ schemas
@@ -95,9 +101,18 @@ def parse_envelope(raw: DataFrame, payload_col: str = "payload") -> DataFrame:
     return raw.withColumn("envelope", F.from_json(F.col(payload_col), ENVELOPE_SCHEMA))
 
 
-def _error(stage: Column, reason: Column, payload: Column) -> Column:
-    """One error-channel entry: the ERROR_SCHEMA fields after ``center``."""
-    return F.struct(stage.alias("stage"), reason.alias("reason"), payload.alias("payload"))
+# The fixed expressions of this pipeline are SQL text, each parsed by one
+# ``F.expr`` call.  Each Column method call (``&``, ``.isNull()``,
+# ``.alias()``, ``F.col`` ...) also records its Python call site, about
+# fifteen round trips to the JVM: assembled that way, the same
+# expressions made building ``run_pipeline`` cost 0.22 CPU s per call
+# against 0.08-0.10 s (4-core host).
+
+#: SQL: the incident array of the row's one envelope.
+_DATA = "element_at(envelope, 1).data"
+
+#: SQL: the row, carrying its ``fault``, passed validation.
+_SOUND = "http_ok AND fault IS NULL"
 
 
 def _envelope_fault() -> Column:
@@ -106,33 +121,32 @@ def _envelope_fault() -> Column:
     is sound.  task.ts semantics: non-OK HTTP → error (task.ts:84-86);
     envelope length ≠ 1 → reference silently aborts the run
     (task.ts:93-97) — here it is an error row; data === null → zero
-    incidents, run continues (task.ts:99-104).  A row whose ``http_ok``
-    is NULL gets no fault and is not sound either: it enters neither
-    channel."""
-    http_ok, env = F.col("http_ok"), F.col("envelope")
-    n = F.size(env)
+    incidents, run continues (task.ts:99-104); ``data`` present but not
+    an array of objects → error row (module docstring).  A row whose
+    ``http_ok`` is NULL gets no fault and is not sound either: it enters
+    neither channel.
 
-    def fault(stage: str, reason: Column) -> Column:
-        return F.struct(F.lit(stage).alias("stage"), reason.alias("reason"))
-
-    # The decode test comes first although the HTTP test outranks it (the
-    # two are disjoint): only a CASE's first condition is always
-    # evaluated, so only there does the from_json that the ``ok`` filter
-    # inlines become a common subexpression Spark computes once per row.
-    # With the HTTP test first the features action cost ~50 % more CPU.
-    return (
-        F.when(http_ok & env.isNull(), fault("decode", F.lit("invalid_json")))
-        .when(~http_ok, fault("fetch", F.lit("http_not_ok")))
-        .when(
-            http_ok & (n != 1),
-            fault("envelope", F.concat(F.lit("cardinality_"), n.cast("string"))),
-        )
-    )
+    PERMISSIVE decode turns an ill-typed ``data`` into NULL, like a
+    literal ``null``; the payload is looked at again only for the rows
+    whose decoded ``data`` is NULL (CASE and AND evaluate left to right
+    and stop early), so a sound row is parsed once."""
+    return F.expr(f"""
+        CASE
+          WHEN NOT http_ok THEN named_struct('stage', 'fetch', 'reason', 'http_not_ok')
+          WHEN http_ok AND envelope IS NULL
+            THEN named_struct('stage', 'decode', 'reason', 'invalid_json')
+          WHEN http_ok AND size(envelope) != 1
+            THEN named_struct('stage', 'envelope',
+                              'reason', 'cardinality_' || CAST(size(envelope) AS STRING))
+          WHEN http_ok AND {_DATA} IS NULL
+               AND get_json_object(payload, '$[0].data') IS NOT NULL
+            THEN named_struct('stage', 'decode', 'reason', 'data_not_array')
+        END""")
 
 
 def _sound() -> Column:
     """The envelope rows, carrying their ``fault``, that pass validation."""
-    return F.col("http_ok") & F.col("fault").isNull()
+    return F.expr(_SOUND)
 
 
 def validate_envelopes(env: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -181,17 +195,26 @@ def filter_time_range(
     return incidents.filter(time_filter_condition(incident_range, now))
 
 
-def _unparsable_date(date: Column) -> Column:
-    """The A10 date rule: a date ``try_to_timestamp`` cannot parse."""
-    return F.try_to_timestamp(date).isNull()
+def _unparsable_date(i: str = "") -> str:
+    """The A10 date rule as SQL over the incident fields that the prefix
+    ``i`` reaches: a date ``try_to_timestamp`` cannot parse."""
+    return f"try_to_timestamp({i}date) IS NULL"
 
 
-def _date_fault(uuid: Column, date: Column) -> Column:
-    """The error entry for one incident whose date is unparsable."""
-    return _error(
-        F.lit("normalize_date"),
-        F.lit("unparsable_date"),
-        F.to_json(F.struct(uuid.alias("uuid"), date.alias("date"))),
+def _date_fault(i: str = "") -> str:
+    """SQL: the error entry (the ERROR_SCHEMA fields after ``center``)
+    for one incident whose date is unparsable; ``i`` as above."""
+    return (
+        "named_struct('stage', 'normalize_date', 'reason', 'unparsable_date', "
+        f"'payload', to_json(named_struct('uuid', {i}uuid, 'date', {i}date)))"
+    )
+
+
+def _dated(incidents: DataFrame) -> DataFrame:
+    """The rows ``normalize_dates`` keeps, without building its error
+    frame: parseable dates, truncated to the minute."""
+    return incidents.filter(F.expr(f"NOT ({_unparsable_date()})")).withColumn(
+        "date", truncate_minute("date")
     )
 
 
@@ -202,12 +225,10 @@ def normalize_dates(incidents: DataFrame) -> tuple[DataFrame, DataFrame]:
     we overwrite the ``date`` column for the same effect.  Unparsable
     dates (which the reference would format as 'Invalid date') go to the
     error channel instead."""
-    bad = _unparsable_date(F.col("date"))
-    date_err = incidents.filter(bad).select(
-        "center", _date_fault(F.col("uuid"), F.col("date")).alias("e")
+    date_err = incidents.filter(F.expr(_unparsable_date())).select(
+        "center", F.expr(_date_fault()).alias("e")
     ).select("center", "e.*")
-    ok = incidents.filter(~bad).withColumn("date", truncate_minute("date"))
-    return ok, date_err
+    return _dated(incidents), date_err
 
 
 def filter_valid_geo(incidents: DataFrame) -> DataFrame:
@@ -227,24 +248,17 @@ def to_features(incidents: DataFrame) -> DataFrame:
     geometry.coordinates = [-Number(longitude), Number(latitude)] — the
     feed reports western-hemisphere longitudes positive, so the sign is
     flipped (task.ts:138, CHANGELOG.md:160)."""
-    return incidents.select(
-        "center",
-        F.struct(
-            F.concat(F.lit("wildweb-"), F.col("uuid")).alias("id"),
-            F.lit("Feature").alias("type"),
-            F.struct(
-                F.col("name").alias("callsign"),
-                F.col("date").alias("start"),
-                F.struct(*[F.col(f) for f in INCIDENT_FIELDS]).alias("metadata"),
-            ).alias("properties"),
-            F.struct(
-                F.lit("Point").alias("type"),
-                F.array(
-                    -js_number("longitude"), js_number("latitude")
-                ).alias("coordinates"),
-            ).alias("geometry"),
-        ).alias("feature"),
-    )
+    metadata = ", ".join(f"`{f}`" for f in INCIDENT_FIELDS)
+    return incidents.select("center", F.expr(f"""
+        named_struct(
+          'id', 'wildweb-' || uuid,
+          'type', 'Feature',
+          'properties', named_struct('callsign', name, 'start', date,
+                                     'metadata', struct({metadata})),
+          'geometry', named_struct(
+            'type', 'Point',
+            'coordinates', array(-{js_number_sql("longitude")}, {js_number_sql("latitude")})))
+        AS feature"""))
 
 
 def union_centers(dfs: Iterable[DataFrame]) -> DataFrame:
@@ -266,27 +280,24 @@ def flatten_features(features: DataFrame) -> DataFrame:
 
 def _error_channel(env: DataFrame) -> DataFrame:
     """The A19 error channel of ``run_pipeline`` as one generator over the
-    parsed envelope rows: each row yields its envelope fault if it has
-    one, else the unparsable-date faults of its incidents (the rule
-    ``normalize_dates`` applies), else nothing.
+    parsed envelope rows, which carry their ``fault``: each row yields its
+    envelope fault if it has one, else the unparsable-date faults of its
+    incidents (the rule ``normalize_dates`` applies), else nothing.
 
     The date faults are taken over the whole decoded ``data`` array,
     before any time-range filter: ``time_filter_condition`` keeps every
     date it cannot parse, so under any ``incident_range`` each
     unparsable date reaches ``normalize_dates`` and becomes an error."""
-    fault = F.col("fault")
-    own = F.array(_error(fault["stage"], fault["reason"], F.col("payload")))
-    data = F.element_at("envelope", 1).getField("data")
-    dates = F.transform(
-        F.filter(data, lambda i: _unparsable_date(i["date"])),
-        lambda i: _date_fault(i["uuid"], i["date"]),
-    )
-    entries = F.when(fault.isNotNull(), own).when(_sound(), dates)
-    return (
-        env.withColumn("fault", _envelope_fault())
-        .select("center", F.explode(entries).alias("e"))
-        .select("center", "e.*")
-    )
+    entries = F.expr(f"""
+        CASE
+          WHEN fault IS NOT NULL
+            THEN array(named_struct('stage', fault.stage, 'reason', fault.reason,
+                                    'payload', payload))
+          WHEN {_SOUND}
+            THEN transform(filter({_DATA}, i -> {_unparsable_date("i.")}),
+                           i -> {_date_fault("i.")})
+        END""")
+    return env.select("center", F.inline(entries))
 
 
 def run_pipeline(
@@ -300,13 +311,18 @@ def run_pipeline(
     body, http_ok boolean).  Returns (features, errors): features is one
     GeoJSON Feature struct per surviving incident; errors is the
     per-source error channel (A19 — the reference accumulates per-center
-    errors and still submits partial results, task.ts:75-157)."""
-    env = parse_envelope(raw_envelopes)
-    ok_env, _ = validate_envelopes(env)
-    incidents = explode_incidents(ok_env)
+    errors and still submits partial results, task.ts:75-157).
+
+    Both channels read one decoded frame and its ``fault`` column, and
+    neither builds a frame it then drops: the output equals that of the
+    public stages chained (tests/test_wildweb.py pins it), without their
+    extra decode."""
+    env = parse_envelope(raw_envelopes).withColumn("fault", _envelope_fault())
+    # NULL data and unsound rows explode to nothing: no filter sits above
+    # the decode for the optimizer to push below it and decode again
+    incidents = env.select("center", F.inline(F.expr(f"CASE WHEN {_SOUND} THEN {_DATA} END")))
     in_window = filter_time_range(incidents, incident_range, now)
-    dated, _ = normalize_dates(in_window)
-    features = to_features(filter_valid_geo(dated))
+    features = to_features(filter_valid_geo(_dated(in_window)))
     return features, _error_channel(env)
 
 
@@ -411,8 +427,7 @@ def wildweb_pipeline(spark, sf_dir: str) -> DataFrame:
     Hash-checked against the identical derivation in DuckDB."""
     incidents = _synth_incidents(spark, sf_dir)
     in_window = filter_time_range(incidents, "1 Week", F.lit(_SYNTH_NOW).cast("timestamp"))
-    dated, _ = normalize_dates(in_window)
-    return flatten_features(to_features(filter_valid_geo(dated)))
+    return flatten_features(to_features(filter_valid_geo(_dated(in_window))))
 
 
 @query(

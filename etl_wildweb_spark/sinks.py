@@ -126,10 +126,10 @@ def a18_submit_sink(spark, sf_dir: str) -> DataFrame:
     tests/test_sinks.py along with partial-failure semantics)."""
     from .ingest.wildweb import (
         _SYNTH_NOW,
+        _dated,
         _synth_incidents,
         filter_time_range,
         filter_valid_geo,
-        normalize_dates,
         to_features,
     )
 
@@ -137,8 +137,7 @@ def a18_submit_sink(spark, sf_dir: str) -> DataFrame:
     in_window = filter_time_range(
         incidents, "1 Week", F.lit(_SYNTH_NOW).cast("timestamp")
     )
-    dated, _ = normalize_dates(in_window)
-    features = to_features(filter_valid_geo(dated))
+    features = to_features(filter_valid_geo(_dated(in_window)))
     statuses = submit_features(features, fake_post, chunk_size=200)
     return statuses.groupBy("ok").agg(
         F.sum("n_features").alias("n_features"),
@@ -410,10 +409,10 @@ def b94_datasource_writer(spark, sf_dir: str) -> DataFrame:
 
     from .ingest.wildweb import (
         _SYNTH_NOW,
+        _dated,
         _synth_incidents,
         filter_time_range,
         filter_valid_geo,
-        normalize_dates,
         to_features,
     )
     from .io import local_frame
@@ -422,8 +421,7 @@ def b94_datasource_writer(spark, sf_dir: str) -> DataFrame:
     in_window = filter_time_range(
         incidents, "1 Week", F.lit(_SYNTH_NOW).cast("timestamp")
     )
-    dated, _ = normalize_dates(in_window)
-    features = to_features(filter_valid_geo(dated))
+    features = to_features(filter_valid_geo(_dated(in_window)))
     manifest = write_submit(
         features, tempfile.mkdtemp(prefix="submitsink_"), chunk_size=200
     )

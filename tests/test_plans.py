@@ -72,10 +72,8 @@ def test_wildweb_pipeline_no_shuffle(plans):
     assert audit.codegen_spans(p) >= 1
 
 
-def test_wildweb_error_channel_one_scan_one_decode(spark, tmp_path):
-    """run_pipeline's error channel is one generator over one decode:
-    a single parquet scan and a single from_json, not one branch per
-    fault kind."""
+def _wildweb_channels(spark, tmp_path):
+    """run_pipeline's (features, errors) over a parquet source."""
     from pyspark.sql import functions as F
 
     from etl_wildweb_spark.ingest.wildweb import run_pipeline
@@ -84,8 +82,25 @@ def test_wildweb_error_channel_one_scan_one_decode(spark, tmp_path):
     spark.createDataFrame(
         [("C1", "[]", True)], "center string, payload string, http_ok boolean"
     ).write.parquet(path)
-    _, errors = run_pipeline(spark.read.parquet(path), "1 Week", F.current_timestamp())
+    return run_pipeline(spark.read.parquet(path), "1 Week", F.current_timestamp())
+
+
+def test_wildweb_error_channel_one_scan_one_decode(spark, tmp_path):
+    """run_pipeline's error channel is one generator over one decode:
+    a single parquet scan and a single from_json, not one branch per
+    fault kind."""
+    _, errors = _wildweb_channels(spark, tmp_path)
     p = audit.formatted_plan(errors)
+    assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
+    assert p.count("from_json(") == 1, p
+
+
+def test_wildweb_features_channel_one_decode(spark, tmp_path):
+    """run_pipeline's features channel decodes each payload once: no
+    filter sits on the decoded envelope for the optimizer to push below
+    the decode, where it would be decoded a second time."""
+    features, _ = _wildweb_channels(spark, tmp_path)
+    p = audit.formatted_plan(features)
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
     assert p.count("from_json(") == 1, p
 

@@ -175,14 +175,15 @@ EDGE_ROWS = [
     ("null_payload", None, True),
     ("null_incident", json.dumps([{"retrieved": NOW, "data": [None]}]), True),
     ("empty_date", envelope_payload([incident(uuid="u-empty", date="")]), True),
-    # Silent drops, pinned as current behaviour: a ``data`` that is not
-    # an array of objects decodes to NULL, which reads as ``data: null``
-    # (zero incidents, no error) although the body broke the contract.
+    # a ``data`` that is not an array of objects decodes to NULL, like
+    # ``data: null``, but broke the contract: an error row, no incidents
     ("data_string", json.dumps([{"retrieved": NOW, "data": "x"}]), True),
     ("data_numbers", json.dumps([{"retrieved": NOW, "data": [1, 2]}]), True),
 ]
 
 EDGE_ERRORS = [
+    ("data_numbers", "decode", "data_not_array", EDGE_ROWS[-1][1]),
+    ("data_string", "decode", "data_not_array", EDGE_ROWS[-2][1]),
     ("empty", "envelope", "cardinality_0", "[]"),
     ("empty_date", "normalize_date", "unparsable_date", '{"uuid":"u-empty","date":""}'),
     ("null_incident", "normalize_date", "unparsable_date", "{}"),
@@ -197,6 +198,41 @@ def test_edge_case_table(spark, incident_range):
     feats, errs = run(spark, EDGE_ROWS, incident_range)
     assert [f.feature.id for f in feats] == ["wildweb-u-ok"]
     assert sorted(tuple(e) for e in errs) == EDGE_ERRORS
+
+
+#: EDGE_ROWS plus incidents spread over every range's cutoff and the geo
+#: filter, so the ranges select different features.
+EQUIV_ROWS = EDGE_ROWS + [
+    ("spread", envelope_payload([
+        incident(uuid=f"u-{i}", date=d)
+        for i, d in enumerate([  # 0 h, 30 h, 60 h, 80 h and 200 h before NOW
+            "2026-08-13T12:00:00Z", "2026-08-12T06:00:00Z", "2026-08-11T00:00:00Z",
+            "2026-08-10T04:00:00Z", "2026-08-05T04:00:00Z",
+        ])
+    ] + [incident(uuid="u-geo", longitude="0")]), True),
+]
+
+
+@pytest.mark.parametrize("incident_range", [None, *ww.INCIDENT_RANGES])
+def test_run_pipeline_equals_public_stages(spark, incident_range):
+    # run_pipeline builds its channels without the public stages; its
+    # rows must still be theirs chained, errors as a multiset
+    from collections import Counter
+
+    raw = raw_df(spark, EQUIV_ROWS)
+    now = F.lit(NOW.replace("Z", "")).cast("timestamp")
+    ok, env_errs = ww.validate_envelopes(ww.parse_envelope(raw))
+    in_window = ww.filter_time_range(ww.explode_incidents(ok), incident_range, now)
+    dated, date_errs = ww.normalize_dates(in_window)
+    feats, errs = ww.run_pipeline(raw, incident_range, now)
+
+    def rows(df):
+        return Counter(r[0] for r in df.select(F.to_json(F.struct("*"))).collect())
+
+    want = rows(ww.to_features(ww.filter_valid_geo(dated)))
+    assert rows(feats) == want
+    assert len(want) == {None: 6, "24 Hours": 2, "48 Hours": 3, "72 Hours": 4}.get(incident_range, 5)
+    assert rows(errs) == rows(env_errs) + rows(date_errs)
 
 
 def test_duplicate_uuid_across_centers_not_deduped(spark):

@@ -1,20 +1,33 @@
 #!/usr/bin/env python
-"""Interleaved A/B probe: alternate tools/measure.py runs between two
-checkouts (OLD, NEW) so host drift cannot masquerade as a code delta.
-Each leg is a fresh process/session timing the named queries via the
-noop sink (warmup + median-of-3, bench methodology).  The checkout that
-runs first alternates from round to round, so neither side always gets
-the warmer (or colder) host.  A leg whose child exits non-zero, or
-prints no timing for a requested query, stops the probe with the
-child's output.
+"""Interleaved A/B probe between two checkouts (OLD, NEW), so host drift
+cannot masquerade as a code delta.  The checkout that runs first
+alternates from round to round, so neither side always gets the warmer
+(or colder) host.
+
+Query mode: each leg is a fresh process/session running tools/measure.py,
+which times the named queries via the noop sink (warmup + median-of-3,
+bench methodology).  A leg whose child exits non-zero, or prints no
+timing for a requested query, stops the probe with the child's output.
 
   python tools/ab.py OLD_CHECKOUT NEW_CHECKOUT 3 q1 q2 ...
+
+Perfbench mode: each leg is one ``perfbench/run.py`` run of WORKLOAD at
+seed N in its checkout; PAIRS pairs of legs.  For every end-to-end
+metric of the run's last JSON line it prints each side's median and
+quartiles, and in how many pairs NEW was better (the direction comes
+from NEW's BENCHMARK.json).  A leg that exits non-zero, prints no JSON
+line or reports ``"correct": false`` stops the probe, naming the leg.
+
+  python tools/ab.py --perfbench wildweb_batch --seed 5 OLD NEW 10
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 
@@ -41,7 +54,74 @@ def run_leg(root: str, names: list[str]) -> dict[str, tuple[float, float]]:
     return out
 
 
+def run_perfbench_leg(root: str, workload: str, seed: int, leg: str) -> dict[str, float]:
+    """One ``perfbench/run.py`` run in ``root``: its end-to-end metric
+    values, or SystemExit naming ``leg`` when the run failed."""
+    p = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed)],
+        cwd=root, capture_output=True, text=True, timeout=1800,
+    )
+    result = None
+    for line in reversed(p.stdout.splitlines()):
+        if line.startswith("{"):
+            try:
+                result = json.loads(line)
+            except ValueError:
+                pass
+            break
+    if p.returncode != 0 or result is None or result.get("correct") is not True:
+        sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
+        why = (f"exited with code {p.returncode}" if p.returncode != 0
+               else "printed no JSON line" if result is None
+               else f"reported correct={result.get('correct')} "
+                    f"({result.get('failed')} of {result.get('attempted')} operations failed)")
+        raise SystemExit(f"leg {leg} ({root}): perfbench/run.py {why}")
+    return {k: m["value"] for k, m in result["metrics"].items()}
+
+
+def quartiles(xs: list[float]) -> tuple[float, float, float]:
+    """(q1, median, q3), linear interpolation between order statistics."""
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def perfbench_main(argv: list[str]) -> None:
+    p = argparse.ArgumentParser(prog="ab.py --perfbench")
+    p.add_argument("--perfbench", required=True, metavar="WORKLOAD")
+    p.add_argument("--seed", type=int, required=True)
+    p.add_argument("old")
+    p.add_argument("new")
+    p.add_argument("pairs", type=int)
+    args = p.parse_args(argv)
+    with open(os.path.join(args.new, "BENCHMARK.json")) as f:
+        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+    runs: dict[str, list[dict[str, float]]] = {"old": [], "new": []}
+    legs = (("old", args.old), ("new", args.new))
+    for r in range(args.pairs):
+        for tag, root in legs if r % 2 == 0 else legs[::-1]:
+            got = run_perfbench_leg(root, args.perfbench, args.seed, f"pair {r} {tag}")
+            runs[tag].append(got)
+            print(f"pair {r} {tag}: " + " ".join(
+                f"{k}={got[k]:.3f}" for k in better if k in got), flush=True)
+    print(f"\n== {args.perfbench} seed {args.seed}, {args.pairs} pairs: "
+          "median [q1, q3] old -> new, pairs where new is better ==")
+    for name, direction in better.items():
+        old = [leg[name] for leg in runs["old"]]
+        new = [leg[name] for leg in runs["new"]]
+        sign = 1 if direction == "lower" else -1
+        wins = sum(sign * (o - n) > 0 for o, n in zip(old, new))
+        (o1, om, o3), (n1, nm, n3) = quartiles(old), quartiles(new)
+        print(f"{name} ({direction} is better): {om:.3f} [{o1:.3f}, {o3:.3f}] -> "
+              f"{nm:.3f} [{n1:.3f}, {n3:.3f}]; new better in {wins}/{args.pairs}; "
+              f"median gain {sign * (om - nm):+.3f} vs old IQR {o3 - o1:.3f}")
+
+
 def main() -> None:
+    if "--perfbench" in sys.argv[1:]:
+        perfbench_main(sys.argv[1:])
+        return
     old_root, new_root, rounds, names = (
         sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4:]
     )
