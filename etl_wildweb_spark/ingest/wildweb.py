@@ -144,25 +144,18 @@ def _envelope_fault() -> Column:
         END""")
 
 
-def _sound() -> Column:
-    """The envelope rows, carrying their ``fault``, that pass validation."""
-    return F.expr(_SOUND)
-
-
 def validate_envelopes(env: DataFrame) -> tuple[DataFrame, DataFrame]:
     """A6/A7 + HTTP status check: split envelopes into (ok, errors) on
     ``_envelope_fault``.  ok rows carry (center, retrieved, data); error
     rows record the stage that rejected them."""
     env = env.withColumn("fault", _envelope_fault())
-    ok = env.filter(_sound()).select(
-        "center",
-        F.element_at("envelope", 1).getField("retrieved").alias("retrieved"),
-        # null data → zero rows after explode (A7: coalesce to empty)
-        F.coalesce(
-            F.element_at("envelope", 1).getField("data"),
-            F.array().cast(T.ArrayType(INCIDENT_SCHEMA)),
-        ).alias("data"),
-    )
+    # one generator, like run_pipeline's: a filter on the sound rows would
+    # be pushed below the decode and decode each payload twice.  Null
+    # data → zero rows after explode (A7: coalesce to empty)
+    ok = env.select("center", F.inline(F.expr(f"""
+        CASE WHEN {_SOUND} THEN array(named_struct(
+          'retrieved', element_at(envelope, 1).retrieved,
+          'data', coalesce({_DATA}, array()))) END""")))
     errors = env.filter(F.col("fault").isNotNull()).select(
         "center", "fault.stage", "fault.reason", "payload"
     )
@@ -261,6 +254,15 @@ def to_features(incidents: DataFrame) -> DataFrame:
         AS feature"""))
 
 
+def _incident_features(
+    incidents: DataFrame, incident_range: str | None, now: Column
+) -> DataFrame:
+    """A9-A16 chained: the incidents inside ``incident_range`` before
+    ``now`` whose date parses and whose geo is valid, as features."""
+    in_window = filter_time_range(incidents, incident_range, now)
+    return to_features(filter_valid_geo(_dated(in_window)))
+
+
 def union_centers(dfs: Iterable[DataFrame]) -> DataFrame:
     """A17: union-all of per-center results (task.ts:70-73,142)."""
     return functools.reduce(DataFrame.unionByName, dfs)
@@ -321,9 +323,7 @@ def run_pipeline(
     # NULL data and unsound rows explode to nothing: no filter sits above
     # the decode for the optimizer to push below it and decode again
     incidents = env.select("center", F.inline(F.expr(f"CASE WHEN {_SOUND} THEN {_DATA} END")))
-    in_window = filter_time_range(incidents, incident_range, now)
-    features = to_features(filter_valid_geo(_dated(in_window)))
-    return features, _error_channel(env)
+    return _incident_features(incidents, incident_range, now), _error_channel(env)
 
 
 # --------------------------------------------------- registry entries
@@ -396,6 +396,13 @@ def _synth_incidents(spark, sf_dir: str) -> DataFrame:
     return o.select(*cols, *[c.alias(n) for n, c in fill.items()])
 
 
+def _synth_features(spark, sf_dir: str) -> DataFrame:
+    """The synth incidents' features over the '1 Week' before
+    ``_SYNTH_NOW``: the input of every synth query that builds them."""
+    now = F.lit(_SYNTH_NOW).cast("timestamp")
+    return _incident_features(_synth_incidents(spark, sf_dir), "1 Week", now)
+
+
 @query(
     "wildweb_pipeline",
     oracle=f"""
@@ -425,9 +432,7 @@ def wildweb_pipeline(spark, sf_dir: str) -> DataFrame:
     time-range filter ('1 Week', fixed now), minute-truncation date
     rewrite, JS-truthiness geo filter, feature assembly + flatten.
     Hash-checked against the identical derivation in DuckDB."""
-    incidents = _synth_incidents(spark, sf_dir)
-    in_window = filter_time_range(incidents, "1 Week", F.lit(_SYNTH_NOW).cast("timestamp"))
-    return flatten_features(to_features(filter_valid_geo(_dated(in_window))))
+    return flatten_features(_synth_features(spark, sf_dir))
 
 
 @query(

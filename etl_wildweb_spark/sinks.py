@@ -11,9 +11,12 @@ driver, so the sink is per-partition chunked submission:
   * failures are *status rows*, not exceptions — at-least-once with
     partial delivery, the reference's semantics (CHANGELOG.md:63
     "Error resilience") generalized;
-  * streaming uses the same code path via ``foreachBatch`` — one
-    delivery wave per micro-batch, idempotent downstream because
-    feature ids are stable (A12: 'wildweb-' + uuid).
+  * every delivery path — ``submit_features`` (``mapInPandas``) and the
+    batch and streaming ``wildweb_sink`` writers — posts the items of
+    one serializer (``_feature_json``) through one chunk loop
+    (``_post_chunks``), so the same features are posted byte-identically
+    whichever path carries them; stable feature ids (A12: 'wildweb-' +
+    uuid) make a redelivered micro-batch idempotent downstream.
 
 Transports are injectable exactly like sources/http.py: tests and the
 registered query use a hermetic fake; production swaps one callable.
@@ -21,7 +24,11 @@ registered query use a hermetic fake; production swaps one callable.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import glob
+import itertools
+import json
+import os
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -53,6 +60,35 @@ def https_post(url: str) -> PostFn:
     return post
 
 
+def _feature_json(features: DataFrame) -> DataFrame:
+    """The serializer of every delivery path: each row's ``feature``
+    struct (to_features output) as the JSON text of one GeoJSON Feature,
+    in one ``feature_json`` column.  ``to_json`` runs in the JVM
+    (codegen'd), so the Python side only joins strings; null fields stay
+    ``null``, as the reference's ``{...fire}`` metadata spread posts
+    them (task.ts:132-134)."""
+    return features.select(
+        F.to_json("feature", {"ignoreNullFields": "false"}).alias("feature_json")
+    )
+
+
+def _post_chunks(
+    items: Iterable[str], post: PostFn, chunk_size: int
+) -> Iterator[tuple[int, int]]:
+    """The chunk loop of every delivery path: POST the Feature JSON texts
+    ``items`` as FeatureCollections of at most ``chunk_size`` features
+    and yield ``(n_features, status)`` per chunk.  A transport exception
+    is status 0 — a failed chunk is data, not a failed task."""
+    it = iter(items)
+    while chunk := list(itertools.islice(it, chunk_size)):
+        fc = '{"type":"FeatureCollection","features":[' + ",".join(chunk) + "]}"
+        try:
+            status = post(fc)
+        except Exception:
+            status = 0  # transport-level failure
+        yield len(chunk), status
+
+
 def submit_features(
     features: DataFrame, post: PostFn = fake_post, chunk_size: int = 500
 ) -> DataFrame:
@@ -61,57 +97,23 @@ def submit_features(
     Input: a DataFrame with a ``feature`` struct column (to_features
     output).  Returns one status row per chunk — delivery outcomes are
     data, queryable and joinable against the error channel."""
-    payloads = features.select(F.to_json("feature").alias("fj"))
 
     def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        seq = 0
-
-        def flush(chunk: list[str]) -> pd.DataFrame:
-            nonlocal seq
-            fc = '{"type":"FeatureCollection","features":[' + ",".join(chunk) + "]}"
-            try:
-                status = post(fc)
-            except Exception:
-                status = 0  # transport-level failure
-            row = pd.DataFrame(
+        items = (fj for pdf in batches for fj in pdf["feature_json"])
+        for seq, (n, status) in enumerate(_post_chunks(items, post, chunk_size)):
+            yield pd.DataFrame(
                 {
                     "chunk_id": [f"p{pid}c{seq}"],
-                    "n_features": [len(chunk)],
+                    "n_features": [n],
                     "status": [status],
                     "ok": [200 <= status < 300],
                 }
             )
-            seq += 1
-            return row
 
-        buf: list[str] = []
-        for pdf in batches:
-            for fj in pdf["fj"]:
-                buf.append(fj)
-                if len(buf) >= chunk_size:
-                    yield flush(buf)
-                    buf = []
-        if buf:
-            yield flush(buf)
-
-    return payloads.mapInPandas(send, STATUS_SCHEMA)
-
-
-def stream_submit(
-    features_stream: DataFrame, post: PostFn = fake_post, chunk_size: int = 500
-):
-    """Streaming A18: same chunked submit per micro-batch via
-    foreachBatch.  Returns the DataStreamWriter (caller starts it)."""
-
-    def deliver(batch_df: DataFrame, epoch_id: int) -> None:
-        # count() forces full delivery of the wave; statuses could also
-        # be appended to a delivery-log table here
-        submit_features(batch_df, post, chunk_size).count()
-
-    return features_stream.writeStream.foreachBatch(deliver)
+    return _feature_json(features).mapInPandas(send, STATUS_SCHEMA)
 
 
 from .registry import query  # noqa: E402
@@ -124,21 +126,9 @@ def a18_submit_sink(spark, sf_dir: str) -> DataFrame:
     delivered-feature totals per outcome.  Total delivered features
     equals the pipeline's output cardinality (asserted in
     tests/test_sinks.py along with partial-failure semantics)."""
-    from .ingest.wildweb import (
-        _SYNTH_NOW,
-        _dated,
-        _synth_incidents,
-        filter_time_range,
-        filter_valid_geo,
-        to_features,
-    )
+    from .ingest.wildweb import _synth_features
 
-    incidents = _synth_incidents(spark, sf_dir)
-    in_window = filter_time_range(
-        incidents, "1 Week", F.lit(_SYNTH_NOW).cast("timestamp")
-    )
-    features = to_features(filter_valid_geo(_dated(in_window)))
-    statuses = submit_features(features, fake_post, chunk_size=200)
+    statuses = submit_features(_synth_features(spark, sf_dir), fake_post, chunk_size=200)
     return statuses.groupBy("ok").agg(
         F.sum("n_features").alias("n_features"),
         F.count(F.lit(1)).alias("n_chunks"),
@@ -156,13 +146,26 @@ class SubmitCommit:
         self.n_failed_chunks = n_failed_chunks
 
 
+def _write_manifest(path: str, name: str, messages, **extra) -> None:
+    """The driver-side commit of both writers: sum the tasks' commit
+    messages into the manifest file ``path/name``, ``extra`` first."""
+    msgs = list(messages)  # guard: may arrive as an iterator
+    manifest = {
+        **extra,
+        "n_rows": sum(m.n_rows for m in msgs),
+        "n_chunks": sum(m.n_chunks for m in msgs),
+        "n_failed_chunks": sum(m.n_failed_chunks for m in msgs),
+        "n_tasks": len(msgs),
+    }
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, name), "w") as f:
+        f.write(json.dumps(manifest))
+
+
 def _make_submit_writer_classes():
     """Build the writer/datasource classes lazily so importing sinks.py
     never requires pyspark.sql.datasource (kept import-gated like the
     source side)."""
-    import json as _json
-    import os as _os
-
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceArrowWriter,
@@ -189,57 +192,30 @@ def _make_submit_writer_classes():
         ~16k rows/s regardless of sink logic — the single slowest
         query in the 16x sweep at 101 s), and even Arrow batches of
         nested structs pay a per-row ``to_pylist`` + ``json.dumps``
-        in Python.  So write_submit serializes each feature to its
-        JSON string JVM-SIDE with ``to_json`` (whole-stage codegen),
-        and this writer receives RecordBatches of ONE string column —
-        assembling a FeatureCollection chunk is a C-speed
-        ``",".join``.  Same commit protocol, same at-least-once chunk
-        semantics; 16x sweep: 101 s (Row) → 33 s (Arrow structs) →
-        7.3 s (Arrow + JVM serialize)."""
+        in Python.  So the writer's input is ``_feature_json`` output,
+        each feature already its JSON string JVM-SIDE, and this writer
+        receives RecordBatches of ONE string column — assembling a
+        FeatureCollection chunk is a C-speed ``",".join``.  Same
+        commit protocol, same at-least-once chunk semantics; 16x
+        sweep: 101 s (Row) → 33 s (Arrow structs) → 7.3 s (Arrow +
+        JVM serialize)."""
 
         def __init__(self, options: dict) -> None:
             self.chunk_size = int(options.get("chunkSize", 500))
             self.path = options["path"]
 
         def write(self, iterator):
-            n_rows = n_chunks = n_failed = 0
-            buf: list[str] = []
-
-            def flush() -> None:
-                nonlocal n_chunks, n_failed
-                if not buf:
-                    return
-                fc = (
-                    '{"type":"FeatureCollection","features":['
-                    + ",".join(buf)
-                    + "]}"
-                )
-                status = fake_post(fc)
-                n_chunks += 1
-                if not 200 <= status < 300:
-                    n_failed += 1
-                buf.clear()
-
-            for batch in iterator:  # pyarrow.RecordBatch per ~10k rows
-                for s in batch.column(0).to_pylist():
-                    buf.append(s)
-                    if len(buf) >= self.chunk_size:
-                        flush()
-                n_rows += batch.num_rows
-            flush()
-            return _Commit(n_rows, n_chunks, n_failed)
+            # one pyarrow.RecordBatch per ~10k rows
+            items = (s for batch in iterator for s in batch.column(0).to_pylist())
+            chunks = list(_post_chunks(items, fake_post, self.chunk_size))
+            return _Commit(
+                sum(n for n, _ in chunks),
+                len(chunks),
+                sum(not 200 <= status < 300 for _, status in chunks),
+            )
 
         def commit(self, messages) -> None:
-            msgs = list(messages)  # guard: may arrive as an iterator
-            manifest = {
-                "n_rows": sum(m.n_rows for m in msgs),
-                "n_chunks": sum(m.n_chunks for m in msgs),
-                "n_failed_chunks": sum(m.n_failed_chunks for m in msgs),
-                "n_tasks": len(msgs),
-            }
-            _os.makedirs(self.path, exist_ok=True)
-            with open(_os.path.join(self.path, "_MANIFEST.json"), "w") as f:
-                f.write(_json.dumps(manifest))
+            _write_manifest(self.path, "_MANIFEST.json", messages)
 
         def abort(self, messages) -> None:
             # no manifest ⇒ downstream treats the wave as undelivered
@@ -255,8 +231,7 @@ def _make_submit_writer_classes():
         own manifest instead of double-counting, which is exactly the
         idempotence contract Structured Streaming's epoch commit
         expects of a sink (at-least-once delivery, exactly-once
-        manifest).  foreachBatch (stream_submit) remains the
-        data-path alternative; this is the native
+        manifest).  This is the native
         ``writeStream.format("wildweb_sink")`` form."""
 
         # explicit override: with (StreamArrowWriter, SubmitWriter)
@@ -266,19 +241,9 @@ def _make_submit_writer_classes():
             return WildWebSubmitWriter.write(self, iterator)
 
         def commit(self, messages, batchId: int) -> None:  # noqa: N803
-            msgs = list(messages)
-            manifest = {
-                "batch_id": batchId,
-                "n_rows": sum(m.n_rows for m in msgs),
-                "n_chunks": sum(m.n_chunks for m in msgs),
-                "n_failed_chunks": sum(m.n_failed_chunks for m in msgs),
-                "n_tasks": len(msgs),
-            }
-            _os.makedirs(self.path, exist_ok=True)
-            with open(
-                _os.path.join(self.path, f"batch-{batchId}.json"), "w"
-            ) as f:
-                f.write(_json.dumps(manifest))
+            _write_manifest(
+                self.path, f"batch-{batchId}.json", messages, batch_id=batchId
+            )
 
         def abort(self, messages, batchId: int) -> None:  # noqa: N803
             # no manifest for this epoch ⇒ the batch replays
@@ -298,41 +263,22 @@ def _make_submit_writer_classes():
     return WildWebSinkSource
 
 
-def _serialize_features(features: DataFrame) -> DataFrame:
-    """Serialize each feature record to its JSON string in the JVM
-    (to_json is codegen'd; ignoreNullFields=false keeps explicit nulls,
-    matching json.dumps of the row dict) — the Python writer then only
-    joins strings.  Keeping serialization out of Python is what makes
-    the sink's throughput delivery-bound instead of pickle-bound.
-    SHARED by the batch and streaming writers so their payloads can
-    never diverge."""
-    return features.select(
-        F.to_json(
-            F.struct(*[F.col(c) for c in features.columns]),
-            {"ignoreNullFields": "false"},
-        ).alias("feature_json")
-    )
-
-
 def write_submit(
     features: DataFrame, manifest_dir: str, chunk_size: int = 500
 ) -> dict:
-    """Deliver ``features`` through the custom sink and return the
-    committed manifest."""
-    import json as _json
-    import os as _os
-
+    """Deliver ``features`` (a ``feature`` struct column) through the
+    custom sink and return the committed manifest."""
     spark = features.sparkSession
     spark.dataSource.register(_make_submit_writer_classes())
     (
-        _serialize_features(features).write.format("wildweb_sink")
+        _feature_json(features).write.format("wildweb_sink")
         .option("chunkSize", chunk_size)
         .option("path", manifest_dir)
         .mode("append")
         .save()
     )
-    with open(_os.path.join(manifest_dir, "_MANIFEST.json")) as f:
-        return _json.loads(f.read())
+    with open(os.path.join(manifest_dir, "_MANIFEST.json")) as f:
+        return json.loads(f.read())
 
 
 def write_submit_stream(
@@ -342,11 +288,11 @@ def write_submit_stream(
     chunk_size: int = 500,
     timeout_sec: int = 420,
 ) -> list[dict]:
-    """Deliver a STREAMING features frame through the native
-    ``writeStream.format("wildweb_sink")`` path (Trigger.AvailableNow,
-    bounded) and return THIS invocation's per-batch manifests, sorted
-    by batch id.  Same JVM-side to_json pre-serialization as the batch
-    path.
+    """Deliver a STREAMING features frame (a ``feature`` struct column)
+    through the native ``writeStream.format("wildweb_sink")`` path
+    (Trigger.AvailableNow, bounded) and return THIS invocation's
+    per-batch manifests, sorted by batch id.  Same ``_feature_json``
+    serializer as the batch path.
 
     Manifest files from an earlier run with a DIFFERENT checkpoint are
     excluded (a stale ``batch-*.json`` must not be
@@ -359,7 +305,7 @@ def write_submit_stream(
     spark = features_stream.sparkSession
     spark.dataSource.register(_make_submit_writer_classes())
     q = (
-        _serialize_features(features_stream)
+        _feature_json(features_stream)
         .writeStream.format("wildweb_sink")
         .option("chunkSize", chunk_size)
         .option("path", manifest_dir)
@@ -380,19 +326,15 @@ def _collect_stream_manifests(
     """Per-epoch manifests scoped to ``checkpoint_dir``'s commit log —
     the authoritative lineage — so foreign leftovers in the manifest
     dir never leak into the result."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
     committed = {
         int(name)
-        for name in _os.listdir(_os.path.join(checkpoint_dir, "commits"))
+        for name in os.listdir(os.path.join(checkpoint_dir, "commits"))
         if name.isdigit()
     }
     manifests = []
-    for p in sorted(_glob.glob(f"{manifest_dir}/batch-*.json")):
+    for p in sorted(glob.glob(f"{manifest_dir}/batch-*.json")):
         with open(p) as f:
-            m = _json.loads(f.read())
+            m = json.loads(f.read())
         if m["batch_id"] in committed:
             manifests.append(m)
     return sorted(manifests, key=lambda m: m["batch_id"])
@@ -407,23 +349,13 @@ def b94_datasource_writer(spark, sf_dir: str) -> DataFrame:
     the pipeline cardinality — asserted in tests/test_sinks.py."""
     import tempfile
 
-    from .ingest.wildweb import (
-        _SYNTH_NOW,
-        _dated,
-        _synth_incidents,
-        filter_time_range,
-        filter_valid_geo,
-        to_features,
-    )
+    from .ingest.wildweb import _synth_features
     from .io import local_frame
 
-    incidents = _synth_incidents(spark, sf_dir)
-    in_window = filter_time_range(
-        incidents, "1 Week", F.lit(_SYNTH_NOW).cast("timestamp")
-    )
-    features = to_features(filter_valid_geo(_dated(in_window)))
     manifest = write_submit(
-        features, tempfile.mkdtemp(prefix="submitsink_"), chunk_size=200
+        _synth_features(spark, sf_dir),
+        tempfile.mkdtemp(prefix="submitsink_"),
+        chunk_size=200,
     )
     return local_frame(
         spark,
@@ -442,15 +374,15 @@ def b94_datasource_writer(spark, sf_dir: str) -> DataFrame:
 @query("b135_stream_sink")  # per-batch manifests, task-count-dependent → rows-only
 def b135_stream_sink(spark, sf_dir: str) -> DataFrame:
     """A18 delivery as a NATIVE streaming sink: the events feed read
-    through readStream, delivered by ``writeStream.format(
-    "wildweb_sink")`` (DataSourceStreamArrowWriter) under
-    Trigger.AvailableNow, with one batchId-keyed manifest per epoch —
-    the idempotent-commit contract a replayed micro-batch needs.
-    Complements b94 (batch writer, same commit protocol) and
-    stream_submit (foreachBatch).  Returns the per-batch manifests;
-    tests/test_sinks.py asserts total rows == the batch count of the
-    same frame and that a replayed batch id overwrites, not
-    double-counts."""
+    through readStream, each event wrapped as a ``feature`` struct and
+    delivered by ``writeStream.format("wildweb_sink")``
+    (DataSourceStreamArrowWriter) under Trigger.AvailableNow, with one
+    batchId-keyed manifest per epoch — the idempotent-commit contract a
+    replayed micro-batch needs.  Complements b94 (batch writer, same
+    commit protocol, serializer and chunk loop).  Returns the per-batch
+    manifests; tests/test_sinks.py asserts total rows == the batch
+    count of the same frame and that a replayed batch id overwrites,
+    not double-counts."""
     import tempfile
 
     from .io import local_frame
@@ -459,8 +391,10 @@ def b135_stream_sink(spark, sf_dir: str) -> DataFrame:
     import shutil
 
     s = events_stream(spark, sf_dir).select(
-        "event_id", "user_id", "event_type",
-        F.col("ts").cast("string").alias("ts"),
+        F.struct(
+            "event_id", "user_id", "event_type",
+            F.col("ts").cast("string").alias("ts"),
+        ).alias("feature")
     )
     mdir = tempfile.mkdtemp(prefix="streamsink_m_")
     ckdir = tempfile.mkdtemp(prefix="streamsink_ck_")

@@ -17,7 +17,7 @@ Scale shape: every stage between source and sink is a narrow map
 (parse/validate/explode/filter/project — zero shuffles, see
 test_wildweb_pipeline_no_shuffle), so each micro-batch is
 embarrassingly parallel end-to-end; feature serialization stays
-JVM-side (to_json, sinks._serialize_features) and the Python sink
+JVM-side (to_json, sinks._feature_json) and the Python sink
 writer only joins strings.  Nothing in the composition adds state, so
 the streaming query needs no watermark and its checkpoint holds only
 source offsets + epoch commits — O(1) regardless of data volume.
@@ -61,8 +61,8 @@ def run_stream_pipeline(
     from ..ingest.wildweb import run_pipeline
     from ..sinks import (
         _collect_stream_manifests,
+        _feature_json,
         _make_submit_writer_classes,
-        _serialize_features,
     )
     from ..sources.http import read_centers_stream
 
@@ -77,7 +77,7 @@ def run_stream_pipeline(
     )
     spark.dataSource.register(_make_submit_writer_classes())
     q = (
-        _serialize_features(features)
+        _feature_json(features)
         .writeStream.format("wildweb_sink")
         .option("chunkSize", chunk_size)
         .option("path", manifest_dir)

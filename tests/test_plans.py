@@ -72,17 +72,22 @@ def test_wildweb_pipeline_no_shuffle(plans):
     assert audit.codegen_spans(p) >= 1
 
 
+def _wildweb_source(spark, tmp_path):
+    """A parquet source of raw envelope rows."""
+    path = str(tmp_path / "envelopes.parquet")
+    spark.createDataFrame(
+        [("C1", "[]", True)], "center string, payload string, http_ok boolean"
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
 def _wildweb_channels(spark, tmp_path):
     """run_pipeline's (features, errors) over a parquet source."""
     from pyspark.sql import functions as F
 
     from etl_wildweb_spark.ingest.wildweb import run_pipeline
 
-    path = str(tmp_path / "envelopes.parquet")
-    spark.createDataFrame(
-        [("C1", "[]", True)], "center string, payload string, http_ok boolean"
-    ).write.parquet(path)
-    return run_pipeline(spark.read.parquet(path), "1 Week", F.current_timestamp())
+    return run_pipeline(_wildweb_source(spark, tmp_path), "1 Week", F.current_timestamp())
 
 
 def test_wildweb_error_channel_one_scan_one_decode(spark, tmp_path):
@@ -95,14 +100,32 @@ def test_wildweb_error_channel_one_scan_one_decode(spark, tmp_path):
     assert p.count("from_json(") == 1, p
 
 
-def test_wildweb_features_channel_one_decode(spark, tmp_path):
-    """run_pipeline's features channel decodes each payload once: no
-    filter sits on the decoded envelope for the optimizer to push below
-    the decode, where it would be decoded a second time."""
-    features, _ = _wildweb_channels(spark, tmp_path)
-    p = audit.formatted_plan(features)
+@pytest.mark.parametrize("chain", ["run_pipeline", "public_stages"])
+def test_wildweb_features_channel_one_decode(spark, tmp_path, chain):
+    """run_pipeline's features channel, and the incidents of the public
+    stages chained, decode each payload once: no filter sits on the
+    decoded envelope for the optimizer to push below the decode, where
+    it would be decoded a second time."""
+    from etl_wildweb_spark.ingest import wildweb as ww
+
+    if chain == "run_pipeline":
+        out, _ = _wildweb_channels(spark, tmp_path)
+    else:
+        env = ww.parse_envelope(_wildweb_source(spark, tmp_path))
+        out = ww.explode_incidents(ww.validate_envelopes(env)[0])
+    p = audit.formatted_plan(out)
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
     assert p.count("from_json(") == 1, p
+
+
+def test_submit_sink_is_map_in_pandas(spark, tmp_path):
+    """The benchmark's trace parser reads the submit sink's bytes sent
+    to Python from its MapInPandas node, so the sink must plan as one."""
+    from etl_wildweb_spark import sinks
+
+    features, _ = _wildweb_channels(spark, tmp_path)
+    p = audit.formatted_plan(sinks.submit_features(features, sinks.fake_post))
+    assert "MapInPandas" in p, p
 
 
 def test_b30_broadcasts_query_side(plans):

@@ -1,12 +1,52 @@
 """A18 submit-sink tests: chunked delivery, partial-failure semantics,
-streaming foreachBatch path."""
+the batch and streaming DataSource writers, and the one payload every
+delivery path posts."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import uuid
+
 from etl_wildweb_spark import registry, sinks
+from etl_wildweb_spark.ingest import wildweb as ww
 from pyspark.sql import functions as F
 
+from .test_wildweb import envelope_payload, incident
+
 registry.load_all()
+
+_FC_PREFIX = '{"type":"FeatureCollection","features":['
+
+
+def recording_post(directory: str):
+    """A transport double that accepts every chunk and keeps its body as
+    one file in ``directory`` (executor processes share the filesystem)."""
+
+    def post(fc_json: str) -> int:
+        with open(os.path.join(directory, uuid.uuid4().hex), "w") as f:
+            f.write(fc_json)
+        return 200
+
+    return post
+
+
+def posted_items(directory: str) -> list[str]:
+    """The Feature JSON texts of every body ``recording_post`` kept in
+    ``directory``, byte for byte, sorted."""
+    dec = json.JSONDecoder()
+    items = []
+    for path in glob.glob(os.path.join(directory, "*")):
+        with open(path) as f:
+            body = f.read()
+        assert body.startswith(_FC_PREFIX) and body.endswith("]}"), body
+        i = len(_FC_PREFIX)
+        while body[i] != "]":
+            _, end = dec.raw_decode(body, i)
+            items.append(body[i:end])
+            i = end + (body[end] == ",")
+    return sorted(items)
 
 
 def _features(spark, n=1000, poison_ids=()):
@@ -48,24 +88,6 @@ def test_a18_registered_query(spark, sf_dir):
     assert out[True].n_features == want
 
 
-def test_stream_submit_foreachbatch(spark, sf_dir):
-    import tempfile
-
-    from etl_wildweb_spark.streaming.windows import events_stream
-
-    s = events_stream(spark, sf_dir).select(
-        F.struct(F.col("event_id").alias("id")).alias("feature")
-    )
-    q = (
-        sinks.stream_submit(s, sinks.fake_post, chunk_size=1000)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.lastProgress is not None
-
-
 def test_datasource_writer_manifest_counts(spark, sf_dir, tmp_path):
     """b94: the committed manifest's row total equals the delivered
     DataFrame's cardinality and chunk math holds."""
@@ -76,7 +98,7 @@ def test_datasource_writer_manifest_counts(spark, sf_dir, tmp_path):
 
     feats = (
         table(spark, sf_dir, "events")
-        .select("event_id", "event_type", "value")
+        .select(F.struct("event_id", "event_type", "value").alias("feature"))
         .repartition(4)
     )
     n = feats.count()
@@ -95,9 +117,13 @@ def test_datasource_writer_counts_failed_chunks(spark, tmp_path):
     lands with the failure counted."""
     from etl_wildweb_spark.sinks import write_submit
 
-    df = spark.createDataFrame(
-        [("ok-1",), ("ok-2",), ("POISON",), ("ok-3",)], "payload string"
-    ).coalesce(1)
+    df = (
+        spark.createDataFrame(
+            [("ok-1",), ("ok-2",), ("POISON",), ("ok-3",)], "payload string"
+        )
+        .select(F.struct("payload").alias("feature"))
+        .coalesce(1)
+    )
     manifest = write_submit(df, str(tmp_path / "m2"), chunk_size=2)
     assert manifest["n_rows"] == 4
     assert manifest["n_failed_chunks"] >= 1
@@ -129,7 +155,7 @@ def test_stream_sink_native_writer(spark, sf_dir, tmp_path):
 
     def run():
         s = events_stream(spark, sf_dir).select(
-            "event_id", "user_id", "event_type"
+            F.struct("event_id", "user_id", "event_type").alias("feature")
         )
         return write_submit_stream(s, mdir, ckdir, chunk_size=4096)
 
@@ -144,3 +170,78 @@ def test_stream_sink_native_writer(spark, sf_dir, tmp_path):
     files_after = sorted(glob.glob(f"{mdir}/batch-*.json"))
     assert files_after == files_before
     assert sum(m["n_rows"] for m in manifests2) == n_events  # unchanged
+
+
+def test_post_chunks_bodies_sizes_and_transport_failure():
+    """The chunk loop every path shares, without Spark: chunks of at most
+    ``chunk_size``, the FeatureCollection body text, and a raising
+    transport recorded as status 0 while later chunks still post."""
+    bodies = []
+
+    def post(fc_json: str) -> int:
+        bodies.append(fc_json)
+        if len(bodies) == 2:
+            raise OSError("connection reset")
+        return 201
+
+    items = ['{"id":1}', '{"id":2}', '{"id":3}', '{"id":4}', '{"id":5}']
+    assert list(sinks._post_chunks(items, post, 2)) == [(2, 201), (2, 0), (1, 201)]
+    assert bodies == [
+        _FC_PREFIX + '{"id":1},{"id":2}]}',
+        _FC_PREFIX + '{"id":3},{"id":4}]}',
+        _FC_PREFIX + '{"id":5}]}',
+    ]
+    assert list(sinks._post_chunks(iter([]), post, 2)) == []
+
+
+def test_every_path_posts_the_same_geojson_features(spark, tmp_path, monkeypatch):
+    """Each item a sink posts is one GeoJSON Feature whose metadata keeps
+    all 16 incident fields, nulls as ``null`` (the reference's
+    ``{...fire}`` spread, task.ts:132-134), and submit_features, the
+    batch writer and the stream writer post byte-identical items for the
+    same run_pipeline features."""
+    src = str(tmp_path / "envelopes.parquet")
+    rows = [
+        ("C1", envelope_payload([incident(uuid="a"), incident(uuid="b", acres="3")]), True),
+        ("C2", envelope_payload([incident(uuid="c", resources=[{"res": "E-1"}])]), True),
+    ]
+    spark.createDataFrame(rows, "center string, payload string, http_ok boolean").write.parquet(src)
+    raw = spark.read.parquet(src)
+
+    def features(raw_df):
+        return ww.run_pipeline(raw_df, None, F.current_timestamp())[0]
+
+    def record(name: str):
+        d = tmp_path / name
+        d.mkdir()
+        return str(d)
+
+    submitted = record("submit_features")
+    statuses = sinks.submit_features(features(raw), recording_post(submitted), chunk_size=2)
+    assert sum(r.n_features for r in statuses.collect()) == 3
+
+    # the writers post through the module's transport double
+    written, streamed = record("write_submit"), record("write_submit_stream")
+    monkeypatch.setattr(sinks, "fake_post", recording_post(written))
+    sinks.write_submit(features(raw), str(tmp_path / "m"), chunk_size=2)
+    monkeypatch.setattr(sinks, "fake_post", recording_post(streamed))
+    stream = spark.readStream.schema(raw.schema).parquet(src)
+    sinks.write_submit_stream(
+        features(stream), str(tmp_path / "sm"), str(tmp_path / "ck"), chunk_size=2
+    )
+
+    items = posted_items(submitted)
+    assert len(items) == 3
+    assert posted_items(written) == items
+    assert posted_items(streamed) == items
+    for item in items:
+        feature = json.loads(item)
+        assert set(feature) == {"id", "type", "properties", "geometry"}
+        metadata = feature["properties"]["metadata"]
+        assert list(metadata) == ww.INCIDENT_FIELDS
+        assert metadata["ic"] is None and metadata["fuels"] is None
+        assert metadata["webComment"] is None
+    by_id = {json.loads(i)["id"]: json.loads(i)["properties"]["metadata"] for i in items}
+    assert by_id["wildweb-a"]["acres"] is None and by_id["wildweb-b"]["acres"] == "3"
+    assert by_id["wildweb-a"]["resources"] is None
+    assert by_id["wildweb-c"]["resources"] == [{"res": "E-1"}]

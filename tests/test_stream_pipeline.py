@@ -181,3 +181,35 @@ def test_stream_error_channel_matches_batch(spark, sf_dir, batch_features):
         shutil.rmtree(tmp, ignore_errors=True)
     assert out["features"] == MAX_POLLS * len(batch_features)
     assert out["errors"] == want_err
+
+
+def test_composed_sink_posts_the_batch_items(spark, tmp_path, monkeypatch):
+    """The composed query posts, per poll generation, exactly the Feature
+    JSON items submit_features posts for the batch pipeline over the
+    same feed, byte for byte: one serializer behind both sinks."""
+    from etl_wildweb_spark import sinks
+    from etl_wildweb_spark.ingest.wildweb import run_pipeline
+    from etl_wildweb_spark.sources.http import _DEMO_CENTERS, read_centers
+    from etl_wildweb_spark.streaming.pipeline import run_stream_pipeline
+
+    from .test_sinks import posted_items, recording_post
+
+    batch_dir, stream_dir = tmp_path / "batch", tmp_path / "stream"
+    batch_dir.mkdir()
+    stream_dir.mkdir()
+    raw = read_centers(spark, _DEMO_CENTERS, transport="fake")
+    features, _ = run_pipeline(raw, None, F.current_timestamp())
+    sinks.submit_features(features, recording_post(str(batch_dir)), chunk_size=8).collect()
+
+    monkeypatch.setattr(sinks, "fake_post", recording_post(str(stream_dir)))
+    run_stream_pipeline(
+        spark,
+        _DEMO_CENTERS,
+        max_polls=MAX_POLLS,
+        manifest_dir=str(tmp_path / "m"),
+        checkpoint_dir=str(tmp_path / "ck"),
+        chunk_size=8,
+    )
+    batch = posted_items(str(batch_dir))
+    assert batch
+    assert posted_items(str(stream_dir)) == sorted(batch * MAX_POLLS)

@@ -267,16 +267,17 @@ def test_resources_raw_json_fragments(spark):
 def test_resources_roundtrip_through_submit_json(spark):
     # ADVICE round 1: the submit sink's to_json must re-emit resources
     # as raw JSON values (an array<string> typing double-encoded object
-    # elements as escaped strings).  Serialize the feature exactly as
-    # sinks.submit_features does and check the payload byte-for-byte
+    # elements as escaped strings).  Serialize the feature with the
+    # sinks' one serializer and check the payload byte-for-byte
     # semantics.
     from etl_wildweb_spark.ingest.wildweb import run_pipeline
+    from etl_wildweb_spark.sinks import _feature_json
 
     res = [{"res": "E-1", "n": 2}, "T-2", 3, None]
     rows = [("C1", envelope_payload([incident(resources=res)]), True)]
     raw = spark.createDataFrame(rows, "center string, payload string, http_ok boolean")
     features, _ = run_pipeline(raw, None, F.current_timestamp())
-    fc_json = features.select(F.to_json("feature").alias("j")).collect()[0].j
+    fc_json = _feature_json(features).collect()[0].feature_json
     feature = json.loads(fc_json)
     assert feature["properties"]["metadata"]["resources"] == [
         {"n": 2, "res": "E-1"},  # variant normalizes key order only
