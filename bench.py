@@ -21,8 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set: one per operator family that matters at scale.  Names not
-# (yet) registered are skipped so the bench never breaks mid-build.
+# Headline set: one per operator family that matters at scale.
 BENCH_QUERIES = [
     "flagship_revenue_by_nation",
     "b01_scan_filter_project",
@@ -161,15 +160,10 @@ BENCH_QUERIES = [
     # position-ordered reassembly — NOTE: like b160, re-trains b156's
     # merge table internally, so its bench time is train + decode
     # end-to-end), and the stream-stream LEFT SEMI interval join
-    # (b175_ivfpq_observed is not benched separately: it re-runs the
-    # already-benched b175 plus a 10-query exact probe)
     "b176_bpe_decode",
     "b177_stream_semi_join",
     # linear quality classifier (gram explode + broadcast
-    # weight dim + one doc groupBy).  (b175_ivfpq_observed_sampled is
-    # not benched separately, same rationale as the full observed
-    # twin: it re-runs the already-benched b175 plus a SAMPLED exact
-    # probe; its 16x scaling note lives in SCALE.md)
+    # weight dim + one doc groupBy)
     "b178_quality_classifier",
     # b180 gets its own bench row: it shares b177's fixed stream-stream
     # machinery, but the FULL-OUTER eviction-time null emission is the one
@@ -235,6 +229,9 @@ def main() -> None:
     from etl_wildweb_spark.session import get_spark
 
     registry.load_all()
+    unregistered = [n for n in BENCH_QUERIES if n not in registry.QUERIES]
+    if unregistered:
+        raise SystemExit(f"bench queries not registered: {unregistered}")
     spark = get_spark("etl-wildweb-spark-bench")
 
     # Per-query: one untimed warmup pass, then the MEDIAN of 3 timed
@@ -278,16 +275,11 @@ def main() -> None:
     CALIB_EVERY = 10
     calib_series: list[dict] = []
     for qi, name in enumerate(BENCH_QUERIES):
-        # sample BEFORE the registration check so an unregistered name
-        # at a multiple of CALIB_EVERY can't open a gap in the series
         if qi % CALIB_EVERY == 0:
             calib_series.append(
                 {"at_query": name, "sec": round(host_calibration_sec(), 4)}
             )
-        fn = registry.QUERIES.get(name)
-        if fn is None:
-            continue
-        samples = measure(fn, warm=True)
+        samples = measure(registry.QUERIES[name], warm=True)
         times[name] = round(sorted(samples)[len(samples) // 2], 3)
         mins[name] = round(min(samples), 3)
 

@@ -67,13 +67,3 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     r = dot(a, b) / den
     return F.when((den != F.lit(0.0)) & ~F.isnan(r), clamp_cos(r))
 
-
-def sq_l2(a: Column | str, b: Column | str) -> Column:
-    """Squared euclidean distance Σ(aᵢ−bᵢ)² — sequential left-to-right
-    double accumulation like the rest of this module, matching a numpy
-    float64 sum over the same operand order to ~1 ulp per term."""
-    return F.aggregate(
-        F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )

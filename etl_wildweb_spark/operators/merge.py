@@ -40,24 +40,9 @@ _UPD_MOD = 10
 _INS_MOD = 97
 _INS_OFFSET = 1_000_000_000
 
-
-def merge_upsert(snapshot: DataFrame, changes: DataFrame, key: str) -> DataFrame:
-    """Generic SCD-1 merge: rows of ``changes`` replace same-key rows of
-    ``snapshot``; unmatched change rows are inserts.  Columns must be
-    union-compatible by name."""
-    tagged = changes.withColumn("_rank", F.lit(1)).unionByName(
-        snapshot.withColumn("_rank", F.lit(0))
-    )
-    payload = [c for c in tagged.columns if c not in (key, "_rank")]
-    picked = tagged.groupBy(key).agg(
-        F.max_by(F.struct(*payload), F.col("_rank")).alias("_row")
-    )
-    return picked.select(key, *[F.col(f"_row.{c}").alias(c) for c in payload])
-
-
-@query(
-    "b38_merge_upsert",
-    oracle=f"""
+#: Both b38 strategies implement the same MERGE, so they share one
+#: oracle: the change batch derived as in _b38_changes, changes-win.
+_B38_ORACLE = f"""
     WITH changes AS (
       SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
              o_totalprice + 100.0 AS o_totalprice, o_orderdate, o_orderpriority
@@ -75,15 +60,12 @@ def merge_upsert(snapshot: DataFrame, changes: DataFrame, key: str) -> DataFrame
     FROM merged
     QUALIFY row_number() OVER (PARTITION BY o_orderkey
                                ORDER BY _rank DESC) = 1
-    """,
-)
-def b38_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD-1 MERGE over orders: a derived change batch (status+price
-    updates for every 10th key, fresh inserts above the key space for
-    every 97th) applied with changes-win precedence.  Result cardinality
-    = |snapshot| + |inserts|; updated rows carry the changed values
-    (asserted in tests/test_merge.py along with update/insert counts)."""
-    o = table(spark, sf_dir, "orders")
+    """
+
+
+def _b38_changes(o: DataFrame) -> DataFrame:
+    """The change batch the constants above describe, derived from the
+    orders snapshot ``o``."""
     updates = o.filter(F.col("o_orderkey") % _UPD_MOD == 0).select(
         "o_orderkey",
         "o_custkey",
@@ -100,7 +82,32 @@ def b38_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.lit("NEW").alias("o_orderpriority"),
     )
-    return merge_upsert(o, updates.unionByName(inserts), "o_orderkey")
+    return updates.unionByName(inserts)
+
+
+def merge_upsert(snapshot: DataFrame, changes: DataFrame, key: str) -> DataFrame:
+    """Generic SCD-1 merge: rows of ``changes`` replace same-key rows of
+    ``snapshot``; unmatched change rows are inserts.  Columns must be
+    union-compatible by name."""
+    tagged = changes.withColumn("_rank", F.lit(1)).unionByName(
+        snapshot.withColumn("_rank", F.lit(0))
+    )
+    payload = [c for c in tagged.columns if c not in (key, "_rank")]
+    picked = tagged.groupBy(key).agg(
+        F.max_by(F.struct(*payload), F.col("_rank")).alias("_row")
+    )
+    return picked.select(key, *[F.col(f"_row.{c}").alias(c) for c in payload])
+
+
+@query("b38_merge_upsert", oracle=_B38_ORACLE)
+def b38_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD-1 MERGE over orders: a derived change batch (status+price
+    updates for every 10th key, fresh inserts above the key space for
+    every 97th) applied with changes-win precedence.  Result cardinality
+    = |snapshot| + |inserts|; updated rows carry the changed values
+    (asserted in tests/test_merge.py along with update/insert counts)."""
+    o = table(spark, sf_dir, "orders")
+    return merge_upsert(o, _b38_changes(o), "o_orderkey")
 
 
 def merge_upsert_broadcast(
@@ -137,50 +144,13 @@ def merge_upsert_broadcast(
     return updated.unionByName(inserts.select(key, *payload))
 
 
-@query(
-    "b38_merge_upsert_broadcast",
-    oracle=f"""
-    WITH changes AS (
-      SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
-             o_totalprice + 100.0 AS o_totalprice, o_orderdate, o_orderpriority
-      FROM orders WHERE o_orderkey % {_UPD_MOD} = 0
-      UNION ALL
-      SELECT o_orderkey + {_INS_OFFSET}, o_custkey, 'N',
-             o_totalprice, o_orderdate, 'NEW'
-      FROM orders WHERE o_orderkey % {_INS_MOD} = 0),
-    merged AS (
-      SELECT *, 1 AS _rank FROM changes
-      UNION ALL
-      SELECT *, 0 AS _rank FROM orders)
-    SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-           o_orderdate, o_orderpriority
-    FROM merged
-    QUALIFY row_number() OVER (PARTITION BY o_orderkey
-                               ORDER BY _rank DESC) = 1
-    """,
-)
+@query("b38_merge_upsert_broadcast", oracle=_B38_ORACLE)
 def b38_merge_upsert_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """b38_merge_upsert's exact semantics (same oracle) on the
     broadcast plan — proof the two physical strategies agree, which is
     the invariant that lets a planner pick by change-batch size."""
     o = table(spark, sf_dir, "orders")
-    updates = o.filter(F.col("o_orderkey") % _UPD_MOD == 0).select(
-        "o_orderkey",
-        "o_custkey",
-        F.lit("X").alias("o_orderstatus"),
-        (F.col("o_totalprice") + 100.0).alias("o_totalprice"),
-        "o_orderdate",
-        "o_orderpriority",
-    )
-    inserts = o.filter(F.col("o_orderkey") % _INS_MOD == 0).select(
-        (F.col("o_orderkey") + _INS_OFFSET).alias("o_orderkey"),
-        "o_custkey",
-        F.lit("N").alias("o_orderstatus"),
-        "o_totalprice",
-        "o_orderdate",
-        F.lit("NEW").alias("o_orderpriority"),
-    )
-    return merge_upsert_broadcast(o, updates.unionByName(inserts), "o_orderkey")
+    return merge_upsert_broadcast(o, _b38_changes(o), "o_orderkey")
 
 
 def stream_scd1_snapshot(

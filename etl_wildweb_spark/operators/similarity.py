@@ -14,11 +14,12 @@ cost without re-bucketing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine, dot, sq_l2
+from ..functions.vector import cosine, dot
 from ..io import lift_parallelism, table
+from ..metrics import observed
 from ..registry import query
 
 TOP_K = 10
@@ -326,7 +327,7 @@ def b40_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_with_recall(
     spark: SparkSession, sf_dir: str, kind: str
-) -> tuple[DataFrame, "F.Observation"]:
+) -> tuple[DataFrame, Observation]:
     """Wrap an ANN path with a ``df.observe`` recall@k probe: the ANN
     result left-joins the exact top-k on the SAME query sample and the
     observation aggregates hit-rate *during the action* — no second
@@ -339,43 +340,22 @@ def ann_with_recall(
     Returns (observed DataFrame, Observation); after any action on the
     DataFrame, ``obs.get`` carries ``recall_at_10`` and ``n_ann_rows``.
     """
-    from pyspark.sql import Observation
-
     ann_fn = {"lsh": b30_ann_lsh, "ivf": b30_ann_ivf}[kind]
     ann = ann_fn(spark, sf_dir)
     exact = b30_cosine_topk(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1.0).alias("in_exact")
     )
-    obs = Observation(f"ann_{kind}_quality")
-    observed = (
-        ann.join(exact, ["query_id", "neighbor_id"], "left")
-        .observe(
-            obs,
-            F.round(
-                F.sum(F.coalesce("in_exact", F.lit(0.0)))
-                / F.lit(float(N_QUERIES * TOP_K)),
-                4,
-            ).alias("recall_at_10"),
-            F.count(F.lit(1)).alias("n_ann_rows"),
-        )
-        .drop("in_exact")
+    df, obs = observed(
+        ann.join(exact, ["query_id", "neighbor_id"], "left"),
+        f"ann_{kind}_quality",
+        F.round(
+            F.sum(F.coalesce("in_exact", F.lit(0.0)))
+            / F.lit(float(N_QUERIES * TOP_K)),
+            4,
+        ).alias("recall_at_10"),
+        F.count(F.lit(1)).alias("n_ann_rows"),
     )
-    return observed, obs
-
-
-@query("b30_ann_lsh_observed")  # approximate → rows-only; recall rides along
-def b30_ann_lsh_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B30: the LSH path with its recall@10-vs-exact probe attached as an
-    observe() metric, so ANN recall is observable.  tests/test_llmops.py
-    asserts the observed recall meets the same threshold the offline test
-    enforces."""
-    return ann_with_recall(spark, sf_dir, "lsh")[0]
-
-
-@query("b30_ann_ivf_observed")  # approximate → rows-only; recall rides along
-def b30_ann_ivf_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B30: the IVF path with the same observed recall@10 probe."""
-    return ann_with_recall(spark, sf_dir, "ivf")[0]
+    return df.drop("in_exact"), obs
 
 
 @query(
@@ -846,34 +826,28 @@ def b175_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     individually; tests/test_llmops.py pins the COMPOSITION — a full
     numpy replay (route → encode → ADC → top-k over the Spark-computed
     centroids) must reproduce every returned row, ids and distances
-    alike, so there is no recall threshold to flake on.  Honest
-    accuracy note: on this worst-case corpus (unclustered gaussians,
-    16-seed codebook) the composed recall sits at the probed-fraction
-    baseline — IVF needs cluster structure and the tiny demo codebook
-    quantizes coarsely; real embedding corpora supply both, which is
+    alike — and its recall: against an exact-L2 replay the mean
+    recall@TOP_K must reach half the probed fraction N_PROBE/N_CELLS.
+    Honest accuracy note: on this worst-case corpus (unclustered
+    gaussians, 16-seed codebook) the composed recall sits at the
+    probed-fraction baseline — IVF needs cluster structure and the
+    tiny demo codebook quantizes coarsely; real embedding corpora supply both, which is
     why FAISS defaults to exactly this index."""
     return _ivfpq_topk(spark, sf_dir)
 
 
-def _ivfpq_topk(
-    spark: SparkSession, sf_dir: str, cand_pred: F.Column | None = None
-) -> DataFrame:
-    """IVF-PQ top-k over the corpus, optionally restricted to the
-    candidate rows matching ``cand_pred`` (the b175_observed_sampled
-    path: index artifacts — centroids, codebooks — always come from
-    the full corpus, exactly like a production index; only the
-    candidate/scan side shrinks)."""
+def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ top-k of every query vector over the corpus."""
     import numpy as np
 
     e = table(spark, sf_dir, "embeddings")
     cents = ivf_centroids(e, dim=64)
     cb_rows = [r.asDict() for r in pq_codebooks(e).collect()]
-    corpus = e if cand_pred is None else e.filter(cand_pred)
     # corpus side: cell assignment + PQ encode in ONE narrow pass each;
     # the cell column rides through the encoder (keep=), standing in
     # for the partitioned-by-cell code table of the at-scale layout
     codes = (
-        assign_cells(corpus, cents, n_probe=1)
+        assign_cells(e, cents, n_probe=1)
         .select("cell", "vec_id", "embedding")
         .mapInPandas(
             _pq_encode_batches(cb_rows, with_err=False, keep=("cell",)),
@@ -918,107 +892,6 @@ def _ivfpq_topk(
             "neighbor_id",
             "adist",
             F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
-
-
-@query("b175_ivfpq_observed")  # measured recall of an approximation → rows-only
-def b175_ivfpq_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b175's accuracy as a driver-visible RESULT:
-    per query, how many of the composed IVF-PQ top-{TOP_K} appear in
-    the EXACT L2 top-{TOP_K} — (query_id, n_hits, recall_ppm), one row
-    per query vector.  The b30_ann_*_observed twins surface recall as
-    an observe() metric riding the ANN rows; this emits it as the rows
-    themselves so the driver records the composition's quality
-    every time it runs, not only when pytest does.
-
-    Deterministic despite measuring an approximation: both top-k sets
-    are unique (distance ties broken by neighbor_id on both sides) and
-    every emitted number is an integer — hit counts and ppm of a fixed
-    denominator — so rows-only is a choice about SQL expressibility
-    (replaying PQ in DuckDB would test DuckDB), not about stability.
-    tests/test_llmops.py bounds the corpus-wide mean recall from below
-    by the probed-fraction baseline the b175 docstring derives.
-
-    Engine shape: b175's own plan plus ONE broadcast-queries exact
-    pass (the same ~10-query probe-sample trick as ann_with_recall —
-    always affordable at scale because the query side, not the corpus,
-    is the small side) and a {TOP_K}·N_QUERIES-row join; nothing here
-    touches the corpus a second time beyond that exact probe scan."""
-    return _ivfpq_recall(spark, sf_dir)
-
-
-#: Deterministic md5 corpus sample for the sampled recall probe:
-#: SAMPLE_TAKE of SAMPLE_BUCKETS hash buckets of vec_id (25% at test
-#: scale so every query keeps >= TOP_K sampled candidates; at
-#: production scale the same two constants express 1/100).
-SAMPLE_BUCKETS = 16
-SAMPLE_TAKE = 4
-
-
-@query("b175_ivfpq_observed_sampled")  # measured recall on a sample → rows-only
-def b175_ivfpq_observed_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b175_ivfpq_observed's production form: the
-    exact-L2 ground-truth probe is LINEAR in the corpus by definition
-    — it computes ground truth — so at 100 TB the recall measurement
-    runs on a deterministic md5 CORPUS SAMPLE (SAMPLE_TAKE of
-    SAMPLE_BUCKETS vec_id hash buckets here; 1/100 at production scale
-    is the same two constants).  Both sides of the comparison are
-    restricted to the same sample — the IVF-PQ candidate set AND the
-    exact probe — so recall@K of the sampled subproblem is an unbiased
-    estimator of index quality, while the probe's cost drops from
-    |corpus|·|queries| to |sample|·|queries|.  The index artifacts
-    (centroids, codebooks) still come from the FULL corpus, exactly
-    like the production index being measured.
-
-    Rows-only for the same reason as the full twin (replaying PQ in
-    DuckDB would test DuckDB, not the engine); tests/test_llmops.py
-    pins the same probed-fraction recall lower bound on the sampled
-    measurement, and SCALE.md records the 16x probe showing the exact
-    side now scales with the sample, not the corpus."""
-    from .sampling import hash_bucket
-
-    return _ivfpq_recall(
-        spark,
-        sf_dir,
-        cand_pred=hash_bucket(F.col("vec_id"), SAMPLE_BUCKETS) < SAMPLE_TAKE,
-    )
-
-
-def _ivfpq_recall(
-    spark: SparkSession, sf_dir: str, cand_pred: F.Column | None = None
-) -> DataFrame:
-    """Recall@TOP_K of the IVF-PQ composition vs the exact-L2 top-k,
-    both sides restricted to the same ``cand_pred`` candidate set when
-    given (queries always come from the full table)."""
-    ann = _ivfpq_topk(spark, sf_dir, cand_pred).select("query_id", "neighbor_id")
-    full = table(spark, sf_dir, "embeddings")
-    e = full if cand_pred is None else full.filter(cand_pred)
-    q = full.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"))
-    scored = (
-        c.join(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sq_l2("qe", "ce").alias("d2"))
-    )
-    w = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    return (
-        ann.join(exact, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_hits"))
-        .select(
-            "query_id",
-            "n_hits",
-            (F.col("n_hits") * F.lit(1_000_000) / F.lit(TOP_K))
-            .cast("bigint")
-            .alias("recall_ppm"),
         )
     )
 

@@ -302,22 +302,39 @@ def write_submit_stream(
     across restarts, so a same-checkpoint restart still returns the
     full manifest history while a foreign run's leftovers never
     appear."""
-    spark = features_stream.sparkSession
-    spark.dataSource.register(_make_submit_writer_classes())
-    q = (
+    q = _start_submit_stream(
+        features_stream, manifest_dir, checkpoint_dir, chunk_size,
+        availableNow=True,
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError("stream sink did not drain in time")
+    return _collect_stream_manifests(manifest_dir, checkpoint_dir)
+
+
+def _start_submit_stream(
+    features_stream: DataFrame,
+    manifest_dir: str,
+    checkpoint_dir: str,
+    chunk_size: int,
+    **trigger,
+):
+    """Start ``features_stream`` into the ``wildweb_sink`` stream
+    writer under ``checkpoint_dir`` with the given ``trigger`` and
+    return the running query."""
+    features_stream.sparkSession.dataSource.register(
+        _make_submit_writer_classes()
+    )
+    return (
         _feature_json(features_stream)
         .writeStream.format("wildweb_sink")
         .option("chunkSize", chunk_size)
         .option("path", manifest_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
+        .trigger(**trigger)
         .start()
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("stream sink did not drain in time")
-    return _collect_stream_manifests(manifest_dir, checkpoint_dir)
 
 
 def _collect_stream_manifests(

@@ -59,11 +59,7 @@ def run_stream_pipeline(
     condition immediately and returns the same manifests — the
     idempotence contract, pinned in tests/test_stream_pipeline.py."""
     from ..ingest.wildweb import run_pipeline
-    from ..sinks import (
-        _collect_stream_manifests,
-        _feature_json,
-        _make_submit_writer_classes,
-    )
+    from ..sinks import _collect_stream_manifests, _start_submit_stream
     from ..sources.http import read_centers_stream
 
     raw = read_centers_stream(
@@ -75,41 +71,37 @@ def run_stream_pipeline(
     features, _errors = run_pipeline(
         raw, incident_range, F.current_timestamp()
     )
-    spark.dataSource.register(_make_submit_writer_classes())
-    q = (
-        _feature_json(features)
-        .writeStream.format("wildweb_sink")
-        .option("chunkSize", chunk_size)
-        .option("path", manifest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
+    q = _start_submit_stream(
+        features, manifest_dir, checkpoint_dir, chunk_size,
+        processingTime="0 seconds",
     )
+    _drain(q, checkpoint_dir, max_polls, timeout_sec)
+    return _collect_stream_manifests(manifest_dir, checkpoint_dir)
+
+
+def _drain(q, checkpoint_dir: str, max_polls: int, timeout_sec: float) -> None:
+    """Wait until ``checkpoint_dir``'s commit log holds ``max_polls``
+    epochs, then stop ``q``.  A query that died raises its own
+    exception at once instead of polling out the deadline as a
+    timeout; one that never commits enough epochs raises TimeoutError
+    after ``timeout_sec``."""
     commits = os.path.join(checkpoint_dir, "commits")
     deadline = time.time() + timeout_sec
     try:
         while time.time() < deadline:
             if not q.isActive and q.exception() is not None:
-                # surface the REAL failure immediately — without this a
-                # dead query would poll out the whole deadline and be
-                # misreported as a timeout (the awaitTermination path in
-                # write_submit_stream gets this for free)
                 raise q.exception()
-            done = os.path.isdir(commits) and (
+            if os.path.isdir(commits) and (
                 sum(n.isdigit() for n in os.listdir(commits)) >= max_polls
-            )
-            if done:
-                break
+            ):
+                return
             time.sleep(0.2)
-        else:
-            raise TimeoutError(
-                f"stream pipeline: {max_polls} epochs not committed "
-                f"within {timeout_sec}s"
-            )
+        raise TimeoutError(
+            f"stream pipeline: {max_polls} epochs not committed "
+            f"within {timeout_sec}s"
+        )
     finally:
         q.stop()
-    return _collect_stream_manifests(manifest_dir, checkpoint_dir)
 
 
 @query("b138_stream_pipeline_e2e")  # one streaming query, commit-protocol facts → rows-only
@@ -188,28 +180,24 @@ def run_stream_pipeline_with_errors(
     from the logs.  Scale notes are b138's (narrow stages, O(1)
     checkpoint); the second channel adds one more write of
     error-volume rows — data-proportional only to what FAILED."""
-    import os as _os
-
-    from pyspark.sql import functions as F2
-
     from ..ingest.wildweb import flatten_features, run_pipeline
     from ..sources.http import read_centers_stream
 
-    feat_dir = _os.path.join(out_dir, "features")
-    err_dir = _os.path.join(out_dir, "errors")
+    feat_dir = os.path.join(out_dir, "features")
+    err_dir = os.path.join(out_dir, "errors")
     raw = read_centers_stream(
         spark, centers, max_polls=max_polls, transport=transport
     )
 
     def fork(batch_df, epoch_id: int) -> None:
         features, errors = run_pipeline(
-            batch_df, incident_range, F2.current_timestamp()
+            batch_df, incident_range, F.current_timestamp()
         )
         flatten_features(features).withColumn(
-            "epoch", F2.lit(epoch_id).cast("bigint")
+            "epoch", F.lit(epoch_id).cast("bigint")
         ).write.mode("append").parquet(feat_dir)
         errors.withColumn(
-            "epoch", F2.lit(epoch_id).cast("bigint")
+            "epoch", F.lit(epoch_id).cast("bigint")
         ).write.mode("append").parquet(err_dir)
 
     q = (
@@ -218,27 +206,13 @@ def run_stream_pipeline_with_errors(
         .trigger(processingTime="0 seconds")
         .start()
     )
-    commits = _os.path.join(checkpoint_dir, "commits")
-    deadline = time.time() + timeout_sec
-    try:
-        while time.time() < deadline:
-            if not q.isActive and q.exception() is not None:
-                raise q.exception()
-            if _os.path.isdir(commits) and (
-                sum(n.isdigit() for n in _os.listdir(commits)) >= max_polls
-            ):
-                break
-            time.sleep(0.2)
-        else:
-            raise TimeoutError("stream pipeline (errors) did not drain")
-    finally:
-        q.stop()
+    _drain(q, checkpoint_dir, max_polls, timeout_sec)
     feats = spark.read.parquet(feat_dir)
     errs = spark.read.parquet(err_dir)
     err_counts = {
         (r["stage"], r["reason"]): r["n"]
         for r in errs.groupBy("stage", "reason")
-        .agg(F2.count(F2.lit(1)).alias("n"))
+        .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
     return {"features": feats.count(), "errors": err_counts}

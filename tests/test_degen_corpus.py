@@ -79,17 +79,14 @@ HOSTILE_EVENTS = ["b177_stream_semi_join"]
 PARITY = ROUNDING_PREDICATE + CRASH_CLASSES + HOSTILE_TEXT + HOSTILE_EVENTS
 
 #: rows-only executes: the tokenizer pair on empty/unicode words, the
-#: PQ/IVF family on duplicate embeddings (tie-break stress — including
-#: the observed-recall twin, where a duplicate of a query vector makes
-#: exact-L2 distance ties real, not hypothetical)
+#: PQ/IVF family on duplicate embeddings (tie-break stress)
 #: per-query minimal expected shape on the degenerate corpus: a bare
 #: ``count() >= 0`` is vacuously true for any successful count, so a
 #: regression that EMPTIES the output (e.g. the planted duplicate /
 #: negated embeddings all filtered away) would pass silently (ADVICE
 #: round 9).  min_rows values are structural, not corpus-tuned: BPE
 #: train always finds ≥1 merge on repeated text, apply/encode emit one
-#: row per doc/vector, search emits top-k per query, observed one row
-#: per query.
+#: row per doc/vector, search emits top-k per query.
 ROWS_ONLY_EXEC = {
     "b156_bpe_train": (1, {"merge_rank", "left", "right", "pair_freq"}),
     "b160_bpe_apply": (
@@ -98,8 +95,6 @@ ROWS_ONLY_EXEC = {
     ),
     "b134_pq_encode": (1, {"vec_id", "packed_codes", "recon_err"}),
     "b175_ivfpq_search": (1, {"query_id", "neighbor_id", "adist", "rnk"}),
-    "b175_ivfpq_observed": (1, {"query_id", "n_hits", "recall_ppm"}),
-    "b175_ivfpq_observed_sampled": (1, {"query_id", "n_hits", "recall_ppm"}),
     # one row per non-empty micro-batch: the degen corpus plants its
     # events at 2024-06-01 atop a January base, so the (hi-lo)/4 time
     # quarters leave the middle two slices EMPTY — 2 batches (base

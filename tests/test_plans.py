@@ -344,19 +344,9 @@ _NESTED_LOOP_OK = {
     "b30_cosine_topk",
     "b30_ann_ivf",
     "b30_ann_lsh",
-    "b30_ann_ivf_observed",
-    "b30_ann_lsh_observed",
     # same bounded N_CELLS-row centroid broadcast as b30_ann_ivf (the
     # routing stage); the candidate scoring join is an equi-join on cell
     "b175_ivfpq_search",
-    # b175's plan plus ONE broadcast query-set cross join (N_QUERIES =
-    # 10 rows) for the exact-L2 probe — b30's bounded scoring pattern;
-    # the recall join itself is an equi-join on (query_id, neighbor_id)
-    "b175_ivfpq_observed",
-    # the sampled twin keeps the identical bounded joins (10-row query
-    # broadcast + N_CELLS centroid broadcast); the md5 sample predicate
-    # only filters both comparison sides, it adds no join
-    "b175_ivfpq_observed_sampled",
     "b40_centroid_assign",
     "b97_kmeans_update",
     # centroid-set broadcast (SEMDEDUP_K = 8 rows) against the corpus —

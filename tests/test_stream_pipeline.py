@@ -213,3 +213,62 @@ def test_composed_sink_posts_the_batch_items(spark, tmp_path, monkeypatch):
     batch = posted_items(str(batch_dir))
     assert batch
     assert posted_items(str(stream_dir)) == sorted(batch * MAX_POLLS)
+
+
+class _StubQuery:
+    """The slice of StreamingQuery that the commit-log drain reads."""
+
+    def __init__(self, active: bool = True, exc: Exception | None = None):
+        self.isActive = active
+        self._exc = exc
+        self.stopped = False
+
+    def exception(self):
+        return self._exc
+
+    def stop(self) -> None:
+        self.stopped = True
+
+
+def _commit_log(checkpoint_dir, n: int) -> None:
+    os.makedirs(os.path.join(checkpoint_dir, "commits"), exist_ok=True)
+    for i in range(n):
+        open(os.path.join(checkpoint_dir, "commits", str(i)), "w").close()
+
+
+def test_drain_raises_the_dead_querys_exception(tmp_path):
+    from etl_wildweb_spark.streaming.pipeline import _drain
+
+    boom = RuntimeError("epoch failed")
+    q = _StubQuery(active=False, exc=boom)
+    with pytest.raises(RuntimeError) as info:
+        _drain(q, str(tmp_path), max_polls=2, timeout_sec=30)
+    assert info.value is boom
+    assert q.stopped
+
+
+def test_drain_times_out_short_of_max_polls(tmp_path):
+    import time
+
+    from etl_wildweb_spark.streaming.pipeline import _drain
+
+    _commit_log(tmp_path, 1)
+    q = _StubQuery()
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError):
+        _drain(q, str(tmp_path), max_polls=2, timeout_sec=0.5)
+    assert time.monotonic() - t0 < 5
+    assert q.stopped
+
+
+def test_drain_returns_at_once_on_a_complete_commit_log(tmp_path):
+    import time
+
+    from etl_wildweb_spark.streaming.pipeline import _drain
+
+    _commit_log(tmp_path, 2)
+    q = _StubQuery()
+    t0 = time.monotonic()
+    _drain(q, str(tmp_path), max_polls=2, timeout_sec=30)
+    assert time.monotonic() - t0 < 0.2
+    assert q.stopped
