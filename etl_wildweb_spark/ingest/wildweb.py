@@ -30,9 +30,6 @@ incidents.  Throughput is bounded by scan + JSON parse.
 
 from __future__ import annotations
 
-import functools
-from collections.abc import Iterable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -261,11 +258,6 @@ def _incident_features(
     ``now`` whose date parses and whose geo is valid, as features."""
     in_window = filter_time_range(incidents, incident_range, now)
     return to_features(filter_valid_geo(_dated(in_window)))
-
-
-def union_centers(dfs: Iterable[DataFrame]) -> DataFrame:
-    """A17: union-all of per-center results (task.ts:70-73,142)."""
-    return functools.reduce(DataFrame.unionByName, dfs)
 
 
 def flatten_features(features: DataFrame) -> DataFrame:

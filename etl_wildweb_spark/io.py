@@ -172,16 +172,6 @@ def write_partitioned(
     return df.sparkSession.read.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every corpus table and register temp views (for spark.sql)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def read_evolving(
     spark: SparkSession,
     path: str,

@@ -95,15 +95,6 @@ def fake_decode_batches(
         )
 
 
-def real_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    raise NotImplementedError(
-        "compressed-codec decode (JPEG/PNG/audio) requires PIL/ffmpeg, "
-        "not present in this container — uncompressed formats DO decode "
-        "for real here: see ppm_decode_batches (P6 header+raster parse, "
-        "pure numpy)"
-    )
-
-
 # ------------------------------------------------- real PPM (P6) decode
 #
 # The one image format that needs no codec library: PPM P6 is an ASCII

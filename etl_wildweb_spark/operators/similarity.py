@@ -150,7 +150,9 @@ def ivf_centroids(vectors: DataFrame, dim: int) -> DataFrame:
     # consumes the centroid table at least twice (corpus assignment +
     # query probes), and each reference would replay the corpus-wide
     # seed-assignment window plus both refinement shuffles.  The table
-    # is N_CELLS rows — materialize it once.
+    # is N_CELLS rows — materialize it once.  Re-measured at sf0.1 on
+    # 4 cores (min of 5): dropping it moves ~1.1 s of build into each
+    # action, and b175's build + collect went 2.87 → 3.13 s.
     return _avg_vectors(assigned, "cell", "embedding", dim).localCheckpoint(
         eager=True
     )
@@ -264,6 +266,28 @@ def b30_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CENTROIDS = 8  # deterministic seeds: the lowest vec_ids
 
 
+def _nearest_centroid(e: DataFrame, *carry: str) -> DataFrame:
+    """(vec_id, cluster_id, *carry): each vector's most cosine-similar
+    seed centroid — the ``vec_id < N_CENTROIDS`` vectors, broadcast —
+    with ties to the lowest id, via one
+    ``max_by(cid, struct(cos_sim, -cid))`` per vec_id.  The corpus is
+    never shuffled for scoring; only the per-vector rollup is.
+    ``carry`` names input columns kept through the rollup with
+    ``first()`` (one value per vec_id)."""
+    cents = e.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+    )
+    scored = e.join(F.broadcast(cents)).select(
+        "vec_id", *carry, "cid", cosine("embedding", "ce").alias("cos_sim")
+    )
+    return scored.groupBy("vec_id").agg(
+        F.max_by(
+            "cid", F.struct(F.col("cos_sim"), (-F.col("cid")).alias("nc"))
+        ).alias("cluster_id"),
+        *[F.first(c).alias(c) for c in carry],
+    )
+
+
 @query(
     "b40_centroid_assign",
     oracle=f"""
@@ -304,18 +328,7 @@ def b40_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cid ASC) is cross-engine deterministic.  A full k-means would
     iterate this assignment against recomputed means; each round is
     this same broadcast-score-rollup plan."""
-    e = table(spark, sf_dir, "embeddings")
-    cents = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    scored = e.select("vec_id", "embedding").join(F.broadcast(cents)).select(
-        "vec_id", "cid", cosine("embedding", "ce").alias("cos_sim")
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.max_by(
-            "cid", F.struct(F.col("cos_sim"), (-F.col("cid")).alias("nc"))
-        ).alias("cluster_id")
-    )
+    best = _nearest_centroid(table(spark, sf_dir, "embeddings"))
     return best.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("vec_id").alias("min_vec_id"),
@@ -467,19 +480,7 @@ def b97_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-table-sized, not corpus-sized.  Iterating Lloyd = loop
     this plan with the previous round's means broadcast back in
     (the b84_pagerank iterate-on-the-small-thing principle)."""
-    e = table(spark, sf_dir, "embeddings")
-    cents = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    scored = e.select("vec_id", "embedding").join(F.broadcast(cents)).select(
-        "vec_id", "embedding", "cid", cosine("embedding", "ce").alias("cos_sim")
-    )
-    assign = scored.groupBy("vec_id").agg(
-        F.max_by(
-            "cid", F.struct(F.col("cos_sim"), (-F.col("cid")).alias("nc"))
-        ).alias("cluster_id"),
-        F.first("embedding").alias("embedding"),
-    )
+    assign = _nearest_centroid(table(spark, sf_dir, "embeddings"), "embedding")
     expl = assign.select(
         "cluster_id", F.posexplode("embedding").alias("pos", "x")
     ).select(
@@ -559,9 +560,48 @@ def pq_codebooks(vectors: DataFrame) -> DataFrame:
     )
 
 
-def _pq_encode_batches(codebook_rows, with_err: bool = True, keep: tuple = ()):
-    """mapInPandas factory closed over the collected codebook (a
-    PQ_SUBSPACES×PQ_K×PQ_SUBDIM float array — ~4 KB, shipped by value
+def _pq_index(e: DataFrame):
+    """The PQ index state every PQ query reads, from ONE driver collect:
+    the PQ_K lowest-vec_id seed rows unioned with the
+    ``vec_id < N_QUERIES`` query rows (both bounded: PQ_K + N_QUERIES
+    rows; the two sets usually overlap, but nothing guarantees one
+    holds the other).  Returns ``(cb, qids, dt)``:
+
+    - ``cb``: the codebook as a (PQ_SUBSPACES, PQ_K, PQ_SUBDIM) float32
+      array — pq_codebooks' rows, seed ``code`` in vec_id order; a
+      corpus with fewer than PQ_K vectors keeps zero centroids for the
+      codes it lacks;
+    - ``qids``: the query ids, sorted;
+    - ``dt``: the float64 ADC distance tables,
+      dt[q, s, c] = ||q_s − cb[s, c]||²."""
+    import numpy as np
+
+    def side(df: DataFrame, seed: bool) -> DataFrame:
+        return df.select(F.lit(seed).alias("seed"), "vec_id", "embedding")
+
+    rows = (
+        side(e.orderBy("vec_id").limit(PQ_K), True)
+        .unionByName(side(e.filter(F.col("vec_id") < N_QUERIES), False))
+        .collect()
+    )
+    seeds = sorted((r for r in rows if r.seed), key=lambda r: r.vec_id)
+    qrows = sorted((r for r in rows if not r.seed), key=lambda r: r.vec_id)
+    cb = np.zeros((PQ_SUBSPACES, PQ_K, PQ_SUBDIM), dtype=np.float32)
+    for code, r in enumerate(seeds):
+        cb[:, code] = np.asarray(r.embedding, dtype=np.float32).reshape(
+            PQ_SUBSPACES, PQ_SUBDIM
+        )
+    qs = np.asarray([r.embedding for r in qrows], dtype=np.float64).reshape(
+        len(qrows), PQ_SUBSPACES, PQ_SUBDIM
+    )
+    diff = qs[:, :, None, :] - cb.astype(np.float64)[None, :, :, :]
+    dt = np.einsum("qscd,qscd->qsc", diff, diff)
+    return cb, [r.vec_id for r in qrows], dt
+
+
+def _pq_encode_batches(cb, with_err: bool = True, keep: tuple = ()):
+    """mapInPandas factory closed over the codebook ``cb`` (_pq_index's
+    PQ_SUBSPACES×PQ_K×PQ_SUBDIM float32 array — ~4 KB, shipped by value
     in the task closure like broadcast hyperplanes).  ``with_err=False``
     skips the reconstruction gather + squared-error sum and emits only
     (vec_id, codes) — the ADC search path needs nothing else.  ``keep``
@@ -570,10 +610,6 @@ def _pq_encode_batches(codebook_rows, with_err: bool = True, keep: tuple = ()):
     schema must list them in the same order)."""
     import numpy as np
     import pandas as pd
-
-    cb = np.zeros((PQ_SUBSPACES, PQ_K, PQ_SUBDIM), dtype=np.float32)
-    for r in codebook_rows:
-        cb[r["sub"], r["code"]] = r["centroid"]
 
     def gen(batches):
         for pdf in batches:
@@ -614,13 +650,14 @@ def b134_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     code→centroid lookup tables.  Complements b30_ann_ivf (the
     routing side) and b56_embedding_quantize (scalar int8).
 
-    Scale: the codebook is PQ_SUBSPACES×PQ_K rows — collected once
-    (a scalar-sized driver hop, same class as IVF centroids) and
-    shipped by value into ONE Arrow-batched mapInPandas pass over the
-    corpus; encoding is a narrow map, no shuffle anywhere.  Invariants
-    (tests/test_llmops.py): codes in [0, PQ_K), deterministic across
-    runs, reconstruction error strictly ≤ assigning every subvector
-    to centroid 0, and bit-identical to a pure-numpy reference.
+    Scale: the codebook is PQ_SUBSPACES×PQ_K centroids — collected once
+    by _pq_index (a scalar-sized driver hop, same class as IVF
+    centroids) and shipped by value into ONE Arrow-batched mapInPandas
+    pass over the corpus; encoding is a narrow map, no shuffle
+    anywhere.  Invariants (tests/test_llmops.py): codes in [0, PQ_K),
+    deterministic across runs, reconstruction error strictly ≤
+    assigning every subvector to centroid 0, and bit-identical to a
+    pure-numpy reference built from pq_codebooks.
 
     Rows-only: the code assignment depends on float argmin over the
     data-derived codebook — expressible in DuckDB only by replaying
@@ -634,25 +671,10 @@ def b134_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     unhashable; guarded by tests/test_registry.py).  b137 consumes the
     unpacked array form internally."""
     e = table(spark, sf_dir, "embeddings")
-    cb_rows = [r.asDict() for r in pq_codebooks(e).collect()]
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("codes", ArrayType(IntegerType()), False),
-            StructField("recon_err", DoubleType(), False),
-        ]
-    )
+    cb, _, _ = _pq_index(e)
     enc = e.select("vec_id", "embedding").mapInPandas(
-        _pq_encode_batches(cb_rows), schema=schema
+        _pq_encode_batches(cb),
+        schema="vec_id long, codes array<int> not null, recon_err double not null",
     )
     return enc.select(
         "vec_id",
@@ -665,19 +687,26 @@ def b134_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _adc_score_batches(dt_rows, query_ids):
-    """mapInPandas factory closed over the per-query ADC distance
-    tables (``dt_rows``: numpy (n_queries, PQ_SUBSPACES, PQ_K) float64
-    — ~10 KB, shipped by value): each corpus batch scores ALL queries
-    in one vectorized lookup-sum over its code matrix."""
+def _adc_topk(cand: DataFrame, qids: list, dt) -> DataFrame:
+    """ADC top-k over candidate rows ``(query_id, vec_id, codes)``: one
+    Arrow-batched narrow map scores each candidate from its query's
+    distance table, then the rank window keeps TOP_K per query by
+    (adist, neighbor_id).
+
+    The score is the PQ_SUBSPACES-lookup sum Σ_s dt[q, s, codes[s]],
+    accumulated in the written order s = 0, 1, …, PQ_SUBSPACES-1.
+    ``ndarray.sum`` would pick its order from the gather's memory
+    layout (pairwise for a contiguous gather, sequential for a strided
+    one), so the same candidate could score differently by the last
+    ulp depending on how its batch was laid out; here it cannot.  dt
+    is _pq_index's (len(qids), PQ_SUBSPACES, PQ_K) float64 table
+    (~10 KB, shipped by value), qids its sorted query ids."""
     import numpy as np
     import pandas as pd
 
-    dt = np.asarray(dt_rows, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
+    qids = np.asarray(qids, dtype=np.int64)
 
     def gen(batches):
-        subs = np.arange(PQ_SUBSPACES)
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame(
@@ -687,109 +716,10 @@ def _adc_score_batches(dt_rows, query_ids):
             codes = np.stack(
                 [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
             )  # (n, SUBS)
-            vids = pdf["vec_id"].values
-            # dist[q, n] = Σ_s dt[q, s, codes[n, s]]
-            dist = dt[:, subs[None, :], codes].sum(axis=2)  # (nq, n)
-            nq, n = dist.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, n),
-                    "neighbor_id": np.tile(vids, nq),
-                    "adist": dist.reshape(-1),
-                }
-            )
-
-    return gen
-
-
-@query("b137_pq_adc_search")  # approximate by construction → rows-only
-def b137_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ's SEARCH side — Asymmetric Distance Computation: queries
-    stay full-precision, the corpus is its 8×4-bit PQ codes, and each
-    (query, vector) distance is EIGHT table lookups + a sum instead of
-    a 64-dim float scan.  The per-query distance tables
-    dt[s][c] = ||q_s − centroid_{s,c}||² are computed once against the
-    broadcast-sized codebook and shipped by value; scoring the corpus
-    is ONE Arrow-batched narrow map over the code table (no shuffle,
-    no float vectors read), then top-k per query via the rank window.
-
-    This composes b134 (encode) into the operating regime that makes
-    billion-vector ANN memory-feasible: the scored table is 8 bytes
-    per vector, 32× smaller than the float corpus, and the scan cost
-    is lookup-bound.  In full IVF-PQ the same scoring runs only inside
-    IVF-probed cells (b30_ann_ivf's routing); here it scans all codes
-    so the invariants are exactly testable.
-
-    Rows-only; tests/test_llmops.py pins (a) the ADC identity — adist
-    equals ||q − reconstruct(v)||² computed independently in numpy —
-    and (b) recall vs exact L2 top-k well above the random-scan
-    baseline on these worst-case gaussian vectors."""
-    import numpy as np
-
-    e = table(spark, sf_dir, "embeddings")
-    cb_rows = [
-        r.asDict() for r in pq_codebooks(e).collect()
-    ]  # codebook-sized driver hop, collected ONCE for dt + encode
-    cb = np.zeros((PQ_SUBSPACES, PQ_K, PQ_SUBDIM), dtype=np.float64)
-    for r in cb_rows:
-        cb[r["sub"], r["code"]] = r["centroid"]
-    qrows = sorted(
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )  # N_QUERIES rows — query-set-sized driver hop, like b30's broadcast
-    qids = [r.vec_id for r in qrows]
-    qs = np.asarray([r.embedding for r in qrows], dtype=np.float64).reshape(
-        len(qrows), PQ_SUBSPACES, PQ_SUBDIM
-    )
-    # dt[q, s, c] = ||q_s - cb[s, c]||^2
-    diff = qs[:, :, None, :] - cb[None, :, :, :]
-    dt = np.einsum("qscd,qscd->qsc", diff, diff)
-
-    codes = e.select("vec_id", "embedding").mapInPandas(
-        _pq_encode_batches(cb_rows, with_err=False),
-        schema="vec_id long, codes array<int> not null",
-    )
-    scored = codes.mapInPandas(
-        _adc_score_batches(dt.tolist(), qids),
-        schema="query_id long, neighbor_id long, adist double",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = W.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adist", F.col("rnk").cast("int").alias("rnk"))
-    )
-
-
-def _adc_pair_batches(dt_rows, query_ids):
-    """mapInPandas factory for CELL-PRUNED ADC: unlike
-    _adc_score_batches (which scores every query against every corpus
-    batch — the full-scan b137 shape), each input row here is one
-    (query_id, vec_id, codes) candidate produced by the IVF cell join,
-    and the distance is the 8-lookup sum from that query's own table.
-    dt_rows: (n_queries, PQ_SUBSPACES, PQ_K) float64 (~10 KB, shipped
-    by value)."""
-    import numpy as np
-    import pandas as pd
-
-    dt = np.asarray(dt_rows, dtype=np.float64)
-    qindex = {int(q): i for i, q in enumerate(query_ids)}
-
-    def gen(batches):
-        subs = np.arange(PQ_SUBSPACES)
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"query_id": [], "neighbor_id": [], "adist": []}
-                )
-                continue
-            codes = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )  # (n, SUBS)
-            qi = np.asarray([qindex[int(q)] for q in pdf["query_id"]])
-            adist = dt[qi[:, None], subs[None, :], codes].sum(axis=1)
+            qi = np.searchsorted(qids, pdf["query_id"].values)
+            adist = np.zeros(len(pdf))
+            for s in range(PQ_SUBSPACES):
+                adist += dt[qi, s, codes[:, s]]
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].values,
@@ -798,90 +728,8 @@ def _adc_pair_batches(dt_rows, query_ids):
                 }
             )
 
-    return gen
-
-
-@query("b175_ivfpq_search")  # approximate by construction → rows-only
-def b175_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL IVF-PQ — the composition b137's docstring promises, and
-    the operating shape of billion-vector ANN (FAISS's IVFPQ index):
-    b30's IVF coarse quantizer routes, b134's PQ codes compress, and
-    ADC scoring runs ONLY inside each query's N_PROBE probed cells.
-    Per query the work is (corpus/​N_CELLS)·N_PROBE code rows × 8 table
-    lookups — both the scan fraction and the bytes-per-vector shrink
-    independently, which is what makes the product feasible at 10⁹
-    vectors.
-
-    Engine shape at 100 TB: the code table is written PARTITIONED BY
-    CELL (here: one narrow encode pass carrying the cell assignment
-    through mapInPandas — no join to re-attach it); queries broadcast
-    their (cell, query_id) probe list; the candidate join is a
-    broadcast equi-join on cell (partition-pruned scan in the
-    partitioned-table form); scoring is one Arrow-batched narrow map
-    over candidates; top-k via the rank window's Partial+Final
-    WindowGroupLimit.  The float corpus is read exactly twice (cell
-    assignment + encode), never shuffled, never read at query time.
-
-    Rows-only: both constituent approximations are already pinned
-    individually; tests/test_llmops.py pins the COMPOSITION — a full
-    numpy replay (route → encode → ADC → top-k over the Spark-computed
-    centroids) must reproduce every returned row, ids and distances
-    alike — and its recall: against an exact-L2 replay the mean
-    recall@TOP_K must reach half the probed fraction N_PROBE/N_CELLS.
-    Honest accuracy note: on this worst-case corpus (unclustered
-    gaussians, 16-seed codebook) the composed recall sits at the
-    probed-fraction baseline — IVF needs cluster structure and the
-    tiny demo codebook quantizes coarsely; real embedding corpora supply both, which is
-    why FAISS defaults to exactly this index."""
-    return _ivfpq_topk(spark, sf_dir)
-
-
-def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ top-k of every query vector over the corpus."""
-    import numpy as np
-
-    e = table(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(e, dim=64)
-    cb_rows = [r.asDict() for r in pq_codebooks(e).collect()]
-    # corpus side: cell assignment + PQ encode in ONE narrow pass each;
-    # the cell column rides through the encoder (keep=), standing in
-    # for the partitioned-by-cell code table of the at-scale layout
-    codes = (
-        assign_cells(e, cents, n_probe=1)
-        .select("cell", "vec_id", "embedding")
-        .mapInPandas(
-            _pq_encode_batches(cb_rows, with_err=False, keep=("cell",)),
-            schema="cell int, vec_id long, codes array<int> not null",
-        )
-    )
-    # query side: probe list (cell, query_id) + per-query ADC distance
-    # tables from the collected codebook (both bounded driver hops)
-    qrows = sorted(
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    qids = [r.vec_id for r in qrows]
-    cb = np.zeros((PQ_SUBSPACES, PQ_K, PQ_SUBDIM), dtype=np.float64)
-    for r in cb_rows:
-        cb[r["sub"], r["code"]] = r["centroid"]
-    qs = np.asarray([r.embedding for r in qrows], dtype=np.float64).reshape(
-        len(qrows), PQ_SUBSPACES, PQ_SUBDIM
-    )
-    diff = qs[:, :, None, :] - cb[None, :, :, :]
-    dt = np.einsum("qscd,qscd->qsc", diff, diff)
-    probes = assign_cells(
-        e.filter(F.col("vec_id") < N_QUERIES), cents, n_probe=N_PROBE
-    ).select("cell", F.col("vec_id").alias("query_id"))
-    cand = (
-        codes.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "codes")
-    )
-    scored = cand.mapInPandas(
-        _adc_pair_batches(dt.tolist(), qids),
-        schema="query_id long, neighbor_id long, adist double",
+    scored = cand.select("query_id", "vec_id", "codes").mapInPandas(
+        gen, schema="query_id long, neighbor_id long, adist double"
     )
     w = W.partitionBy("query_id").orderBy("adist", "neighbor_id")
     return (
@@ -894,6 +742,109 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rnk").cast("int").alias("rnk"),
         )
     )
+
+
+@query("b137_pq_adc_search")  # approximate by construction → rows-only
+def b137_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ's SEARCH side — Asymmetric Distance Computation: queries
+    stay full-precision, the corpus is its 8×4-bit PQ codes, and each
+    (query, vector) distance is EIGHT table lookups + a sum instead of
+    a 64-dim float scan.  The per-query distance tables
+    dt[s][c] = ||q_s − centroid_{s,c}||² come from _pq_index's one
+    driver collect, together with the codebook, and are shipped by
+    value.
+
+    This is the all-cells case of b175_ivfpq_search: every code row
+    is a candidate of every query.  One narrow Generate
+    (``explode`` of the literal query-id array, then
+    ``query_id != vec_id``) turns the code table into those
+    candidates — no join, no shuffle, no float vectors read — and
+    _adc_topk scores them with the same scorer and sum order b175
+    uses, so with every cell probed the two return identical rows
+    (tests/test_llmops.py).  The scored table is 8 bytes per vector,
+    32× smaller than the float corpus, and the scan cost is
+    lookup-bound.
+
+    Rows-only; tests/test_llmops.py pins (a) the ADC identity — adist
+    equals ||q − reconstruct(v)||² computed independently in numpy —
+    and (b) recall vs exact L2 top-k well above the random-scan
+    baseline on these worst-case gaussian vectors."""
+    e = table(spark, sf_dir, "embeddings")
+    cb, qids, dt = _pq_index(e)
+    cand = (
+        e.select("vec_id", "embedding")
+        .mapInPandas(
+            _pq_encode_batches(cb, with_err=False),
+            schema="vec_id long, codes array<int> not null",
+        )
+        .select(
+            F.explode(
+                F.array(*[F.lit(q) for q in qids]).cast("array<bigint>")
+            ).alias("query_id"),
+            "vec_id",
+            "codes",
+        )
+        .filter(F.col("query_id") != F.col("vec_id"))
+    )
+    return _adc_topk(cand, qids, dt)
+
+
+@query("b175_ivfpq_search")  # approximate by construction → rows-only
+def b175_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FULL IVF-PQ — the operating shape of billion-vector ANN
+    (FAISS's IVFPQ index): b30's IVF coarse quantizer routes, b134's
+    PQ codes compress, and ADC scoring runs ONLY inside each query's
+    N_PROBE probed cells.  Per query the work is
+    (corpus/N_CELLS)·N_PROBE code rows × 8 table lookups — both the
+    scan fraction and the bytes-per-vector shrink independently, which
+    is what makes the product feasible at 10⁹ vectors.
+
+    Engine shape at 100 TB: the code table is written PARTITIONED BY
+    CELL (here: one narrow encode pass carrying the cell assignment
+    through mapInPandas — no join to re-attach it); queries broadcast
+    their (cell, query_id) probe list; the candidate join is a
+    broadcast equi-join on cell (partition-pruned scan in the
+    partitioned-table form); _adc_topk scores the candidates in one
+    Arrow-batched narrow map and keeps the top-k via the rank window's
+    Partial+Final WindowGroupLimit.  The codebook, query ids and
+    distance tables come from _pq_index's one driver collect; the
+    centroid table from ivf_centroids' checkpoint.  The float corpus
+    is read for cell assignment and encode, never shuffled, never read
+    at query time.  With N_PROBE = N_CELLS this is b137's all-cells
+    scan, row for row (tests/test_llmops.py).
+
+    Rows-only: both constituent approximations are already pinned
+    individually; tests/test_llmops.py pins the COMPOSITION — a full
+    numpy replay (route → encode → ADC → top-k over the Spark-computed
+    centroids) must reproduce every returned row, ids and distances
+    alike — and its recall: against an exact-L2 replay the mean
+    recall@TOP_K must reach half the probed fraction N_PROBE/N_CELLS.
+    Honest accuracy note: on this worst-case corpus (unclustered
+    gaussians, 16-seed codebook) the composed recall sits at the
+    probed-fraction baseline — IVF needs cluster structure and the
+    tiny demo codebook quantizes coarsely; real embedding corpora
+    supply both, which is why FAISS defaults to exactly this index."""
+    e = table(spark, sf_dir, "embeddings")
+    cents = ivf_centroids(e, dim=64)
+    cb, qids, dt = _pq_index(e)
+    # corpus side: cell assignment + PQ encode in ONE narrow pass each;
+    # the cell column rides through the encoder (keep=), standing in
+    # for the partitioned-by-cell code table of the at-scale layout
+    codes = (
+        assign_cells(e, cents, n_probe=1)
+        .select("cell", "vec_id", "embedding")
+        .mapInPandas(
+            _pq_encode_batches(cb, with_err=False, keep=("cell",)),
+            schema="cell int, vec_id long, codes array<int> not null",
+        )
+    )
+    probes = assign_cells(
+        e.filter(F.col("vec_id") < N_QUERIES), cents, n_probe=N_PROBE
+    ).select("cell", F.col("vec_id").alias("query_id"))
+    cand = codes.join(F.broadcast(probes), "cell").filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    return _adc_topk(cand, qids, dt)
 
 
 # ------------------------------------------- random projection (JL)

@@ -62,11 +62,6 @@ def codegen_spans(plan: str) -> int:
     return len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
 
 
-def codegen_operators(plan: str) -> int:
-    """Number of physical operators inside some codegen region."""
-    return len(re.findall(r"\[codegen id : \d+\]", plan))
-
-
 def node_count(plan: str, node: str) -> int:
     """Occurrences of an operator in the plan tree section."""
     return len(re.findall(rf"\b{re.escape(node)}\b", plan))

@@ -1436,3 +1436,33 @@ def test_b154_quantizer_half_boundary_plant(spark, tmp_path):
             for j in range(JL_OUT_DIMS)
         ]
     assert got == want
+
+
+def test_ivfpq_all_cells_equals_pq_adc_scan(spark, sf_dir, monkeypatch):
+    """With every cell probed, IVF-PQ is the all-cells ADC scan: the
+    same candidates scored by the same scorer in the same sum order, so
+    b175 and b137 return the same rows, distances bit for bit."""
+    from etl_wildweb_spark.operators import similarity as S
+
+    monkeypatch.setattr(S, "N_PROBE", S.N_CELLS)
+    ivfpq = sorted(tuple(r) for r in S.b175_ivfpq_search(spark, sf_dir).collect())
+    scan = sorted(tuple(r) for r in S.b137_pq_adc_search(spark, sf_dir).collect())
+    assert ivfpq, "empty IVF-PQ output"
+    assert ivfpq == scan
+
+
+@pytest.mark.parametrize(
+    "name, max_jobs", [("b137_pq_adc_search", 4), ("b175_ivfpq_search", 13)]
+)
+def test_pq_search_job_count(spark, sf_dir, name, max_jobs):
+    """Building and collecting a PQ search starts at most ``max_jobs``
+    Spark jobs: the codebook, query ids and distance tables come from
+    one driver collect, and b175's centroid table from one checkpoint."""
+    sc = spark.sparkContext
+    group = f"test_pq_search_job_count_{name}"
+    sc.setJobGroup(group, group)
+    try:
+        assert registry.QUERIES[name](spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
