@@ -1688,7 +1688,7 @@ def b171_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This previously emitted cumulative
     round(10⁶·ln((n−d)/n)) micro-nats, one libm ulp from flipping on
-    an unlucky corpus (SCALE.md round-12 addendum 4); ln S(t) — and
+    an unlucky corpus (a measured margin); ln S(t) — and
     the classic Greenwood variance — are downstream display scalars of
     the emitted exact (d, n, s) triple.  The floor in each step loses
     < 10⁻¹² relative per day — invisible at the q12 grain for any

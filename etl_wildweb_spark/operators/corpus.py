@@ -103,7 +103,7 @@ def b42_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort.  Bigram pairs come from arrays_zip of two shifted
     slices — a plain collection expression, NOT a lambda HOF: the
     previous transform+element_at build was interpreted per element
-    and measured 12× slower on the same data (SCALE.md round-4)."""
+    and measured 12× slower on the same data."""
     d = table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
@@ -662,7 +662,7 @@ def b155_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This previously summed round(−10⁶·ln p) terms
     whose libm rounding sat one ulp from flipping on an unlucky corpus
-    (SCALE.md round-12 addendum 4); the arithmetic-mean-probability
+    (a measured margin); the arithmetic-mean-probability
     gate carries the same low-quality-tail signal — documents of
     improbable bigrams score low under both means — on pure integer
     arithmetic, bit-identical in both engines.
@@ -840,7 +840,7 @@ def b158_pmi_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The previous round(10⁶·ln(...)) micro-nat
     column sat one libm ulp from flipping on an unlucky corpus
-    (SCALE.md round-12 addendum 4); the floor-scaled integer ratio is
+    (a measured margin); the floor-scaled integer ratio is
     bit-identical in both engines.  Floor collisions between ratios
     closer than 10⁻⁶ are deterministic and tie-break on (w₁, w₂)
     identically on both sides.

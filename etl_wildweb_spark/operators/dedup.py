@@ -8,10 +8,16 @@ min sweep is ONE Arrow-batched numpy pass (see minhash_signatures —
 the interpreted-HOF form it replaced re-walked every hash array 128
 times); everything downstream is DataFrame joins/aggregates.
 
-100 TB design: the banding pipeline's only shuffles are (a) the groupBy
-computing per-doc signatures (map-side combinable: min() per perm) and
-(b) the band-bucket exchange, whose fan-in is bounded because bucket
-sizes are small for well-chosen r (docs only collide when genuinely
+Every shingle-set engine — MinHash banding, its incremental probe,
+the exact prefix-filter join and the containment join — reads one
+checkpointed shingle stage (_shingle_stage), and the three Jaccard
+engines share one exact verify (_jaccard_verify); they differ only in
+how they generate candidate pairs.  No builder registers a session
+cache: stages read more than once are eager local checkpoints.
+
+100 TB design: signatures are a narrow map over the shingle stage, so
+the banding pipeline's only corpus-scale shuffle is the band-bucket
+exchange, whose fan-in is bounded because bucket sizes are small for well-chosen r (docs only collide when genuinely
 similar).  The exact-verify join touches candidate pairs only — the
 whole point of LSH — so the quadratic brute-force never materializes.
 The verify stage re-joins shingle sets by doc_id (co-partitioned hash
@@ -170,61 +176,55 @@ def _minhash_constants():
 _BAND_MIX = 0x9E3779B97F4A7C15
 
 
-def _sig_batches(id_name: str):
-    """mapInPandas generator factory: (id, hv array<long>) batches →
-    (id, sig array<long>[N_PERM], bands array<long>[N_BANDS]).  Band
+def _sig_batches(batches):
+    """mapInPandas generator: (doc_id, hv array<long>) batches →
+    (doc_id, sig array<long>[N_PERM], bands array<long>[N_BANDS]).  Band
     key b = the 4 band minima folded with wraparound multiply-add —
     used only for equality bucketing, and a 2⁻⁶⁴ accidental collision
     merely adds a candidate the exact-Jaccard verify removes."""
+    import numpy as np
 
-    def gen(batches):
-        import numpy as np
-
-        A, B = _minhash_constants()
-        mix = np.uint64(_BAND_MIX)
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({id_name: [], "sig": [], "bands": []})
-                continue
-            arrs = [np.asarray(v, dtype=np.int64) for v in pdf["hv"]]
-            lens = np.array([len(a) for a in arrs])
-            # with_shingles guarantees ≥1 shingle (short docs collapse
-            # to the whole-text shingle); guard anyway so an empty
-            # array yields the identity (all-max) signature
-            flat = (
-                np.concatenate(arrs).view(np.uint64)
-                if lens.sum()
-                else np.empty(0, np.uint64)
-            )
-            starts = np.zeros(len(arrs), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            sig = np.full((len(arrs), N_PERM), np.uint64(2**64 - 1))
-            nonempty = lens > 0
-            ne_starts = starts[nonempty]
-            for i in range(N_PERM):
-                v = flat * A[i] + B[i]  # uint64 wraparound — the perm
-                if len(ne_starts):
-                    sig[nonempty, i] = np.minimum.reduceat(v, ne_starts)
-            # fold each band's ROWS_PER_BAND minima into one 64-bit key
-            s3 = sig.reshape(len(arrs), N_BANDS, ROWS_PER_BAND)
-            bands = s3[:, :, 0]
-            for r in range(1, ROWS_PER_BAND):
-                bands = bands * mix + s3[:, :, r]
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name].values,
-                    "sig": list(sig.view(np.int64)),
-                    "bands": list(np.ascontiguousarray(bands).view(np.int64)),
-                }
-            )
-
-    return gen
+    A, B = _minhash_constants()
+    mix = np.uint64(_BAND_MIX)
+    for pdf in batches:
+        if len(pdf) == 0:
+            yield pd.DataFrame({"doc_id": [], "sig": [], "bands": []})
+            continue
+        arrs = [np.asarray(v, dtype=np.int64) for v in pdf["hv"]]
+        lens = np.array([len(a) for a in arrs])
+        # with_shingles guarantees ≥1 shingle (short docs collapse
+        # to the whole-text shingle); guard anyway so an empty
+        # array yields the identity (all-max) signature
+        flat = (
+            np.concatenate(arrs).view(np.uint64)
+            if lens.sum()
+            else np.empty(0, np.uint64)
+        )
+        starts = np.zeros(len(arrs), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        sig = np.full((len(arrs), N_PERM), np.uint64(2**64 - 1))
+        nonempty = lens > 0
+        ne_starts = starts[nonempty]
+        for i in range(N_PERM):
+            v = flat * A[i] + B[i]  # uint64 wraparound — the perm
+            if len(ne_starts):
+                sig[nonempty, i] = np.minimum.reduceat(v, ne_starts)
+        # fold each band's ROWS_PER_BAND minima into one 64-bit key
+        s3 = sig.reshape(len(arrs), N_BANDS, ROWS_PER_BAND)
+        bands = s3[:, :, 0]
+        for r in range(1, ROWS_PER_BAND):
+            bands = bands * mix + s3[:, :, r]
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"].values,
+                "sig": list(sig.view(np.int64)),
+                "bands": list(np.ascontiguousarray(bands).view(np.int64)),
+            }
+        )
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", *, pre_shingled: bool = False
-) -> DataFrame:
-    """(id, shingle set) → (id, sig array<long>[128],
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, s) shingle sets → (doc_id, sig array<long>[128],
     bands array<long>[32]): per permutation i, the unsigned min over
     (xxhash64(shingle)·A[i] + B[i]) mod 2⁶⁴; band keys are the folded
     4-row minima, ready for the LSH bucket join.
@@ -247,118 +247,47 @@ def minhash_signatures(
         interpreted eval), plus the 128-wide column expansion that
         banding immediately re-packed is gone entirely.
 
-    Still ZERO shuffle — a narrow map over the scan, embarrassingly
-    parallel at 100 TB; Arrow moves ~(|shingles|+160) longs per doc.
-
-    ``pre_shingled=True`` skips the shingle pipeline and reads an
-    existing ``s`` column — callers that also need the raw shingles
-    (e.g. exact-Jaccard verification) share ONE shingle pass instead
-    of recomputing it per consumer."""
-    if not pre_shingled:
-        docs = with_shingles(lift_parallelism(docs, id_col))
-    pre = F.transform(F.col("s"), lambda g: F.xxhash64(g))
-    base = docs.select(id_col, pre.alias("hv"))
-    id_field = base.schema[id_col]
+    Still ZERO shuffle — a narrow map over the shingle stage
+    (:func:`_shingle_stage`), embarrassingly parallel at 100 TB; Arrow
+    moves ~(|shingles|+160) longs per doc.  The frame is lazy; each
+    engine checkpoints it once, because the band join reads it on both
+    sides and a lazy one runs the Python pass for each."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+    base = sh.select(
+        "doc_id", F.transform("s", lambda g: F.xxhash64(g)).alias("hv")
+    )
     sig_schema = StructType(
         [
-            id_field,
+            base.schema["doc_id"],
             StructField("sig", ArrayType(LongType()), False),
             StructField("bands", ArrayType(LongType()), False),
         ]
     )
-    return base.mapInPandas(_sig_batches(id_col), schema=sig_schema)
+    return base.mapInPandas(_sig_batches, schema=sig_schema)
 
 
-def banded_keys(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, …, bands) → (id, band, sig): one row per band bucket key,
-    the LSH index shape both the self-join and the incremental probe
-    consume."""
-    return sigs.select(
-        id_col, F.posexplode("bands").alias("band", "sig")
-    )
+def banded_keys(sigs: DataFrame) -> DataFrame:
+    """(doc_id, …, bands) → (doc_id, band, sig): one row per band bucket
+    key, the LSH index shape both the self-join and the incremental
+    probe consume."""
+    return sigs.select("doc_id", F.posexplode("bands").alias("band", "sig"))
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Explode the precomputed band keys and self-join band buckets →
     candidate pairs (id_a < id_b, distinct)."""
-    banded = banded_keys(sigs, id_col)
-    a = banded.alias("a")
-    b = banded.alias("b")
+    banded = banded_keys(sigs)
     return (
-        a.join(
-            b,
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
-    )
-
-
-def verify_jaccard(
-    candidates: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    *,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
-    """Join candidate pairs back to shingle sets and compute exact
-    Jaccard — removes LSH false positives.  Pass ``shingled``
-    (id_col, s) to reuse a shingle pass the caller already computed."""
-    sh = (
-        shingled
-        if shingled is not None
-        else with_shingles(lift_parallelism(docs, id_col)).select(id_col, "s")
-    )
-    return (
-        candidates.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("s", "sa"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("s", "sb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sa", "sb")).cast("double")
-            / F.size(F.array_union("sa", "sb")),
-        )
-        .drop("sa", "sb")
-    )
-
-
-@query(
-    "b29_minhash_near_dedup",
-    oracle=f"""
-    WITH sh AS (SELECT doc_id, {SQL_SHINGLES} AS s FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           len(list_intersect(a.s, b.s))::DOUBLE
-               / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s))::DOUBLE
-              / len(list_distinct(list_concat(a.s, b.s))) >= {JACCARD_THRESHOLD}
-    """,
-)
-def b29_minhash_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B29: MinHash+LSH near-duplicate pairs at Jaccard ≥ 0.8, exact-
-    verified.  The oracle is the O(n²) brute force — the outputs agree
-    because banding recall at the threshold is 1-5e-8 (see N_PERM note).
-    The Spark side never materializes the quadratic pair space."""
-    d = table(spark, sf_dir, "documents")
-    # signatures feed both sides of the banding self-join — a session
-    # cache, not a checkpoint: the plan tests pin the MapInPandas
-    # signature stage under this frame, and a checkpoint would cut it
-    # out of the plan.  The entries stay in the CacheManager until the
-    # caller clears them (an allowlisted site, tests/test_cache_sites.py).
-    sh = (
-        with_shingles(lift_parallelism(d, "doc_id"))
-        .select("doc_id", "s")
-        .cache()
-    )
-    sigs = minhash_signatures(sh, pre_shingled=True).cache()
-    cands = lsh_candidate_pairs(sigs)
-    return verify_jaccard(cands, d, shingled=sh).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
 
@@ -379,10 +308,13 @@ if _T_NUM / _T_DEN != NGRAM_THRESHOLD:  # survives python -O, unlike assert
 def _shingle_stage(docs: DataFrame) -> DataFrame:
     """The (doc_id, s) shingle sets of ``docs``, built ONCE per call.
 
-    The NGram pass is the expensive stage of the prefix-filter joins,
-    and each reads it several times: the gram index below and both
-    sides of the exact verify.  The calling builder owns the result,
-    materialized here as an EAGER local checkpoint:
+    The NGram pass is the expensive stage of every shingle-set engine:
+    the prefix-filter joins (:func:`ngram_jaccard_edges`, b159), the
+    MinHash banding self-join (:func:`minhash_pairs`) and the
+    incremental probe (b82).  Each reads it several times: its index
+    (gram postings or signatures) and both sides of the exact verify.
+    The calling builder owns the result, materialized here as an EAGER
+    local checkpoint:
 
     * not ``.cache()``: a builder returns a lazy frame, so there is no
       point after the action to unpersist at, and every call would
@@ -397,8 +329,9 @@ def _shingle_stage(docs: DataFrame) -> DataFrame:
 
     A local checkpoint is not fault-tolerant: a lost executor takes its
     blocks with it and the query fails instead of recomputing them.
-    That is the same trade the CC edge checkpoints make; at cluster
-    scale this stage is a reliable checkpoint or a written table."""
+    That is the same trade the CC edge checkpoints make (and the
+    MinHash signature checkpoints); at cluster scale this stage is a
+    reliable checkpoint or a written table."""
     return (
         with_shingles(lift_parallelism(docs, "doc_id"))
         .select("doc_id", "s")
@@ -469,6 +402,22 @@ def _with_sets(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     ).join(sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")), "id_b")
 
 
+def _jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate ``pairs`` whose exact
+    shingle-set Jaccard reaches ``threshold`` — the one verify of the
+    Jaccard engines (prefix filter, MinHash banding, incremental
+    probe), so their candidate filters are the only thing that differs."""
+    jaccard = F.size(F.array_intersect("sa", "sb")).cast("double") / F.size(
+        F.array_union("sa", "sb")
+    )
+    return (
+        _with_sets(pairs, sh)
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def ngram_jaccard_edges(docs: DataFrame) -> DataFrame:
     """EXACT token-3-gram Jaccard join of ``docs`` via prefix filtering
     (AllPairs/PPJoin family) — the exact twin of b29_minhash_near_dedup
@@ -504,16 +453,7 @@ def ngram_jaccard_edges(docs: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    return (
-        _with_sets(cands, sh)
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sa", "sb")).cast("double")
-            / F.size(F.array_union("sa", "sb")),
-        )
-        .filter(F.col("jaccard") >= NGRAM_THRESHOLD)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(cands, sh, NGRAM_THRESHOLD)
 
 
 @query(
@@ -532,6 +472,37 @@ def b29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B29 variant: exact n-gram Jaccard ≥ 0.8 pairs over the corpus
     documents (see :func:`ngram_jaccard_edges`)."""
     return ngram_jaccard_edges(table(spark, sf_dir, "documents"))
+
+
+def minhash_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, jaccard) MinHash+LSH near-duplicate pairs of
+    ``docs`` at Jaccard ≥ 0.8, exact-verified: shingle stage →
+    signatures (checkpointed: both sides of the band self-join read
+    them) → band-bucket candidates → the shared exact verify."""
+    sh = _shingle_stage(docs)
+    sigs = minhash_signatures(sh).localCheckpoint(eager=True)
+    return _jaccard_verify(lsh_candidate_pairs(sigs), sh, JACCARD_THRESHOLD)
+
+
+@query(
+    "b29_minhash_near_dedup",
+    oracle=f"""
+    WITH sh AS (SELECT doc_id, {SQL_SHINGLES} AS s FROM documents)
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           len(list_intersect(a.s, b.s))::DOUBLE
+               / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
+    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+    WHERE len(list_intersect(a.s, b.s))::DOUBLE
+              / len(list_distinct(list_concat(a.s, b.s))) >= {JACCARD_THRESHOLD}
+    """,
+)
+def b29_minhash_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B29: MinHash+LSH near-duplicate pairs at Jaccard ≥ 0.8 (see
+    :func:`minhash_pairs`).  The oracle is the O(n²) brute force — the
+    outputs agree because banding recall at the threshold is 1-5e-8
+    (see N_PERM note).  The Spark side never materializes the quadratic
+    pair space."""
+    return minhash_pairs(table(spark, sf_dir, "documents"))
 
 
 #: The all-Catalyst SimHash twin: per-bit majority vote as nested HOF
@@ -619,7 +590,7 @@ def b29_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked join is the scale pattern — candidates only within a block,
     never the full cross product).
 
-    Blocking-key contract (measured, SCALE.md round-4 probe): the
+    Blocking-key contract (measured with a 16x-corpus probe): the
     within-block self-join is quadratic IN BLOCK SIZE, so the key's
     cardinality must grow with the corpus — exactly as LSH bucket
     counts and IVF cell counts do.  A fixed key (like this demo's
@@ -630,16 +601,14 @@ def b29_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import clamp_cos, dot, norm
 
     e = table(spark, sf_dir, "embeddings")
-    # b149's two-part pair-stage treatment (SCALE.md round-6 extension,
-    # lessons 2-3): norms once per VECTOR (cosine() re-aggregates both
-    # per pair — 3x the flops on the quadratic path; clamped dot/(na·nb)
-    # builds the exact same doubles, so the emitted cos_sim is
-    # bit-identical),
-    # a derived-key pinned-width exchange on the probe side (AQE sizes
-    # the stage by its tiny input and serializes the pair explosion on
-    # one core), and a broadcast build side (a shuffle join on 10
-    # label keys caps parallelism at 10 tasks).  862 s → 23 s at the
-    # 16x probe.
+    # b149's two-part pair-stage treatment: norms once per VECTOR
+    # (cosine() re-aggregates both per pair — 3x the flops on the
+    # quadratic path; clamped dot/(na·nb) builds the exact same
+    # doubles, so the emitted cos_sim is bit-identical), a derived-key
+    # pinned-width exchange on the probe side (AQE sizes the stage by
+    # its tiny input and serializes the pair explosion on one core),
+    # and a broadcast build side (a shuffle join on 10 label keys caps
+    # parallelism at 10 tasks).  862 s → 23 s at the 16x probe.
     base = e.select("vec_id", "label", "embedding", norm("embedding").alias("nrm"))
     a = base.repartition(
         e.sparkSession.sparkContext.defaultParallelism,
@@ -1082,51 +1051,29 @@ def b82_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole point of keeping a persistent band index: daily ingest
     costs O(|batch| × collision rate), not O(|corpus|²).
 
-    Shape: signatures for both sides from the shared per-row pipeline
-    (zero shuffle), the batch's band keys BROADCAST into the corpus
-    band index (an equi-join probe — the corpus is never exchanged),
-    then exact-Jaccard verification on the candidate pairs only.  The
+    Shape: the shared shingle stage, signatures computed ONCE for
+    both sides and checkpointed (zero shuffle; signing each side
+    separately measured slower), the batch's band keys BROADCAST into
+    the corpus band index (an equi-join probe — the corpus is never
+    exchanged), then the shared exact verify on the candidate pairs
+    only.  The
     oracle is the brute-force batch×corpus scan; they agree because
     banding recall at the threshold is 1-5e-8 (N_PERM note above)."""
-    d = table(spark, sf_dir, "documents")
+    sh = _shingle_stage(table(spark, sf_dir, "documents"))
+    sigs = minhash_signatures(sh).localCheckpoint(eager=True)
     is_batch = F.col("doc_id") % _NEARDUP_BATCH_MOD == 0
-    # ONE shingle pass shared by the signature pipeline AND the exact-
-    # Jaccard verification joins (previously three separate recomputes
-    # — measured 8.1 s → ~3 s at sf0.1).
-    sh = (
-        with_shingles(lift_parallelism(d, "doc_id"))
-        .select("doc_id", "s")
-        .cache()
-    )
-    sigs = minhash_signatures(sh, pre_shingled=True).cache()
 
     def banded(side: DataFrame, out: str) -> DataFrame:
         return banded_keys(side).withColumnRenamed("doc_id", out)
 
-    batch_bands = banded(sigs.filter(is_batch), "batch_id")
-    corpus_bands = banded(sigs.filter(~is_batch), "corpus_id")
     cands = (
-        corpus_bands.join(F.broadcast(batch_bands), ["band", "sig"])
-        .select("batch_id", "corpus_id")
+        banded(sigs.filter(~is_batch), "id_b")
+        .join(F.broadcast(banded(sigs.filter(is_batch), "id_a")), ["band", "sig"])
+        .select("id_a", "id_b")
         .distinct()
     )
-
-    return (
-        cands.join(
-            sh.withColumnRenamed("doc_id", "batch_id").withColumnRenamed("s", "sb"),
-            "batch_id",
-        )
-        .join(
-            sh.withColumnRenamed("doc_id", "corpus_id").withColumnRenamed("s", "sc"),
-            "corpus_id",
-        )
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sb", "sc")).cast("double")
-            / F.size(F.array_union("sb", "sc")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("batch_id", "corpus_id", "jaccard")
+    return _jaccard_verify(cands, sh, JACCARD_THRESHOLD).select(
+        F.col("id_a").alias("batch_id"), F.col("id_b").alias("corpus_id"), "jaccard"
     )
 
 

@@ -206,7 +206,7 @@ def exact_substring_dedup(
     # them to recover positions shuffles the full stream a SECOND time
     # and recomputes the hash stage under the probe (measured 3x
     # slower at the 16x sweep once the candidate set outgrows the
-    # broadcast threshold — SCALE.md round 11).  The window shuffles
+    # broadcast threshold).  The window shuffles
     # the stream exactly once, keyed by gh; collisions only ADD
     # phase-2 verification work, never a wrong result.  Skew note: a
     # pathologically frequent gram makes one hot gh partition — the

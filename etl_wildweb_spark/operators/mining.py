@@ -61,11 +61,10 @@ def b101_group_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This query previously emitted Shannon N·H in
     rounded micro-nats, whose round(10⁶·c·ln c) terms sat one libm ulp
-    away from flipping on an unlucky corpus (SCALE.md round-12
-    addendum 4 measured the margin; two ==-boundary oracle bugs in two
-    rounds said remove the class, not monitor it).  Simpson/Rényi-2
-    carries the same diversity signal on pure integer arithmetic —
-    floor division is bit-identical in both engines.
+    away from flipping on an unlucky corpus (a measured margin; two
+    ==-boundary oracle bugs said remove the class, not monitor it).
+    Simpson/Rényi-2 carries the same diversity signal on pure integer
+    arithmetic — floor division is bit-identical in both engines.
 
     Scale: two cascaded hash aggregations — (source, lang) then source —
     each with map-side partial combine; the second input is at most

@@ -100,6 +100,7 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(_rev(li)).alias("revenue"))
         .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
         .limit(10)
+        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
     )
 
 
@@ -334,6 +335,7 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(_rev(li)).alias("revenue"))
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
+        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name", "c_mktsegment")
     )
 
 

@@ -40,10 +40,11 @@ def _with_corrupt(schema: StructType) -> StructType:
 
 
 def _split_channels(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    # cache() before splitting: PERMISSIVE parse is per-row stateful and
-    # the two channels must see ONE parse of the input, not two passes
-    # that could disagree on a flaky reader
-    df = df.cache()
+    # materialize ONE parse before splitting: the two channels must not
+    # be two passes that could disagree on a flaky reader.  An eager
+    # local checkpoint guarantees that (a cache may be evicted and
+    # recomputed) and leaves nothing in the session's CacheManager.
+    df = df.localCheckpoint(eager=True)
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     errors = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw"),

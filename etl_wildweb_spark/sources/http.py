@@ -222,12 +222,14 @@ def b33_http_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     https transport is the same code path behind one option."""
     from ..ingest.wildweb import run_pipeline
 
-    # cache: three consumers (features, errors, the reporting join)
-    # would otherwise EACH re-run the source — i.e. re-fetch every
-    # center over HTTP.  Always materialize a fetch before fan-out.
+    # three consumers (features, errors, the reporting join) would
+    # otherwise EACH re-run the source — i.e. re-fetch every center over
+    # HTTP.  Materialize the fetch once before fan-out: an eager local
+    # checkpoint, because a cache may be evicted and its recompute
+    # re-fetches.
     raw = read_centers(
         spark, _DEMO_CENTERS, max_concurrency=4, rate_per_sec=200, transport="fake"
-    ).cache()
+    ).localCheckpoint(eager=True)
     features, errors = run_pipeline(raw, None, F.current_timestamp())
     n_feat = (
         features.groupBy("center")

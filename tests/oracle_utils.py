@@ -85,9 +85,7 @@ def compare(spark, sf_dir: str, name: str, query_fn, oracle: str):
     finally:
         con.close()
 
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: column mismatch spark={sorted(s_cols)} duckdb={sorted(d_cols)}"
-    )
+    assert s_cols == d_cols, f"{name}: column mismatch spark={s_cols} duckdb={d_cols}"
     assert len(s_rows) == len(d_rows), (
         f"{name}: row count mismatch spark={len(s_rows)} duckdb={len(d_rows)}"
     )

@@ -233,10 +233,11 @@ def test_driver_path_job_count(spark):
 
 
 def test_dedup_builders_leave_no_session_cache(spark, sf_dir):
-    """The n-gram edge feed and its consumers own their shingle stage
-    as a local checkpoint: building and running them registers nothing
-    in the session's CacheManager, so repeated calls cannot stack
-    cached plans."""
+    """The shingle-set engines own their shingle stage (and the MinHash
+    engines their signatures) as local checkpoints, as the HTTP and
+    file sources own their one fetch or parse: building and running
+    them registers nothing in the session's CacheManager, so repeated
+    calls cannot stack cached plans."""
     from etl_wildweb_spark import registry
 
     registry.load_all()
@@ -246,6 +247,10 @@ def test_dedup_builders_leave_no_session_cache(spark, sf_dir):
         "b29_dedup_canonical",
         "b144_leakage_safe_split",
         "b159_containment_dedup",
+        "b29_minhash_near_dedup",
+        "b82_incremental_neardup",
+        "b33_http_ingest",
+        "b36_file_ingest",
     ):
         assert registry.QUERIES[name](spark, sf_dir).collect(), name
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

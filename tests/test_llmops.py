@@ -58,10 +58,7 @@ def planted_docs(spark):
 
 
 def test_minhash_finds_planted_pairs(planted_docs):
-    cands = dedup.lsh_candidate_pairs(dedup.minhash_signatures(planted_docs))
-    verified = dedup.verify_jaccard(cands, planted_docs).filter(
-        F.col("jaccard") >= 0.8
-    )
+    verified = dedup.minhash_pairs(planted_docs)
     pairs = {(r.id_a, r.id_b) for r in verified.collect()}
     # every planted near-dup pair recovered (shingle jaccard of a 1-edit
     # mutation of 60 tokens is ≥ ~0.9)
@@ -90,13 +87,7 @@ def test_minhash_no_false_negatives_vs_bruteforce(planted_docs):
         .filter(F.col("j") >= 0.8)
     )
     brute_pairs = {(r.id_a, r.id_b) for r in brute.collect()}
-    cands = dedup.lsh_candidate_pairs(dedup.minhash_signatures(planted_docs))
-    lsh_pairs = {
-        (r.id_a, r.id_b)
-        for r in dedup.verify_jaccard(cands, planted_docs)
-        .filter(F.col("jaccard") >= 0.8)
-        .collect()
-    }
+    lsh_pairs = {(r.id_a, r.id_b) for r in dedup.minhash_pairs(planted_docs).collect()}
     assert lsh_pairs == brute_pairs
 
 

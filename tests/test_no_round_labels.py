@@ -15,7 +15,11 @@ PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "etl_wildweb_spark"
 )
 
-ROUND_LABEL = re.compile(r"ROUND-\d|VERDICT r\d|ADVICE r\d|OPTIMIZATION_r\d|plans/r\d")
+#: the case-insensitive alternative catches prose citations such as
+#: "SCALE.md round-4" without matching "round-trip" or "round-robin"
+ROUND_LABEL = re.compile(
+    r"ROUND-\d|VERDICT r\d|ADVICE r\d|OPTIMIZATION_r\d|plans/r\d|(?i:\bround[- ]\d)"
+)
 
 
 def test_package_source_has_no_round_labels():

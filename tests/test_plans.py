@@ -513,29 +513,42 @@ def test_b113_pareto_two_phase_shape(plans):
         assert "bsum" in ctx or "partial_min(" in ctx or "min#" in ctx, ctx
 
 
-def test_b29_minhash_signature_stage_is_narrow(plans):
+@pytest.fixture(scope="module")
+def signature_plan(spark, sf_dir) -> str:
+    """Static plan of the MinHash signature frame over the shingle
+    stage — the frame both near-dup engines checkpoint, so their query
+    plans read it as a scan and no longer show the stage itself."""
+    from etl_wildweb_spark.io import table
+    from etl_wildweb_spark.operators import dedup
+
+    sh = dedup._shingle_stage(table(spark, sf_dir, "documents"))
+    return audit.formatted_plan(dedup.minhash_signatures(sh))
+
+
+def test_b29_minhash_signature_stage_is_narrow(plans, signature_plan):
     """The signature pipeline (shingle → hash → Arrow min-sweep) must
-    stay a narrow map over the scan: the only hash exchanges in the
-    whole near-dup plan are the deliberate lift_parallelism
-    repartition and the candidate-pair distinct; the band bucket join
-    broadcasts at this scale.  A shuffle between the scan and
-    MapInPandas would mean signatures stopped being embarrassingly
-    parallel."""
+    stay a narrow map over the shingle stage: a shuffle between the
+    shingle sets and MapInPandas would mean signatures stopped being
+    embarrassingly parallel.  In the near-dup query itself the hash
+    exchanges are the candidate-pair distinct and, above the broadcast
+    threshold, the verify joins; the band bucket join broadcasts at
+    this scale."""
+    assert "MapInPandas" in signature_plan, "vectorized signature stage missing"
+    assert audit.exchanges(signature_plan)["shuffle"] == 0, signature_plan
     p = plans("b29_minhash_near_dedup")
-    assert "MapInPandas" in p, "vectorized signature stage missing"
     ex = audit.exchanges(p)
-    # shuffles: lift_parallelism REPARTITION + pair-distinct agg (static
-    # plans pre-AQE; broadcast exchanges counted separately)
+    # static plans pre-AQE; broadcast exchanges counted separately
     assert ex["shuffle"] <= 3, ex
     assert audit.node_count(p, "BroadcastHashJoin") >= 1, "band join lost broadcast"
 
 
-def test_b82_probe_broadcasts_batch_bands(plans):
+def test_b82_probe_broadcasts_batch_bands(plans, signature_plan):
     """Incremental near-dup must probe batch bands INTO the corpus
     index via broadcast — the corpus side is never exchanged for the
-    join."""
+    join.  Its signatures come from the same narrow Arrow stage as
+    b29's."""
+    assert "MapInPandas" in signature_plan
     p = plans("b82_incremental_neardup")
-    assert "MapInPandas" in p
     assert audit.node_count(p, "BroadcastHashJoin") >= 1, p
     assert audit.node_count(p, "BroadcastNestedLoopJoin") == 0
 
