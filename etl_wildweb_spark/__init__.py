@@ -17,6 +17,13 @@ Layout:
     sources/      throttled HTTP source with injectable fake (B33)
     functions/    JS-compat scalar helpers, vector math
     plans/        plan-inspection helpers (pushdown/broadcast assertions)
+    pyworker.py   Python-worker set-up (zip directories kept across tasks)
 """
 
+from .pyworker import keep_zip_directories
+
 __version__ = "0.1.0"
+
+# A Python worker imports the package when it unpickles any by-reference
+# function; from then on its tasks skip the zip directory re-reads.
+keep_zip_directories()

@@ -52,11 +52,15 @@ def _ship_package(spark: SparkSession) -> None:
     zip of the package on the session's file server makes the import
     work everywhere; this is also exactly the cluster deploy story
     (same call ships the code to 1000 executors — no image bake
-    needed).  Idempotent per SparkContext; a few ms once per process."""
+    needed).  Idempotent per SparkContext; a few ms once per process.
+    The zip is removed at interpreter exit: nothing fetches it once the
+    SparkContext has gone."""
     sc = spark.sparkContext
     if getattr(sc, _SHIPPED_ATTR, False):
         return
     try:
+        import atexit
+        import pathlib
         import tempfile
         import zipfile
 
@@ -64,6 +68,7 @@ def _ship_package(spark: SparkSession) -> None:
         zpath = os.path.join(
             tempfile.gettempdir(), f"etl_wildweb_spark_pkg_{os.getpid()}.zip"
         )
+        atexit.register(pathlib.Path(zpath).unlink, missing_ok=True)
         with zipfile.ZipFile(zpath, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in files:
@@ -81,11 +86,13 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 #: Modules whose classes cross into Spark's PLANNER-side Python workers
-#: (streaming source runner, DataSource writer init) — those workers do
-#: NOT get the addPyFile sys.path, so these must pickle by value.
+#: (streaming source runner, DataSource writer init), and the worker
+#: set-up their entry points call — those workers do NOT get the
+#: addPyFile sys.path, so these must pickle by value.
 _BY_VALUE_MODULES = (
     "etl_wildweb_spark.sources.http",
     "etl_wildweb_spark.sinks",
+    "etl_wildweb_spark.pyworker",
 )
 
 

@@ -34,6 +34,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from .pyworker import keep_zip_directories
+
 STATUS_SCHEMA = "chunk_id string, n_features bigint, status int, ok boolean"
 
 PostFn = Callable[[str], int]  # FeatureCollection JSON -> HTTP status
@@ -99,6 +101,7 @@ def submit_features(
     data, queryable and joinable against the error channel."""
 
     def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_zip_directories()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
@@ -205,6 +208,7 @@ def _make_submit_writer_classes():
             self.path = options["path"]
 
         def write(self, iterator):
+            keep_zip_directories()
             # one pyarrow.RecordBatch per ~10k rows
             items = (s for batch in iterator for s in batch.column(0).to_pylist())
             chunks = list(_post_chunks(items, fake_post, self.chunk_size))

@@ -97,11 +97,13 @@ from ..registry import query  # noqa: E402  (registration tail, like sinks.py)
 @query("b36_file_ingest")  # rows-only: side-effecting fixture write
 def b36_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B36: JSONL ingest round-trip — writes a small fixture (2 clean
-    rows, 2 malformed) under spark-warehouse, reads it back through the
-    explicit-schema PERMISSIVE path, and returns the union of both
+    rows, 2 malformed) to a temporary directory, reads it back through
+    the explicit-schema PERMISSIVE path, and returns the union of both
     channels tagged by channel name.  Demonstrates end-to-end that a
-    malformed row becomes DATA (channel='error'), not an exception."""
-    import os
+    malformed row becomes DATA (channel='error'), not an exception.
+    The directory is removed before returning: ``_split_channels``
+    checkpoints the parse eagerly, so the frame never reads the file
+    again."""
     import tempfile
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -109,15 +111,15 @@ def b36_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("lang", StringType())]
     )
-    d = tempfile.mkdtemp(dir="spark-warehouse" if os.path.isdir("spark-warehouse") else None)
-    with open(os.path.join(d, "fixture.jsonl"), "w") as f:
-        f.write(
-            '{"doc_id": 1, "lang": "en"}\n'
-            "garbage line\n"
-            '{"doc_id": 2, "lang": "de"}\n'
-            '{"doc_id": "bad", "lang": "fr"}\n'
-        )
-    clean, errors = read_jsonl(spark, d, schema)
+    with tempfile.TemporaryDirectory(prefix="b36_") as d:
+        with open(os.path.join(d, "fixture.jsonl"), "w") as f:
+            f.write(
+                '{"doc_id": 1, "lang": "en"}\n'
+                "garbage line\n"
+                '{"doc_id": 2, "lang": "de"}\n'
+                '{"doc_id": "bad", "lang": "fr"}\n'
+            )
+        clean, errors = read_jsonl(spark, d, schema)
     return clean.select(
         F.lit("clean").alias("channel"), F.col("doc_id").cast("string").alias("payload")
     ).unionAll(

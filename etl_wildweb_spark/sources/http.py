@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from ..pyworker import keep_zip_directories
 from ..registry import query
 
 OUTPUT_SCHEMA = "center string, payload string, http_ok boolean, status int, attempts int"
@@ -148,6 +149,7 @@ class HttpCentersReader(DataSourceReader):
         return [CentersPartition(b) for b in buckets if b]
 
     def read(self, partition: CentersPartition):
+        keep_zip_directories()
         fetch = TRANSPORTS[self.transport]
         limiter = RateLimiter(self.rate_per_sec)
         for center in partition.centers:
@@ -302,6 +304,7 @@ class WildWebPollStreamReader:
             yield (center, body, 200 <= status < 300, status, poll)
 
     def read(self, start: dict):
+        keep_zip_directories()
         p = start["poll"]
         if self.max_polls >= 0 and p >= self.max_polls:
             return iter([]), start
@@ -312,6 +315,7 @@ class WildWebPollStreamReader:
         return iter(list(self._rows(p))), {"poll": p + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict):
+        keep_zip_directories()
         for p in range(start["poll"], end["poll"]):
             yield from self._rows(p)
 

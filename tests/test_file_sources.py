@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -60,6 +62,29 @@ def test_no_errors_is_empty_channel(spark, tmp_path):
     clean, errors = read_jsonl(spark, str(p), SCHEMA)
     assert clean.count() == 1
     assert errors.count() == 0
+
+
+def test_b36_leaves_no_fixture_directory(spark, sf_dir, tmp_path, monkeypatch):
+    """b36 writes its fixture to a temporary directory and removes it
+    before returning; the frame still collects both channels."""
+    import collections
+    import tempfile
+
+    from etl_wildweb_spark.session import prepare
+    from etl_wildweb_spark.sources.files import b36_file_ingest
+
+    prepare(spark)  # ships the package zip to the real temp dir first
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    warehouse = "spark-warehouse"
+
+    def listing(d):
+        return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+    before = listing(warehouse), listing(tmp_path)
+    df = b36_file_ingest(spark, sf_dir)
+    assert (listing(warehouse), listing(tmp_path)) == before
+    rows = df.collect()
+    assert collections.Counter(r.channel for r in rows) == {"clean": 2, "error": 2}
 
 
 def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
